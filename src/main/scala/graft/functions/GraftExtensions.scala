@@ -1,16 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.plans.{TopKStrategy, TopKWindowRewrite}
 
 /** SparkSessionExtensions hook: registers graft's native expressions in the
   * SQL function registry, so `spark.sql("SELECT dot_product_float(a, b)")`
-  * plans the same codegen'd expression the DataFrame API uses.
-  *
-  * Activate with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * (Spark instantiates this class reflectively on session build).
+  * plans the same codegen'd expression the DataFrame API uses, plus the
+  * TopKPerKey strategy and the row_number()<=k window rewrite. Activate
+  * with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
+  * as [[graft.GraftSession]] does; other sessions get the same from
+  * [[GraftExtensions.install]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -18,9 +20,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         new FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
     }
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectPlannerStrategy(_ => TopKStrategy)
     // rewrite row_number()<=k window idiom into the bounded-heap exec
-    ext.injectOptimizerRule(_ => graft.plans.TopKWindowRewrite)
+    ext.injectOptimizerRule(_ => TopKWindowRewrite)
   }
 }
 
@@ -60,18 +62,34 @@ object GraftExtensions {
       MinhashBandSigs(args.head, intLit(args(1), "k"), intLit(args(2), "r"))
     }))
 
-  /** Register on an already-built session (builder-time extensions can't
-    * reach it): same builders, same registry entries. Also exposes the
-    * Misra–Gries heavy-hitters Aggregator as the SQL UDAF
-    * `misra_gries_topk(col)` (k=64, the declared-query configuration) —
-    * typed Aggregators register through the udf registry, not the
-    * expression registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (name, className, builder) =>
-      org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-        spark, name, className, builder)
+  /** Session-independent, so its encoders are derived once per JVM. */
+  private lazy val misraGries =
+    org.apache.spark.sql.functions.udaf(new graft.ops.Udaf.MisraGries(64))
+
+  /** Sessions [[install]] has run on; weak, so none is pinned. */
+  private val installed = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** The one place that changes a live session's state; idempotent, and
+    * [[graft.ops.Util.table]] and [[graft.plans.TopK.topKPerKey]] run it on
+    * every use. Registers the native expressions and the SQL UDAF
+    * `misra_gries_topk(col)` (k=64, the declared-query configuration),
+    * adds the TopK rules unless the session's extensions inject them, and
+    * sets `nanosAsLong` for [[graft.ops.Util.eventsTs]]. */
+  def install(spark: SparkSession): Unit = installed.synchronized {
+    if (!installed.contains(spark)) {
+      functions.foreach { case (name, className, builder) =>
+        Bridge.registerFunction(spark, name, className, builder)
+      }
+      spark.udf.register("misra_gries_topk", misraGries)
+      val injected = Bridge.injectedRules(spark)
+      val exp = spark.experimental
+      if (!injected.contains(TopKStrategy))
+        exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
+      if (!injected.contains(TopKWindowRewrite))
+        exp.extraOptimizations = exp.extraOptimizations :+ TopKWindowRewrite
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      installed.add(spark)
     }
-    spark.udf.register("misra_gries_topk",
-      org.apache.spark.sql.functions.udaf(new graft.ops.Udaf.MisraGries(64)))
   }
 }

@@ -21,11 +21,12 @@ import org.apache.spark.sql.types._
   * allocation and no hashing. The per-doc `array_sort` that feeds it is
   * paid once per doc, not per pair.
   *
-  * Nulls: null array → null (standard null-intolerant binary semantics);
-  * null ELEMENTS are not expected from the `split`-built token frames —
-  * callers guarantee none, matching array_intersect's behavior on these
-  * inputs. Unsorted or duplicate-bearing input silently under/over-counts
-  * — the expression is package-internal and only fed by sorted builders.
+  * Nulls: null array → null (null-intolerant binary semantics). A null
+  * ELEMENT sorts last and appears once, so the merge runs over the
+  * non-null prefixes and counts one more when both end in null, as
+  * `size(array_intersect)` does. Unsorted or duplicate-bearing input
+  * silently under/over-counts — the expression is package-internal and
+  * only fed by sorted builders.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -37,9 +38,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val a1 = a.asInstanceOf[ArrayData]
     val a2 = b.asInstanceOf[ArrayData]
-    val n1 = a1.numElements()
-    val n2 = a2.numElements()
-    var acc = 0L
+    def nonNull(a: ArrayData) = a.numElements() -
+      (if (a.numElements() > 0 && a.isNullAt(a.numElements() - 1)) 1 else 0)
+    val (n1, n2) = (nonNull(a1), nonNull(a2))
+    var acc = if (n1 < a1.numElements() && n2 < a2.numElements()) 1L else 0L
     var i = 0
     var j = 0
     while (i < n1 && j < n2) {
@@ -59,10 +61,12 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val n2 = ctx.freshName("n2")
       val c = ctx.freshName("c")
       val acc = ctx.freshName("acc")
+      def prefix(x: String) =
+        s"$x.numElements() > 0 && $x.isNullAt($x.numElements() - 1) ? $x.numElements() - 1 : $x.numElements()"
       s"""
-         |final int $n1 = $a.numElements();
-         |final int $n2 = $b.numElements();
-         |long $acc = 0L;
+         |final int $n1 = ${prefix(a)};
+         |final int $n2 = ${prefix(b)};
+         |long $acc = ($n1 < $a.numElements() && $n2 < $b.numElements()) ? 1L : 0L;
          |int $i = 0;
          |int $j = 0;
          |while ($i < $n1 && $j < $n2) {

@@ -1949,15 +1949,11 @@ object Relational {
     * transparent physical optimization, asserted present in PlanSpec.
     * Conf scoping: the thresholds that let the sf0.01 fixture trigger the
     * rewrite (application-side ≥10 GB by default) live on a child session
-    * (`newSession()` — same SparkContext, own conf), so no other query's
-    * plan is perturbed; broadcast is disabled there because the runtime
-    * filter targets shuffle joins (a broadcast join already prunes at the
-    * probe). */
+    * ([[bloomSession]]), so no other query's plan is perturbed; broadcast
+    * is disabled there because the runtime filter targets shuffle joins
+    * (a broadcast join already prunes at the probe). */
   def joinBloomPrefilter(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    val s = bloomSession(spark)
     val hot = table(s, dir, "orders")
       .filter(col("o_totalprice") > 449000.0)
     table(s, dir, "lineitem")
@@ -1968,6 +1964,18 @@ object Relational {
         dsumR(col("l_extendedprice"), Money).as("sum_price"))
       .orderBy("o_orderpriority")
   }
+
+  /** [[joinBloomPrefilter]]'s child session (same SparkContext, own
+    * conf), built once per parent session, so its table memo is reused. */
+  private def bloomSession(spark: SparkSession): SparkSession =
+    CorpusScope.cached("bloomSession",
+        org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+      s
+    }
 
   /** Seasonal-naive baseline — the first forecasting sanity check on any
     * event stream: today's daily total vs the total exactly 7 days back
@@ -3116,21 +3124,13 @@ object Relational {
   /** The optimizer-rule rung of the extension ladder, ORACLE-verified:
     * this query is written as the plain `row_number() <= 3` window
     * idiom — top-3 customers by balance per market segment — and
-    * registers [[graft.plans.TopKWindowRewrite]] on the session, so
-    * Catalyst itself rewrites the idiom into the bounded-heap
-    * [[graft.plans.TopKPerKeyExec]] (no per-group sort; PlanSpec
-    * asserts the exec appears). The DuckDB oracle runs the UNREWRITTEN
-    * idiom — the driver's hash gate therefore proves the rewrite is
-    * semantics-preserving on real data, which a unit spec alone cannot.
-    * Registration is idempotent-append on the live session
-    * (`experimental.extraOptimizations` — the runtime counterpart of
-    * injectOptimizerRule, same object). */
+    * Catalyst rewrites it into the bounded-heap [[graft.plans.TopKPerKeyExec]]
+    * with [[graft.plans.TopKWindowRewrite]], which `table` installs (no
+    * per-group sort; PlanSpec asserts the exec appears). The DuckDB oracle
+    * runs the UNREWRITTEN idiom — the result-hash comparison therefore proves
+    * the rewrite is semantics-preserving on real data, which a unit spec
+    * alone cannot. */
   def windowTopkRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(graft.plans.TopKWindowRewrite))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.TopKWindowRewrite
-    if (!exp.extraStrategies.contains(graft.plans.TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.TopKStrategy
     val w = Window.partitionBy("c_mktsegment")
       .orderBy(desc("c_acctbal"), col("c_custkey"))
     table(spark, dir, "customer")

@@ -123,7 +123,7 @@ object Scalars {
     // (key, value) structs orders exactly like sorting the keys, and
     // values ride along for free. The map-parse schema itself is not
     // prunable: every key and every value lands in the output.
-    // Measured 2.4-2.5 s -> 1.9-2.0 s at sf0.1 (R17Probe mapops).
+    // Measured 2.4-2.5 s -> 1.9-2.0 s at sf0.1 (OPTIMIZATION_r17.md).
     val entries = array_sort(map_entries(m))
     table(spark, dir, "events")
       .select(

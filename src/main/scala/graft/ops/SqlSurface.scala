@@ -66,7 +66,6 @@ object SqlSurface {
     * yields a DECIMAL(28,7) column that hash-mismatches the oracle's
     * double even when the values are bit-equal (the round-2 red row). */
   def sqlDotProduct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(spark)
     reg(spark, dir, "embeddings")
     spark.sql(
       s"""SELECT vec_id,

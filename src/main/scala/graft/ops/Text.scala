@@ -2009,7 +2009,7 @@ object Text {
     // shingle has exactly one min owner, so novelty never needs to be
     // attached back to shingle rows at all). The only join left is
     // doc-keyed at doc-count cardinality. Measured flat at sf0.1
-    // (2.0-2.1 s both spellings, R17Probe novelty) with the hot-shingle
+    // (2.0-2.1 s both spellings, OPTIMIZATION_r17.md) with the hot-shingle
     // single-task risk gone — partial aggregation bounds every task.
     val perDocTotal = shRaw.distinct()
       .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -2495,7 +2495,7 @@ object Text {
     // the cheapest skew-safe one (3.2-3.5 s vs 2.7-2.9 s for the skewed
     // window at sf0.1 — the +0.5 s is the de-skew premium, bought back
     // 1.55× on a hot-gram soak where the single-level window straggles:
-    // 9.1-9.3 s vs 5.9 s, R17Probe skewgen/skewtime).
+    // 9.1-9.3 s vs 5.9 s, OPTIMIZATION_r17.md).
     val salts = 64
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val gs = g.withColumn("salt",

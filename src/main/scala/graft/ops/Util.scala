@@ -23,51 +23,40 @@ object Util {
   /** Rates (l_discount, l_tax): 2-decimal in [0,1]. */
   val Rate: DecimalType = DecimalType(8, 4)
 
-  /** Get the fixture table as a DataFrame. r17 optimization round: the
-    * constructed (lazy) DataFrame is memoized per (session, path,
-    * content stamp) — `spark.read.parquet` re-reads footers and
+  /** Get the fixture table as a DataFrame. Every query reads through
+    * here, so it runs [[graft.functions.GraftExtensions.install]] first,
+    * outside the memo. The lazy DataFrame is memoized per (session UUID,
+    * path, content stamp) — `spark.read.parquet` re-reads footers and
     * re-infers the schema on EVERY call (measured 64 ms/call at sf0.1:
-    * 200 constructions = 12.8 s), and the bench pays that per query per
-    * iteration. This is METADATA caching only — the exact session-level
-    * file-listing/schema cache the optimization guide (§6) prescribes,
-    * and what a catalog table gives a real deployment for free; no row
-    * is materialized, every action still computes from the parquet
-    * files, and the content stamp ([[dirContentKey]]) re-keys a
-    * regenerated corpus. LRU-bounded via [[CorpusScope]] (fixture-churn
-    * guard for the test matrix). */
+    * 200 constructions = 12.8 s). This is METADATA caching only, what a
+    * catalog table gives a real deployment for free: no row is
+    * materialized, the content stamp ([[dirContentKey]]) re-keys a
+    * regenerated corpus, and the UUID keeps each session's frame its own.
+    * LRU-bounded via [[CorpusScope]]. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = System.identityHashCode(spark).toString + "|" + dir + "/" + name +
-      "|" + dirContentKey(dir, s"$name.parquet")
-    CorpusScope.cached("tableMeta", key)(tableUncached(spark, dir, name))
+    graft.functions.GraftExtensions.install(spark)
+    val key = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark) + "|" +
+      dir + "/" + name + "|" + dirContentKey(dir, s"$name.parquet")
+    CorpusScope.cached("tableMeta", key) {
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      if (name == "events") eventsTs(df) else df
+    }
   }
 
-  private def tableUncached(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // events.ts is parquet TIMESTAMP(NANOS) which Spark's reader rejects
-      // outright ([PARQUET_TYPE_ILLEGAL]). Read it as raw nanos and truncate
-      // to µs (Spark's native precision). Oracle SQL mirrors this with
-      // CAST(ts AS TIMESTAMP) so both engines compare at µs. Integer div —
-      // double division rounds near .5µs. Test fixtures write µs
-      // timestamps, which arrive as TimestampType and pass through.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        // Driver-regenerated fixtures write parquet timestamp[us] with
-        // isAdjustedToUTC=false, which Spark 4 infers as TIMESTAMP_NTZ
-        // (spark.sql.parquet.inferTimestampNTZ.enabled default). Every
-        // engine query and the driver's UTC session treat ts as an
-        // instant, so normalize to TimestampType here: with the session
-        // timezone pinned to UTC the cast is value-preserving, and
-        // downstream `unix_micros`/window-range arithmetic (which
-        // rejects NTZ) keeps working across either fixture spelling.
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          df.withColumn("ts", col("ts").cast(
-            org.apache.spark.sql.types.TimestampType))
-        case _ => df
-      }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+  /** `events` with `ts` as an instant at µs, for batch and streaming
+    * reads alike. Parquet TIMESTAMP(NANOS), which Spark's reader rejects
+    * ([PARQUET_TYPE_ILLEGAL]), arrives as raw nanos under `nanosAsLong`
+    * and truncates to µs by integer div — double division rounds near
+    * .5µs; oracle SQL mirrors it with CAST(ts AS TIMESTAMP). Spark 4
+    * infers timestamp[us] with isAdjustedToUTC=false as TIMESTAMP_NTZ;
+    * the cast to TimestampType is value-preserving under the UTC session
+    * and keeps `unix_micros`/window-range arithmetic (which rejects NTZ)
+    * working on either spelling. TimestampType passes through. */
+  def eventsTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+    case _ => df
+  }
 
   /** DuckDB FROM-clause for `events` with ts truncated to µs, matching the
     * Spark-side read in [[table]]. Alias stays `events`/custom. */
@@ -93,11 +82,6 @@ object Util {
 
   /** dsum rounded to 4 decimals — the standard float-aggregate output form. */
   def dsumR(c: Column, t: DecimalType): Column = round(dsum(c, t), 4)
-
-  /** Exact-decimal average surfaced as double/double division (identical in
-    * DuckDB as CAST(sum(CAST(x AS DECIMAL)) AS DOUBLE) / CAST(count(*) AS DOUBLE)). */
-  def davg(c: Column, t: DecimalType): Column =
-    r4(dsum(c, t) / count(lit(1)).cast("double"))
 
   /** Engine-portable rounding for NON-exact doubles (ratios, sqrt/ln,
     * cosines): floor(x·10^p + 0.5)/10^p — the same IEEE ops in both

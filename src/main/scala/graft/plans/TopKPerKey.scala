@@ -25,8 +25,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (a SparkPlan declaring ClusteredDistribution so EnsureRequirements
   * inserts exactly one hash shuffle on the keys) — registered either via
   * `SparkSessionExtensions.injectPlannerStrategy`
-  * ([[graft.functions.GraftExtensions]]) or `spark.experimental
-  * .extraStrategies` at runtime ([[TopK.topKPerKey]] does it on first use).
+  * ([[graft.functions.GraftExtensions]]) or its `install`, which
+  * [[TopK.topKPerKey]] and every table read run.
   */
 case class TopKPerKeyNode(
     keys: Seq[Expression], order: Seq[SortOrder], k: Int, child: LogicalPlan)
@@ -106,9 +106,7 @@ object TopK {
     * survive inside non-builtin nodes). */
   def topKPerKey(df: DataFrame, keyNames: Seq[String], orderBy: Seq[Ord], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    graft.functions.GraftExtensions.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String) = analyzed.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

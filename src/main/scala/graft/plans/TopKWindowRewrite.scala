@@ -41,9 +41,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     order, and the heap inherits exactly that contract).
   *
   * Registered builder-time via `SparkSessionExtensions.injectOptimizerRule`
-  * ([[graft.functions.GraftExtensions]]) or on a live session through
-  * `spark.experimental.extraOptimizations` — ExtensionsSpec proves both
-  * the plan rewrite and result equality against the un-rewritten window.
+  * ([[graft.functions.GraftExtensions]]) or by its `install`, which every
+  * table read runs, so the rule is on from a session's first query.
+  * ExtensionsSpec proves both the plan rewrite and result equality
+  * against the un-rewritten window.
   */
 object TopKWindowRewrite extends Rule[LogicalPlan] {
 

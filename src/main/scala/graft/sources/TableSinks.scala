@@ -62,26 +62,18 @@ object TableSinks {
     * default) truncates the ENTIRE root path first; the dynamic mode
     * scopes the delete to partitions the incoming frame actually writes,
     * which is what makes the operation idempotent per day — safe to
-    * retry, safe to schedule. The conf is set per-write and restored so
-    * a shared session keeps its global default. */
+    * retry, safe to schedule. The mode is a writer option, which takes
+    * precedence over `spark.sql.sources.partitionOverwriteMode`, so the
+    * session's default is never touched. */
   def overwriteDatePartitions(
-      df: DataFrame, tsCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try {
-      df.withColumn("p_date", to_date(col(tsCol)))
-        .repartition(col("p_date"))
-        .write
-        .partitionBy("p_date")
-        .mode("overwrite")
-        .parquet(path)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+      df: DataFrame, tsCol: String, path: String): Unit =
+    df.withColumn("p_date", to_date(col(tsCol)))
+      .repartition(col("p_date"))
+      .write
+      .partitionBy("p_date")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(path)
 
   /** Read a parquet directory whose files were written over time with
     * EVOLVING schemas (columns added later): `mergeSchema` unions the

@@ -45,7 +45,7 @@ object StreamingDemo {
     * then exit" daily batch, minus the scheduler). The file-source
     * checkpoint provides exactly the seen-set idempotency of ref A7. */
   def runFileDemo(spark: SparkSession, dir: String, checkpoint: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.functions.GraftExtensions.install(spark)
     // The file stream source watches a directory; stage the single-file
     // table into one (in production the landing dir IS a directory).
     val streamDir = java.nio.file.Files.createTempDirectory("graft-stream-in")
@@ -53,17 +53,10 @@ object StreamingDemo {
       java.nio.file.Paths.get(dir, "events.parquet"),
       streamDir.resolve("events.parquet"))
     val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(batchSchema).parquet(streamDir.toString)
-    val events = batchSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // timestamp[us] isAdjustedToUTC=false fixtures arrive as NTZ;
-      // normalize like Util.table so watermark math sees one type.
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    // the same ts normalization as Util.table, so watermark math sees
+    // one type whichever parquet spelling the fixture uses
+    val events = graft.ops.Util.eventsTs(
+      spark.readStream.schema(batchSchema).parquet(streamDir.toString))
     val q = windowedCounts(events)
       .writeStream
       .format("memory")

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ExpressionUtils, SparkSession => Classic}
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 gates these conversions as
   * private[sql]; extension libraries that ship native expressions reach
@@ -17,8 +17,17 @@ object Bridge {
     * private[sql] in Spark 4. */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+    org.apache.spark.sql.classic.Dataset.ofRows(spark.asInstanceOf[Classic], plan)
+
+  /** Unique per session, `newSession()` children included — unlike an
+    * identity hash, which a later session may reuse. Memo keys use it. */
+  def sessionUUID(spark: SparkSession): String = spark.asInstanceOf[Classic].sessionUUID
+
+  /** Strategies and optimizer rules the session's extensions inject. */
+  def injectedRules(spark: SparkSession): Seq[AnyRef] = {
+    val c = spark.asInstanceOf[Classic]
+    c.extensions.buildPlannerStrategies(c) ++ c.extensions.buildOptimizerRules(c)
+  }
 
   /** Reliable-checkpoint path backing a checkpointed frame, if any: a
     * `Dataset.checkpoint()` result analyzes to a LogicalRDD over the

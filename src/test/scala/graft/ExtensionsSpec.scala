@@ -5,12 +5,12 @@ import graft.functions.GraftExtensions
 
 /** Exercises the SQL-registry path on the shared live session (builder-time
   * SparkSessionExtensions can't attach to an existing session, so the test
-  * uses the runtime register hook — same builder, same registry entry). */
+  * uses the runtime install point — same builder, same registry entry). */
 class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   test("dot_product_float is callable from SQL after registration") {
-    GraftExtensions.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       """SELECT dot_product_float(
            CAST(array(1.0, 2.0, 3.0) AS ARRAY<FLOAT>),
@@ -19,7 +19,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("char_entropy: known distributions, empty, null, astral plane") {
-    GraftExtensions.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       """SELECT char_entropy('aaaa') AS h0, char_entropy('abab') AS h1,
                 char_entropy('abcd') AS h2, char_entropy('') AS he,
@@ -93,8 +93,49 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     assert(r.getAs[Long]("disjoint") == 0L)
   }
 
+  test("SortedIntersectCount equals size(array_intersect), nulls included, codegen on and off") {
+    import graft.functions.SortedIntersectCount
+    import org.apache.spark.sql.functions._
+    val cases = Seq[(Seq[String], Seq[String])](
+      (Seq(), Seq()), (Seq(), Seq("a")),                  // empty
+      (Seq("a", "b"), Seq("c", "d")),                     // disjoint
+      (Seq("a", "b", "c"), Seq("a", "b", "c")),           // identical
+      (Seq("a", "b", "c"), Seq("b", "c", "d")),           // overlapping
+      (null, Seq("a")),                                   // null array
+      (Seq("a", null), Seq(null, "a")), (Seq("a", null), Seq("a")),
+      (Seq(null), Seq(null)), (Seq(null), Seq()),
+      (Seq("b", null), Seq("a", null)))                   // null elements
+    // sorted distinct, as the callers build them; the repartition keeps
+    // the optimizer from folding the projection over the local relation
+    val df = cases.toDF("x", "y").repartition(1)
+      .select(array_sort(array_distinct(col("x"))).as("a"),
+        array_sort(array_distinct(col("y"))).as("b"))
+      .select(
+        SortedIntersectCount.sortedIntersect(col("a"), col("b")).as("merge"),
+        size(array_intersect(col("a"), col("b"))).cast("long").as("hash"))
+    for ((wholeStage, factory) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
+      val rows = withConf("spark.sql.codegen.wholeStage" -> wholeStage,
+          "spark.sql.codegen.factoryMode" -> factory) {
+        df.collect().toSeq
+      }
+      assert(rows.size == cases.size)
+      rows.zip(cases).foreach { case (r, c) =>
+        assert(r.get(0) == r.get(1), s"$c (wholeStage=$wholeStage): $r")
+      }
+    }
+  }
+
+  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("all native expressions resolve by name through SQL") {
-    GraftExtensions.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       """SELECT dot_product_float_double(
            CAST(array(2.0) AS ARRAY<FLOAT>), CAST(array(3.0) AS ARRAY<DOUBLE>)) AS d,
@@ -107,7 +148,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("minhash_band_sigs from SQL matches the DataFrame-side expression") {
-    GraftExtensions.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = Seq(Seq("ab", "cd", "ef")).toDF("toks")
@@ -127,7 +168,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("misra_gries_topk UDAF is callable from SQL and exact under k") {
-    graft.functions.GraftExtensions.register(spark)
+    GraftExtensions.install(spark)
     Seq("a", "a", "b").toDF("t").createOrReplaceTempView("g_mg_test")
     val m = spark.sql("SELECT misra_gries_topk(t) AS hh FROM g_mg_test")
       .collect()(0).getAs[Map[String, Long]]("hh")
@@ -135,7 +176,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("registration rejects wrong arity with a clear message") {
-    GraftExtensions.register(spark)
+    GraftExtensions.install(spark)
     val e = intercept[Exception](
       spark.sql("SELECT dot_product_float(CAST(array(1.0) AS ARRAY<FLOAT>))").collect())
     assert(e.getMessage.contains("2 arguments") || e.getMessage.contains("dot_product_float"))
@@ -144,23 +185,17 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   // ---- TopKWindowRewrite: the optimizer rung of the extension ladder ----
 
   private def withTopKRewrite[A](f: => A): A = {
-    val prev = spark.experimental.extraOptimizations
-    val prevStrat = spark.experimental.extraStrategies
-    spark.experimental.extraOptimizations = prev :+ graft.plans.TopKWindowRewrite
-    if (!prevStrat.contains(graft.plans.TopKStrategy))
-      spark.experimental.extraStrategies = prevStrat :+ graft.plans.TopKStrategy
-    try f finally {
-      spark.experimental.extraOptimizations = prev
-      spark.experimental.extraStrategies = prevStrat
-    }
+    GraftExtensions.install(spark)
+    f
   }
 
-  private def rankIdiom(k: String) = {
-    val df = spark.createDataset(Seq(
+  private def rankIdiom(k: String,
+      session: org.apache.spark.sql.SparkSession = spark) = {
+    val df = session.createDataFrame(Seq(
       (1L, 5.0, 10L), (1L, 9.0, 11L), (1L, 9.0, 12L), (1L, 1.0, 13L),
       (2L, 7.0, 20L), (2L, 3.0, 21L))).toDF("key", "score", "id")
     df.createOrReplaceTempView("topk_t")
-    spark.sql(
+    session.sql(
       s"""SELECT key, score, id FROM (
            SELECT *, row_number() OVER (
              PARTITION BY key ORDER BY score DESC, id) AS rn FROM topk_t)
@@ -168,7 +203,12 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("row_number<=k idiom rewrites to the heap exec, results unchanged") {
-    val unrewritten = rankIdiom("2").collect()
+    // the reference runs on a fresh session install never ran on, so it
+    // plans the plain window whatever the shared session has seen
+    val plain = rankIdiom("2", spark.newSession())
+    assert(plain.queryExecution.executedPlan.toString.contains("Window ["),
+      "reference was rewritten too")
+    val unrewritten = plain.collect()
     withTopKRewrite {
       val df = rankIdiom("2")
       val p = df.queryExecution.executedPlan.toString

@@ -774,6 +774,37 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(!p.contains("Window ["), s"WindowExec survived:\n$p")
   }
 
+  test("join_bloom_prefilter: a runtime bloom filter prunes the lineitem side, child session reused") {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalarSubquery}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    def tableMetaSize = graft.ops.CorpusScope.statsString.split(" ")
+      .collectFirst { case kv if kv.startsWith("tableMeta=") =>
+        kv.stripPrefix("tableMeta=").split("/")(0).toInt }.getOrElse(0)
+    // start under the LRU bound, so a second call's new entries could not
+    // hide behind evictions
+    graft.ops.CorpusScope.drop("tableMeta")
+    val df = Relational.joinBloomPrefilter(spark, dir)
+    val opt = df.queryExecution.optimizedPlan
+    val blooms = opt.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) => f
+    }
+    assert(blooms.nonEmpty, s"no might_contain runtime filter:\n$opt")
+    blooms.foreach { f =>
+      assert(f.condition.references.map(_.name).toSet == Set("l_orderkey"),
+        s"bloom filter not on the lineitem key: ${f.condition}")
+      val builds = f.condition.collect { case q: ScalarSubquery => q.plan }
+      assert(builds.exists(_.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[BloomFilterAggregate])))),
+        s"might_contain not fed by a BloomFilterAggregate: ${f.condition}")
+    }
+    val entries = tableMetaSize
+    val again = Relational.joinBloomPrefilter(spark, dir)
+    assert(again.sparkSession eq df.sparkSession, "child session rebuilt per call")
+    assert(tableMetaSize == entries, "second call added tableMeta entries")
+    assert(again.collect().toSeq == df.collect().toSeq)
+  }
+
   test("pipe_mv_incremental: the standing slice is never rescanned") {
     // The merge plan may read raw events exactly ONCE (the batch slice,
     // with the %7 filter pushed to the scan); the standing side must
