@@ -11,9 +11,12 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle partitions ≈ 2-3× total cores (fine-grained enough for
   *     AQE coalescing to work with, not so many that task overhead wins);
   *   - 128 MB file-split target keeps scan tasks coarse at 100 TB;
-  *   - GraftExtensions injects the native expressions and the TopKPerKey
-  *     strategy and window rewrite at build time; its `install` (run by
-  *     every table read) adds the rest and no second copy of them.
+  *   - GraftExtensions injects the native expressions, the TopKPerKey
+  *     strategy and window rewrite, and the collected-sort strategy
+  *     (`graft.plans.CollectSortStrategy`: a collected `ORDER BY` merges
+  *     per-partition sorted runs on the driver instead of range-shuffling)
+  *     at build time; its `install` (run by every table read) adds the rest
+  *     and no second copy of them.
   */
 object GraftSession {
 

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.plans.{TopKStrategy, TopKWindowRewrite}
+import graft.plans.{CollectSortStrategy, TopKStrategy, TopKWindowRewrite}
 
 /** SparkSessionExtensions hook: registers graft's native expressions in the
   * SQL function registry, so `spark.sql("SELECT dot_product_float(a, b)")`
   * plans the same codegen'd expression the DataFrame API uses, plus the
-  * TopKPerKey strategy and the row_number()<=k window rewrite. Activate
+  * TopKPerKey strategy, the row_number()<=k window rewrite and the
+  * collected-sort strategy ([[graft.plans.CollectSortStrategy]]). Activate
   * with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * as [[graft.GraftSession]] does; other sessions get the same from
   * [[GraftExtensions.install]].
@@ -21,6 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
     }
     ext.injectPlannerStrategy(_ => TopKStrategy)
+    ext.injectPlannerStrategy(_ => CollectSortStrategy)
     // rewrite row_number()<=k window idiom into the bounded-heap exec
     ext.injectOptimizerRule(_ => TopKWindowRewrite)
   }
@@ -74,8 +76,9 @@ object GraftExtensions {
     * [[graft.ops.Util.table]] and [[graft.plans.TopK.topKPerKey]] run it on
     * every use. Registers the native expressions and the SQL UDAF
     * `misra_gries_topk(col)` (k=64, the declared-query configuration),
-    * adds the TopK rules unless the session's extensions inject them, and
-    * sets `nanosAsLong` for [[graft.ops.Util.eventsTs]]. */
+    * adds the TopK rules and [[CollectSortStrategy]] unless the session's
+    * extensions inject them, and sets `nanosAsLong` for
+    * [[graft.ops.Util.eventsTs]]. */
   def install(spark: SparkSession): Unit = installed.synchronized {
     if (!installed.contains(spark)) {
       functions.foreach { case (name, className, builder) =>
@@ -84,8 +87,8 @@ object GraftExtensions {
       spark.udf.register("misra_gries_topk", misraGries)
       val injected = Bridge.injectedRules(spark)
       val exp = spark.experimental
-      if (!injected.contains(TopKStrategy))
-        exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
+      val strategies = Seq(TopKStrategy, CollectSortStrategy).filterNot(injected.contains)
+      exp.extraStrategies = exp.extraStrategies ++ strategies
       if (!injected.contains(TopKWindowRewrite))
         exp.extraOptimizations = exp.extraOptimizations :+ TopKWindowRewrite
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -63,14 +63,16 @@ final class IngestPipeline(cfg: PipelineConfig, sink: SnapshotSink) {
     else Seq.empty[String].toDF("name")
   }
 
-  /** A4–A7: latest not-yet-imported artifact, or None. */
-  def chooseArtifact(spark: SparkSession): Option[String] = {
-    val candidates = manifest(spark)
+  /** A4–A7 as a frame: the latest artifact unless already imported (0 or 1 rows). */
+  def candidates(spark: SparkSession): DataFrame =
+    manifest(spark)
       .filter(col("name").contains(cfg.suffix))        // A4
       .orderBy(desc("name")).limit(1)                  // A6: lexicographic max
       .join(state(spark), Seq("name"), "left_anti")    // A7: seen-set
-    candidates.collect().headOption.map(_.getAs[String]("name"))
-  }
+
+  /** A4–A7: latest not-yet-imported artifact, or None. */
+  def chooseArtifact(spark: SparkSession): Option[String] =
+    candidates(spark).collect().headOption.map(_.getAs[String]("name"))
 
   /** Full run: returns the loaded artifact name, or None if nothing new
     * (both reference early-exits, `:38-42` and `:57-66`). */

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.ReturnAnswer
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, PipelineOps, Relational, StreamingModel, Vector}
+import graft.pipeline.{IngestPipeline, PipelineConfig}
+import graft.plans.{CollectSortExec, CollectSortStrategy}
 
 /** Physical-plan assertions on the real sf0.001 tables: the properties
   * that decide whether a plan survives a 100×–1000× scale-up. Locking them
@@ -42,6 +49,55 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("multi-key sort+limit is TakeOrderedAndProject") {
     val p = plan(Relational.sortMultikeyLimit(spark, dir))
     assert(p.contains("TakeOrderedAndProject"), s"limit not fused into sort:\n$p")
+  }
+
+  test("collected sort: agg_pricing_summary merges sorted runs on the driver, no range exchange") {
+    val p = plan(Relational.aggPricingSummary(spark, dir))
+    assert(p.contains("CollectSort") && !p.contains("rangepartitioning"),
+      s"collected sort still range-shuffles:\n$p")
+  }
+
+  test("collected sort: toRdd and a coalesce(1).write keep the range exchange") {
+    val df = Relational.aggPricingSummary(spark, dir)
+    val rows = df.collect()
+    assert(df.queryExecution.toRdd.count() == rows.length)
+    // AQE wraps the final plan in a result stage, a leaf to collectFirst
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case q: QueryStageExec => unwrap(q.plan)
+      case other => other
+    }
+    val range = unwrap(df.queryExecution.executedPlan)
+      .collectFirst { case c: CollectSortExec => c.rangePlan }.get
+    val exchange = range.collectFirst { case e: ShuffleExchangeExec => e }.get
+    assert(exchange.outputPartitioning.isInstanceOf[RangePartitioning], s"$range")
+    assert(exchange.metrics("shuffleRecordsWritten").value == rows.length,
+      s"toRdd did not run the range exchange:\n$range")
+    assert(range.collect { case s: SortExec => s.global } == Seq(true),
+      s"range path keeps the per-partition pre-sort:\n$range")
+    // Verify's spelling: the sort is under the coalesce, not the answer root
+    val w = df.coalesce(1)
+    val wp = plan(w)
+    assert(wp.contains("rangepartitioning") && !wp.contains("CollectSort"), wp)
+    val out = java.nio.file.Files.createTempDirectory("graft-collect-sort").toString + "/o"
+    w.write.parquet(out)
+    assert(spark.read.parquet(out).collect().toSeq == rows.toSeq)
+  }
+
+  test("collected sort: ETL latest-artifact choice stays TakeOrderedAndProject") {
+    val m = java.nio.file.Files.createTempDirectory("graft-manifest")
+    Seq("snap_2024-01-01.zip", "snap_2024-01-02.zip", "notes.txt")
+      .foreach(n => java.nio.file.Files.write(m.resolve(n), "x".getBytes))
+    val p = plan(new IngestPipeline(PipelineConfig(m.toString, s"$m/state"), (_, _) => ())
+      .candidates(spark))
+    assert(p.contains("TakeOrderedAndProject") && !p.contains("CollectSort"), p)
+  }
+
+  test("collected sort: a streaming Sort is not rewritten") {
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      ReturnAnswer(df.orderBy("value").queryExecution.analyzed)
+    assert(CollectSortStrategy(sorted(spark.readStream.format("rate").load())).isEmpty)
+    assert(CollectSortStrategy(sorted(spark.range(3).toDF("value"))).nonEmpty)
   }
 
   test("incremental anti-check broadcasts the tiny state side") {

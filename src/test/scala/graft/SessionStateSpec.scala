@@ -59,13 +59,16 @@ class SessionStateSpec extends AnyFunSuite with SparkFixture {
   test("install adds each rule once, and none over a session's own extensions") {
     val s = spark.newSession()
     (1 to 3).foreach(_ => GraftExtensions.install(s))
-    assert(s.experimental.extraStrategies == Seq(graft.plans.TopKStrategy))
+    assert(s.experimental.extraStrategies ==
+      Seq(graft.plans.TopKStrategy, graft.plans.CollectSortStrategy))
     assert(s.experimental.extraOptimizations == Seq(graft.plans.TopKWindowRewrite))
     // a session built with the extensions, as GraftSession builds one
     val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
     try {
       GraftExtensions.install(ext)
       assert(ext.experimental.extraStrategies.isEmpty)
+      assert(org.apache.spark.sql.graftbridge.Bridge.injectedRules(ext)
+        .count(_ == graft.plans.CollectSortStrategy) == 1)
       assert(ext.experimental.extraOptimizations.isEmpty)
       assert(ext.sql(
         "SELECT misra_gries_topk(CAST(id AS STRING)) AS hh FROM range(3)")
