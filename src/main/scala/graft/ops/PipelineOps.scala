@@ -1861,9 +1861,10 @@ object PipelineOps {
     * so any value/row/type corruption across the JDBC write→read hop
     * fails the driver's hash compare. VERDICT r12 ask #5: this was the
     * one reference surface verified only by unit specs. Shape at scale:
-    * the snapshot write parallelizes across 8 batched connections, the
-    * read-back splits the key range across 8 executor-side slices (no
-    * single-connection funnel either direction); balance cents quantize
+    * the snapshot write batches over at most 8 connections, no shuffle
+    * (one per input partition, so a one-file supplier scan is one
+    * writer); the read-back splits the key range across 8 executor-side
+    * slices; balance cents quantize
     * in DOUBLE (floor(x·100 + 0.5) — the float→decimal trap) before the
     * exact integer sum. Write-once per corpus: iteration 1 pays the
     * load, later calls serve the read path (buildOnce in Bench). */

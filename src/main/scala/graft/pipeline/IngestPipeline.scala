@@ -54,12 +54,13 @@ final class IngestPipeline(cfg: PipelineConfig, sink: SnapshotSink) {
     entries.toDF("name", "mtime", "size")
   }
 
-  /** A7 state: the previously-imported artifact name (0 or 1 rows). */
+  /** A7 state: the previously-imported artifact name (0 or 1 rows). Read
+    * with its declared schema, so building it runs no inference job. */
   def state(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val p = new Path(cfg.statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(cfg.statePath)
+    if (fs.exists(p)) spark.read.schema("name STRING").parquet(cfg.statePath)
     else Seq.empty[String].toDF("name")
   }
 

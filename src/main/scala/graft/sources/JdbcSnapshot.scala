@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * (at-least-once + idempotent overwrite, ref A11/A12/A14).
   *
   * Scale notes: reads are range-partitioned so every executor pulls its own
-  * slice; writes batch inserts and parallelize across `numPartitions`
-  * connections. Untestable against a live server in this environment —
-  * covered by construction-level unit tests only.
+  * slice; writes batch inserts over at most `numPartitions` connections,
+  * with no shuffle. Untestable against a live server in this environment —
+  * covered by construction-level unit tests and an embedded Derby.
   */
 object JdbcSnapshot {
 
@@ -32,12 +32,20 @@ object JdbcSnapshot {
   /** Snapshot-overwrite load (ref A11+A12): truncate-and-reload keeps the
     * target's DDL/grants (the reference re-grants after every RESTORE
     * because DROP destroys principals — truncate avoids the problem, but
-    * [[grantReader]] is still provided for parity). */
+    * [[grantReader]] is still provided for parity).
+    *
+    * Writes over at most `numPartitions` connections, no shuffle — the
+    * meaning of Spark's own JDBC `numPartitions` write option. An input
+    * with fewer partitions keeps its count; one with more is merged in
+    * place. The trade-off: `coalesce` pulls the upstream work into those
+    * n tasks, which is right for a scan or projection feeding the sink,
+    * since the sink is the bottleneck. A caller with heavy upstream work
+    * should repartition it first. */
   def snapshotOverwrite(
       df: DataFrame, url: String, table: String,
       numPartitions: Int = 8, batchSize: Int = 10000,
       props: Properties = new Properties()): Unit =
-    df.repartition(numPartitions)
+    df.coalesce(numPartitions)
       .write.mode(SaveMode.Overwrite)
       .option("truncate", value = true)
       .option("batchsize", batchSize)

@@ -76,6 +76,33 @@ class JdbcSnapshotSpec extends AnyFunSuite with SparkFixture {
     assert(readBack() == expected)
   }
 
+  /** `n` rows (id, "row_<id>", id * 1.5) in `parts` partitions. */
+  private def rows(n: Long, parts: Int) =
+    spark.range(0L, n, 1L, parts).selectExpr(
+      "id AS ID", "concat('row_', id) AS NAME", "id * 1.5D AS VAL")
+
+  private def readBack(table: String) = spark.read.jdbc(url, table, props)
+    .collect().map(r => (r.getAs[Long]("ID"), r.getAs[String]("NAME"), r.getAs[Double]("VAL")))
+    .sortBy(_._1).toSeq
+
+  test("snapshot overwrite caps writers at numPartitions with no shuffle") {
+    val in = rows(60L, 6)
+    assert(in.rdd.getNumPartitions == 6)
+    val (_, t) = traceJobs(
+      JdbcSnapshot.snapshotOverwrite(in, url, "COAL_TBL", numPartitions = 3, props = props))
+    assert(t.tasks == 3, s"6 partitions into 3 writers: $t")
+    assert(t.shuffleWriteBytes == 0L, s"the load shuffled: $t")
+    assert(readBack("COAL_TBL") == (0L until 60L).map(i => (i, s"row_$i", i * 1.5)))
+  }
+
+  test("snapshot overwrite keeps a smaller input's partition count") {
+    val (_, t) = traceJobs(
+      JdbcSnapshot.snapshotOverwrite(rows(20L, 1), url, "ONE_TBL", numPartitions = 8, props = props))
+    assert(t.tasks == 1, s"1 partition must write with 1 task: $t")
+    assert(t.shuffleWriteBytes == 0L, s"the load shuffled: $t")
+    assert(readBack("ONE_TBL") == (0L until 20L).map(i => (i, s"row_$i", i * 1.5)))
+  }
+
   test("DDL side-effect hook executes against the live endpoint (ref A13 shape)") {
     seed()
     // Derby has no T-SQL IF NOT EXISTS, so the hook carries a

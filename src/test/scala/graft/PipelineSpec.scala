@@ -57,6 +57,15 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(p.run(spark).contains("snap_2024-01-03.zip")) // state not committed → retried
   }
 
+  test("the committed state builds with its declared schema: no inference job") {
+    val (dir, state) = mkFixture()
+    val p = new IngestPipeline(PipelineConfig(dir, state), new RecordingSink)
+    assert(p.run(spark).contains("snap_2024-01-03.zip"))
+    val (df, t) = traceJobs(p.state(spark))
+    assert(t.jobs == 0, s"building the state frame started jobs: $t")
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("snap_2024-01-03.zip"))
+  }
+
   test("empty manifest dir short-circuits (A5 guard)") {
     val empty = Files.createTempDirectory("graft-empty").toString
     val state = Files.createTempDirectory("graft-state2").toString + "/state"
