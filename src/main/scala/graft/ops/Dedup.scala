@@ -552,8 +552,6 @@ object Dedup {
       prevSig = sig
       e = next
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[lss] round $rounds sig=$sig converged=$converged")
     }
     // A non-star edge set here would silently emit multiple roots per
     // node downstream; failing loudly is the only safe behavior. The
@@ -936,29 +934,21 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Build-count diagnostic for the persisted dedup index — spec-asserted
-    * zero rebuilds on the probe path (the PQ/IVF index discipline). */
-  private[graft] val dedupIndexBuilds = new java.util.concurrent.atomic.AtomicInteger
-
-  private lazy val dedupIndexRoot: java.io.File = processTempRoot("graft_dedupidx_")
-
   /** Ensure the persisted standing-corpus dedup index for `dir`: the
     * three signature artifacts of [[standingSignatures]] written once as
     * parquet. At 100 TB this is the seen-set the reference's A7 check
     * keeps in its state file (`src/bak_unload.ps1:57-66`), promoted to a
     * persisted document-granularity index: each day's batch probes it
     * without touching standing documents, and the engine never re-signs
-    * the standing corpus. Write-once per input dir per JVM. */
+    * the standing corpus. Write-once per corpus content
+    * ([[CorpusScope.persisted]]). */
   private def ensureDedupIndex(spark: SparkSession, dir: String): (String, String, String) =
-    CorpusScope.cached("dedupIndex", dir) {
-      val d = dir
-      dedupIndexBuilds.incrementAndGet()
-      val key = dirKey(d).take(12)
-      val hashPath = new java.io.File(dedupIndexRoot, s"shash_$key").getPath
-      val bktPath = new java.io.File(dedupIndexRoot, s"sbkt_$key").getPath
-      val setPath = new java.io.File(dedupIndexRoot, s"ssets_$key").getPath
+    CorpusScope.persisted("dedupIndex", spark, dir, "documents") { a =>
+      val hashPath = a.path("shash_")
+      val bktPath = a.path("sbkt_")
+      val setPath = a.path("ssets_")
       val sBase = withHashToks(
-        table(spark, d, "documents").filter(col("doc_id") % 7 =!= 0))
+        table(spark, dir, "documents").filter(col("doc_id") % 7 =!= 0))
       val (sHash, sBuckets, sSets) = standingSignatures(sBase)
       sHash.write.mode("overwrite").parquet(hashPath)
       sBuckets.write.mode("overwrite").parquet(bktPath)
@@ -984,23 +974,10 @@ object Dedup {
       spark.read.parquet(setPath))
   }
 
-  /** Build-count diagnostic for the persisted CC index — spec-asserted
-    * one build across repeated incremental calls. */
-  private[graft] val ccIndexBuilds = new java.util.concurrent.atomic.AtomicInteger
-
-  // Stays OUTSIDE CorpusScope: this is a replay ledger, not a pure
-  // cache — every call re-checks the catalog/FS artifacts (a later
-  // SparkSession has a fresh catalog) and the map records what was
-  // last verified. Registered as an external size probe so the
-  // registry's SOAK stats still cover it.
-  private val ccIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  CorpusScope.registerExternal("ccIndex", () => ccIndexCache.size)
-  private lazy val ccIndexRoot: java.io.File = processTempRoot("graft_ccidx_")
-
-  /** Persisted standing-corpus CC artifacts, written once per input dir
-    * per JVM: the standing component LABELS (doc → root over the
-    * standing-only candidate graph, [[ccLargeSmallStar]]) and the
+  /** Persisted standing-corpus CC artifacts, written once per corpus
+    * content ([[CorpusScope.persisted]]): the standing component LABELS
+    * (doc → root over the standing-only candidate graph,
+    * [[ccLargeSmallStar]]) and the
     * standing per-source capped band buckets batch rows probe (no ≥2
     * filter — a singleton standing bucket is a valid merge target). The
     * bucket table is written BUCKETED on the full probe key
@@ -1012,45 +989,23 @@ object Dedup {
     * state a daily dedup keeps between runs; the incremental query never
     * re-signs or re-clusters the standing corpus. */
   private def ensureCcIndex(spark: SparkSession, dir: String): (String, String) =
-    ccIndexCache.synchronized {
-      // Content-sensitive key (the dirContentKey discipline): a fixture
-      // regenerated at the same path within one JVM gets fresh
-      // artifacts, never stale standing labels.
-      val key = dirContentKey(dir, "documents.parquet").take(12)
-      val lblPath = new java.io.File(ccIndexRoot, s"cclbl_$key").getPath
-      val bktTable = s"g_ccbkt_$key"
-      // Re-check BOTH artifacts on every call rather than trusting the
-      // JVM-wide cache alone: a later SparkSession in the same JVM has a
-      // fresh in-memory catalog without the table (the
-      // joinBucketedColocated per-call tableExists discipline).
-      val cached = ccIndexCache.get(dir) == ((lblPath, bktTable))
-      if (!cached || !spark.catalog.tableExists(bktTable) ||
-          !new java.io.File(lblPath).exists()) {
-        ccIndexBuilds.incrementAndGet()
-        val sBase = table(spark, dir, "documents")
-          .filter(col("doc_id") % 7 =!= 0)
-          .select(col("doc_id"), col("source"),
-            array_distinct(split(col("text"), " ")).as("toks"))
-        ccLargeSmallStar(candidateStarEdges(sBase, "s"), inputCanonical = true)
-          .write.mode("overwrite").parquet(lblPath)
-        if (!spark.catalog.tableExists(bktTable)) {
-          // a previous JVM's managed-table dir outlives the in-memory
-          // catalog — remove the orphan before recreating
-          val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-          val orphan = new java.io.File(wh, bktTable)
-          if (orphan.exists())
-            new scala.reflect.io.Directory(orphan).deleteRecursively()
-          bandRows(sBase, "s")
-            .groupBy("source", "band", "bsig")
-            .agg(graft.functions.MinKLongsAgg.minKLongs(col("doc_id"), LshBucketCap)
-              .as("ds"))
-            .write.format("parquet")
-            .bucketBy(16, "source", "band", "bsig")
-            .sortBy("source", "band", "bsig")
-            .saveAsTable(bktTable)
-        }
-        ccIndexCache.put(dir, (lblPath, bktTable))
-      }
+    CorpusScope.persisted("ccIndex", spark, dir, "documents") { a =>
+      val lblPath = a.path("cclbl_")
+      val bktTable = a.table("g_ccbkt_")
+      val sBase = table(spark, dir, "documents")
+        .filter(col("doc_id") % 7 =!= 0)
+        .select(col("doc_id"), col("source"),
+          array_distinct(split(col("text"), " ")).as("toks"))
+      ccLargeSmallStar(candidateStarEdges(sBase, "s"), inputCanonical = true)
+        .write.mode("overwrite").parquet(lblPath)
+      bandRows(sBase, "s")
+        .groupBy("source", "band", "bsig")
+        .agg(graft.functions.MinKLongsAgg.minKLongs(col("doc_id"), LshBucketCap)
+          .as("ds"))
+        .write.format("parquet").mode("overwrite")
+        .bucketBy(16, "source", "band", "bsig")
+        .sortBy("source", "band", "bsig")
+        .saveAsTable(bktTable)
       (lblPath, bktTable)
     }
 

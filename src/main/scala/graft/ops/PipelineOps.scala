@@ -77,6 +77,17 @@ object PipelineOps {
       .orderBy("event_id")
   }
 
+  /** Write-once date-partitioned scratch layout of `events`, shared by
+    * the static ([[partitionPrune]]) and dynamic ([[joinPruneDynamic]])
+    * pruning queries. */
+  private def pruneLayout(spark: SparkSession, dir: String): String =
+    CorpusScope.persisted("pruneScratch", spark, dir, "events") { a =>
+      val out = a.path("d")
+      graft.sources.TableSinks.writeDatePartitioned(
+        table(spark, dir, "events"), "ts", out, Seq("event_id"))
+      out
+    }
+
   /** Partition-pruned scan, end to end: round-trip `events` through
     * [[graft.sources.TableSinks.writeDatePartitioned]] into a temp scratch
     * layout (`p_date=YYYY-MM-DD/` directories), read back with a day
@@ -84,26 +95,9 @@ object PipelineOps {
     * IO — `PartitionFilters` in the scan, asserted in PlanSpec — which at
     * 100 TB is the difference between reading one day and one month. The
     * write is part of the query on purpose: layout is an operator, and its
-    * cost is honest in the bench. Scratch lives under a PER-PROCESS temp
-    * root, one subdir per input dir (so concurrent sfs can't collide) —
-    * a fresh root per JVM means stale layouts from earlier runs or
-    * `dir.hashCode` collisions can never be silently read; within a run
-    * the input parquet is immutable, so write-once is sound. The root is
-    * removed on JVM exit. */
-  private lazy val pruneRoot: java.io.File = processTempRoot("graft_prune_")
-
-  /** Write-once date-partitioned scratch layout of `events`, shared by
-    * the static ([[partitionPrune]]) and dynamic ([[joinPruneDynamic]])
-    * pruning queries. computeIfAbsent makes the build atomic per input
-    * dir even under concurrent callers within this JVM. */
-  private def pruneLayout(spark: SparkSession, dir: String): String =
-    CorpusScope.cached("pruneScratch", dir) {
-      val out = new java.io.File(pruneRoot, "d" + dirKey(dir))
-      graft.sources.TableSinks.writeDatePartitioned(
-        table(spark, dir, "events"), "ts", out.getPath, Seq("event_id"))
-      out.getPath
-    }
-
+    * cost is honest in the bench. The scratch layout is a
+    * [[CorpusScope.persisted]] artifact keyed on the content of `events`,
+    * so an input rewritten in place gets a new layout, never a stale one. */
   def partitionPrune(spark: SparkSession, dir: String): DataFrame = {
     val scratch = pruneLayout(spark, dir)
     graft.sources.TableSinks.readDatePartitioned(spark, scratch)
@@ -690,8 +684,6 @@ object PipelineOps {
       .orderBy("source", "bin")
   }
 
-  private lazy val evoRoot: java.io.File = processTempRoot("graft_evo_")
-
   /** SCHEMA EVOLUTION read — the lakehouse reality that a long-lived
     * table's old files lack columns added later: the even-event_id half
     * of `events` is written WITHOUT user_id (the v1 schema), the odd
@@ -702,20 +694,19 @@ object PipelineOps {
     * scale: schema merge is a FOOTER operation (one pass over file
     * metadata, not data) and the scan stays a plain parquet scan with
     * pushdown intact — evolution costs nothing per row. Scratch layout
-    * is written once per input dir (process-temp, crash-cleaned), the
-    * [[partitionPrune]] discipline. */
+    * is written once per input content, the [[partitionPrune]]
+    * discipline. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = CorpusScope.cached("evoScratch", dir) {
-      val d = dir
-      val out = new java.io.File(evoRoot, "d" + dirKey(d))
-      val e = table(spark, d, "events")
+    val scratch = CorpusScope.persisted("evoScratch", spark, dir, "events") { a =>
+      val out = a.path("d")
+      val e = table(spark, dir, "events")
       e.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("event_type"), col("value"))
         .write.mode("overwrite").parquet(s"$out/v1")
       e.filter(col("event_id") % 2 === 1)
         .select(col("event_id"), col("event_type"), col("value"), col("user_id"))
         .write.mode("overwrite").parquet(s"$out/v2")
-      out.getPath
+      out
     }
     spark.read.option("mergeSchema", "true")
       .parquet(s"$scratch/v1", s"$scratch/v2")
@@ -728,11 +719,9 @@ object PipelineOps {
       .orderBy("event_type")
   }
 
-  private lazy val fmtRoot: java.io.File = processTempRoot("graft_fmt_")
-
   /** CSV source/sink round-trip — the third interchange format after
     * parquet and JDBC (every real ingest estate has CSV drops): write
-    * `documents` as headered CSV once per input dir, read it back with an
+    * `documents` as headered CSV once per input content, read it back with an
     * EXPLICIT schema, and emit the full relation. The `tricky` column
     * embeds the delimiter AND the quote character, so the gate fails on
     * any quoting/escaping asymmetry between writer and reader — the
@@ -743,8 +732,8 @@ object PipelineOps {
     * oracle recomputes the same projection straight from the parquet
     * table — identity modulo one write→read round trip. */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = CorpusScope.cached("fmtScratch", dir + "#csv") {
-      val out = new java.io.File(fmtRoot, "csv_" + dirKey(dir)).getPath
+    val scratch = CorpusScope.persisted("csvScratch", spark, dir, "documents") { a =>
+      val out = a.path("csv_")
       graft.sources.TextFormats.writeCsv(
         table(spark, dir, "documents")
           .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -770,8 +759,8 @@ object PipelineOps {
     * parallel-read story holds; nested access after the read is a
     * per-row projection, no shuffle anywhere. */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = CorpusScope.cached("fmtScratch", dir + "#json") {
-      val out = new java.io.File(fmtRoot, "json_" + dirKey(dir)).getPath
+    val scratch = CorpusScope.persisted("jsonScratch", spark, dir, "documents") { a =>
+      val out = a.path("json_")
       table(spark, dir, "documents")
         .select(col("doc_id"),
           struct(col("lang"), col("n_chars")).as("meta"),
@@ -794,11 +783,11 @@ object PipelineOps {
     * closing the format matrix (parquet, CSV, JSON-lines, ORC, JDBC,
     * zip archives). Self-describing footer schema, so the read takes no
     * explicit schema; predicate-pushdown/statistics behave as parquet's
-    * do. Written once per input dir; oracle recomputes the projection
+    * do. Written once per input content; oracle recomputes the projection
     * from the parquet table. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = CorpusScope.cached("fmtScratch", dir + "#orc") {
-      val out = new java.io.File(fmtRoot, "orc_" + dirKey(dir)).getPath
+    val scratch = CorpusScope.persisted("orcScratch", spark, dir, "documents") { a =>
+      val out = a.path("orc_")
       graft.sources.TextFormats.writeOrc(
         table(spark, dir, "documents")
           .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -825,10 +814,10 @@ object PipelineOps {
     * value column rides as exact integer cents so the roundtrip
     * compare is bit-exact, and ts as the engine's formatted string
     * (Avro long timestamps would re-open the µs-precision parity
-    * trap). Scratch layout is written once per input dir. */
+    * trap). Scratch layout is written once per input content. */
   def avroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = CorpusScope.cached("fmtScratch", dir + "#avro") {
-      val out = new java.io.File(fmtRoot, "avro_" + dirKey(dir)).getPath
+    val scratch = CorpusScope.persisted("avroScratch", spark, dir, "events") { a =>
+      val out = a.path("avro_")
       graft.sources.AvroFiles.writeAvro(
         table(spark, dir, "events").select(
           col("event_id"), col("event_type"), col("user_id"),
@@ -870,10 +859,6 @@ object PipelineOps {
       .orderBy("split", "source")
   }
 
-  private lazy val deltaRoot: java.io.File = processTempRoot("graft_delta_")
-  /** Build-count diagnostic — spec-asserts the table builds once. */
-  private[graft] val deltaBuilds = new java.util.concurrent.atomic.AtomicInteger
-
   /** Write-once [[graft.sources.DeltaLite]] table over `events`, shared
     * by [[deltaLog]] and [[vacuumPlan]]. Four commits exercise the whole
     * log lifecycle: v1 adds slices A (event_id%3=0 → a.parquet) and B
@@ -882,13 +867,11 @@ object PipelineOps {
     * move); v4 compacts C into c2.parquet. Row-count stats are recorded
     * on each add action, so vacuum planning stays a metadata query. */
   private def deltaTable(spark: SparkSession, dir: String): String =
-    CorpusScope.cached("deltaScratch", dir) {
-      val d = dir
-      deltaBuilds.incrementAndGet()
+    CorpusScope.persisted("deltaScratch", spark, dir, "events") { a =>
       import graft.sources.DeltaLite
       import graft.sources.DeltaLite.Action
-      val out = new java.io.File(deltaRoot, "d" + dirKey(d))
-      val ev = table(spark, d, "events")
+      val out = new java.io.File(a.path("d"))
+      val ev = table(spark, dir, "events")
       def writeSlice(name: String, pred: Column): Long = {
         val target = new java.io.File(out, name).getPath
         ev.filter(pred).write.mode("overwrite").parquet(target)
@@ -1121,20 +1104,17 @@ object PipelineOps {
       .orderBy(desc("key_r"), col("doc_id"))
   }
 
-  private lazy val mvRoot: java.io.File = processTempRoot("graft_mv_")
-
   /** Write-once persisted materialized view: per-(type, day) count +
     * revenue over the STANDING slice (user_id % 7 ≠ 0 — the same
     * standing/batch split convention as `dedup_incremental`). */
   private def mvLayout(spark: SparkSession, dir: String): String =
-    CorpusScope.cached("mvScratch", dir) {
-      val d = dir
-      val out = new java.io.File(mvRoot, "d" + dirKey(d))
-      table(spark, d, "events").filter(col("user_id") % 7 =!= 0)
+    CorpusScope.persisted("mvScratch", spark, dir, "events") { a =>
+      val out = a.path("mv_")
+      table(spark, dir, "events").filter(col("user_id") % 7 =!= 0)
         .groupBy(col("event_type").as("et"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("n"), sum(col("value").cast(Qty)).as("rev_d"))
-        .write.mode("overwrite").parquet(out.getPath)
-      out.getPath
+        .write.mode("overwrite").parquet(out)
+      out
     }
 
   /** Incremental MATERIALIZED-VIEW maintenance — the aggregation twin of
@@ -1766,8 +1746,6 @@ object PipelineOps {
 
   private val LedgerRetentionDays = 30
 
-  private lazy val zipRoot: java.io.File = processTempRoot("graft_zips_")
-
   /** Write-once zip corpus for [[zipEntryStats]]: every document becomes
     * an entry `d<doc_id lpad 9>.txt` in its source's archive
     * `<source>.zip` — the A8/A9 fetch+decompress surface, built the way
@@ -1775,37 +1753,36 @@ object PipelineOps {
     * by source, each task streams its sources' entries through one
     * ZipOutputStream at a time — never a driver-side loop over the
     * corpus), deterministic entry order (sortWithinPartitions), content
-    * keyed so a regenerated fixture rebuilds. */
+    * keyed so a regenerated fixture rebuilds into a fresh directory. */
   private def zipTable(spark: SparkSession, dir: String): String =
-    CorpusScope.cached("zipScratch",
-      "zip|" + dirContentKey(dir, "documents.parquet")) {
-        val out = new java.io.File(zipRoot, "z" + dirKey(dir))
-        out.mkdirs()
-        val outPath = out.getAbsolutePath
-        table(spark, dir, "documents")
-          .select(col("source"), col("doc_id"), col("text"))
-          .repartition(col("source"))
-          .sortWithinPartitions("source", "doc_id")
-          .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-            import java.util.zip.{ZipEntry, ZipOutputStream}
-            var zos: ZipOutputStream = null
-            var cur: String = null
-            try rows.foreach { r =>
-              val src = r.getString(0)
-              if (src != cur) {
-                if (zos != null) zos.close()
-                zos = new ZipOutputStream(
-                  new java.io.FileOutputStream(s"$outPath/$src.zip"))
-                cur = src
-              }
-              zos.putNextEntry(new ZipEntry(
-                "d" + "%09d".format(r.getLong(1)) + ".txt"))
-              zos.write(r.getString(2).getBytes("UTF-8"))
-              zos.closeEntry()
-            } finally if (zos != null) zos.close()
-          }
-        outPath
-      }
+    CorpusScope.persisted("zipScratch", spark, dir, "documents") { a =>
+      val out = new java.io.File(a.path("z"))
+      out.mkdirs()
+      val outPath = out.getAbsolutePath
+      table(spark, dir, "documents")
+        .select(col("source"), col("doc_id"), col("text"))
+        .repartition(col("source"))
+        .sortWithinPartitions("source", "doc_id")
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          import java.util.zip.{ZipEntry, ZipOutputStream}
+          var zos: ZipOutputStream = null
+          var cur: String = null
+          try rows.foreach { r =>
+            val src = r.getString(0)
+            if (src != cur) {
+              if (zos != null) zos.close()
+              zos = new ZipOutputStream(
+                new java.io.FileOutputStream(s"$outPath/$src.zip"))
+              cur = src
+            }
+            zos.putNextEntry(new ZipEntry(
+              "d" + "%09d".format(r.getLong(1)) + ".txt"))
+            zos.write(r.getString(2).getBytes("UTF-8"))
+            zos.closeEntry()
+          } finally if (zos != null) zos.close()
+        }
+      outPath
+    }
 
   /** The A8 fetch + A9 decompress path as a DECLARED differential query
     * (VERDICT r12 ask #7 — this surface was unit-tested only): documents

@@ -1213,8 +1213,8 @@ object Relational {
     * scale this deletes the dominant cost — the shuffle — of every
     * repeat join on the same key). The bucketed write is part of the
     * query (layout is an operator, the `pipe_partition_prune`
-    * discipline), write-once per input dir per JVM; table names carry
-    * the input-dir hash so concurrent scale factors can't collide.
+    * discipline), write-once per input content ([[CorpusScope.persisted]],
+    * which names the tables so concurrent scale factors can't collide).
     * The bucketed tables hold the recurring join's WORKING SET — the
     * 1996 ship-year slice — not the whole history: bucketing pays off on
     * the partition you join repeatedly, and the slice keeps the declared
@@ -1222,19 +1222,9 @@ object Relational {
     * plain-join oracle with the identical filter — bucketing must be
     * invisible to semantics. */
   def joinBucketedColocated(spark: SparkSession, dir: String): DataFrame = {
-    val key = dirKey(dir).take(12)
-    val (ot, lt) = (s"g_bk_orders_$key", s"g_bk_lines_$key")
-    if (!spark.catalog.tableExists(ot) || !spark.catalog.tableExists(lt)) {
-      // A previous JVM's managed-table directory outlives the in-memory
-      // catalog; saveAsTable would then die with LOCATION_ALREADY_EXISTS.
-      // Remove orphaned locations before recreating (same discipline as
-      // sql_ctas_insert's fixed LOCATION).
-      val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-      Seq(ot, lt).foreach { t =>
-        val d = new java.io.File(wh, t)
-        if (d.exists() && !spark.catalog.tableExists(t))
-          new scala.reflect.io.Directory(d).deleteRecursively()
-      }
+    val (ot, lt) = CorpusScope.persisted("bucketedJoin", spark, dir,
+        "orders", "lineitem") { a =>
+      val (ot, lt) = (a.table("g_bk_orders_"), a.table("g_bk_lines_"))
       val lo = to_timestamp_ntz(lit("1996-01-01 00:00:00"))
       val hi = to_timestamp_ntz(lit("1997-01-01 00:00:00"))
       // The two table writes are independent jobs — run them from two
@@ -1261,6 +1251,7 @@ object Relational {
         lt, "l_orderkey", 8)
       finally ordersWrite.join()
       if (ordersFailure.get() != null) throw ordersFailure.get()
+      (ot, lt)
     }
     spark.table(ot)
       .join(spark.table(lt),

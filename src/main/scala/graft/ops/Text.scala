@@ -486,17 +486,6 @@ object Text {
       .orderBy("token", "rk")
   }
 
-  /** Build-count diagnostic for the persisted BM25 postings index —
-    * spec-asserted one build across repeated serves. */
-  private[graft] val bm25IndexBuilds = new java.util.concurrent.atomic.AtomicInteger
-  // Replay ledger (per-call FS existence re-check), outside CorpusScope
-  // like the CC index; size visible via the registry's external probe.
-  private val bm25IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  CorpusScope.registerExternal("bm25Index", () => bm25IndexCache.size)
-
-  private lazy val bm25IndexRoot: java.io.File = processTempRoot("graft_bm25_")
-
   /** First md5 hex digit of a token — the postings layout's partition
     * key, computable identically driver-side (for pruning-set
     * derivation) and in Spark SQL (at write time). 16 partitions. */
@@ -514,40 +503,34 @@ object Text {
     * terms' slices — chosen over `bucketBy` because the planner
     * disables bucketed scans (and with them bucket pruning) when no
     * downstream operator needs the bucket distribution, while partition
-    * pruning is unconditional. Content-keyed, existence re-checked per
-    * call (the [[graft.ops.Dedup]] CC index discipline). */
+    * pruning is unconditional. Write-once per corpus content
+    * ([[CorpusScope.persisted]]). */
   private def ensureBm25Index(spark: SparkSession, dir: String): String =
-    bm25IndexCache.synchronized {
-      val key = dirContentKey(dir, "documents.parquet").take(12)
-      val path = new java.io.File(bm25IndexRoot, s"postings_$key").getPath
-      if (bm25IndexCache.get(dir) != path ||
-          !new java.io.File(path).exists()) {
-        bm25IndexBuilds.incrementAndGet()
-        val d = docs(spark, dir)
-        val dl = d.select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
-        val tf = d.select(col("doc_id"),
-            explode(split(col("text"), " ")).as("token"))
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        val dfx = tf.groupBy("token").agg(count(lit(1)).as("df"))
-        val tfd = col("tf").cast("double")
-        tf.join(dl, "doc_id")
-          .join(dfx, "token")
-          .crossJoin(broadcast(stats))
-          .withColumn("avgdl",
-            col("sum_dl").cast("double") / col("n").cast("double"))
-          .withColumn("idf", log(
-            (col("n").cast("double") - col("df").cast("double") + lit(0.5))
-              / (col("df").cast("double") + lit(0.5)) + lit(1.0)))
-          .select(col("token"), col("doc_id"), col("tf"),
-            r6(col("idf") * (tfd * lit(2.2))
-              / (tfd + lit(1.2) * (lit(0.25) + lit(0.75)
-                * (col("dl").cast("double") / col("avgdl"))))).as("score"),
-            substring(md5(col("token").cast("binary")), 1, 1).as("pt"))
-          .write.mode("overwrite").partitionBy("pt").parquet(path)
-        bm25IndexCache.put(dir, path)
-      }
+    CorpusScope.persisted("bm25Index", spark, dir, "documents") { a =>
+      val path = a.path("postings_")
+      val d = docs(spark, dir)
+      val dl = d.select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("dl"))
+      val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
+      val tf = d.select(col("doc_id"),
+          explode(split(col("text"), " ")).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+      val dfx = tf.groupBy("token").agg(count(lit(1)).as("df"))
+      val tfd = col("tf").cast("double")
+      tf.join(dl, "doc_id")
+        .join(dfx, "token")
+        .crossJoin(broadcast(stats))
+        .withColumn("avgdl",
+          col("sum_dl").cast("double") / col("n").cast("double"))
+        .withColumn("idf", log(
+          (col("n").cast("double") - col("df").cast("double") + lit(0.5))
+            / (col("df").cast("double") + lit(0.5)) + lit(1.0)))
+        .select(col("token"), col("doc_id"), col("tf"),
+          r6(col("idf") * (tfd * lit(2.2))
+            / (tfd + lit(1.2) * (lit(0.25) + lit(0.75)
+              * (col("dl").cast("double") / col("avgdl"))))).as("score"),
+          substring(md5(col("token").cast("binary")), 1, 1).as("pt"))
+        .write.mode("overwrite").partitionBy("pt").parquet(path)
       path
     }
 
@@ -603,12 +586,6 @@ object Text {
     servePostings(spark.read.schema(postingsSchema)
       .parquet(ensureBm25Index(spark, dir)))
 
-  private[graft] val bm25UpsertEncodes = new java.util.concurrent.atomic.AtomicInteger
-  private val bm25UpsertCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  CorpusScope.registerExternal("bm25Upsert", () => bm25UpsertCache.size)
-  private lazy val bm25UpsertRoot: java.io.File = processTempRoot("graft_bm25u_")
-
   /** INCREMENTAL BM25 index maintenance — ref A7's contract applied to
     * lexical search, the family's last member ([[graft.ops.Dedup]]
     * `dedup_index_probe`/`dedup_cc_incremental` for dedup,
@@ -627,59 +604,53 @@ object Text {
     * both document sets — so the gate verifies the documented
     * incremental semantics, not accidental full-rebuild equality. */
   def bm25Upsert(spark: SparkSession, dir: String): DataFrame = {
-    val unionPath = bm25UpsertCache.synchronized {
-      val key = dirContentKey(dir, "documents.parquet").take(12)
-      val path = new java.io.File(bm25UpsertRoot, s"upostings_$key").getPath
-      if (bm25UpsertCache.get(dir) != path ||
-          !new java.io.File(path).exists()) {
-        bm25UpsertEncodes.incrementAndGet()
-        // T0: standing build — postings + the frozen stats artifacts
-        val standing = docs(spark, dir).filter(col("doc_id") % 7 =!= 0)
-        val sDl = standing.select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("dl"))
-        val sStats = sDl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
-        val sTf = standing.select(col("doc_id"),
-            explode(split(col("text"), " ")).as("token"))
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        val sDfx = sTf.groupBy("token").agg(count(lit(1)).as("df"))
-        val statsPath = new java.io.File(bm25UpsertRoot, s"stats_$key").getPath
-        val dfxPath = new java.io.File(bm25UpsertRoot, s"dfx_$key").getPath
-        sStats.write.mode("overwrite").parquet(statsPath)
-        sDfx.write.mode("overwrite").parquet(dfxPath)
-        def scoreWith(tf: DataFrame, dl: DataFrame, stats: DataFrame,
-            dfx: DataFrame): DataFrame = {
-          val tfd = col("tf").cast("double")
-          tf.join(dl, "doc_id")
-            .join(dfx, Seq("token"), "left")
-            .na.fill(0L, Seq("df"))
-            .crossJoin(broadcast(stats))
-            .withColumn("avgdl",
-              col("sum_dl").cast("double") / col("n").cast("double"))
-            .withColumn("idf", log(
-              (col("n").cast("double") - col("df").cast("double") + lit(0.5))
-                / (col("df").cast("double") + lit(0.5)) + lit(1.0)))
-            .select(col("token"), col("doc_id"), col("tf"),
-              r6(col("idf") * (tfd * lit(2.2))
-                / (tfd + lit(1.2) * (lit(0.25) + lit(0.75)
-                  * (col("dl").cast("double") / col("avgdl"))))).as("score"),
-              substring(md5(col("token").cast("binary")), 1, 1).as("pt"))
-        }
-        scoreWith(sTf, sDl, sStats, sDfx)
-          .write.mode("overwrite").partitionBy("pt").parquet(path)
-        // T1: the batch arrives — scored with the PERSISTED stats (read
-        // back from disk: the serve-time contract is that upsert needs
-        // only the index artifacts), appended into the same layout
-        val batch = docs(spark, dir).filter(col("doc_id") % 7 === 0)
-        val bDl = batch.select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("dl"))
-        val bTf = batch.select(col("doc_id"),
-            explode(split(col("text"), " ")).as("token"))
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        scoreWith(bTf, bDl, spark.read.parquet(statsPath),
-            spark.read.parquet(dfxPath))
-          .write.mode("append").partitionBy("pt").parquet(path)
-        bm25UpsertCache.put(dir, path)
+    val unionPath = CorpusScope.persisted("bm25Upsert", spark, dir, "documents") { a =>
+      val path = a.path("upostings_")
+      // T0: standing build — postings + the frozen stats artifacts
+      val standing = docs(spark, dir).filter(col("doc_id") % 7 =!= 0)
+      val sDl = standing.select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("dl"))
+      val sStats = sDl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
+      val sTf = standing.select(col("doc_id"),
+          explode(split(col("text"), " ")).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+      val sDfx = sTf.groupBy("token").agg(count(lit(1)).as("df"))
+      val statsPath = a.path("stats_")
+      val dfxPath = a.path("dfx_")
+      sStats.write.mode("overwrite").parquet(statsPath)
+      sDfx.write.mode("overwrite").parquet(dfxPath)
+      def scoreWith(tf: DataFrame, dl: DataFrame, stats: DataFrame,
+          dfx: DataFrame): DataFrame = {
+        val tfd = col("tf").cast("double")
+        tf.join(dl, "doc_id")
+          .join(dfx, Seq("token"), "left")
+          .na.fill(0L, Seq("df"))
+          .crossJoin(broadcast(stats))
+          .withColumn("avgdl",
+            col("sum_dl").cast("double") / col("n").cast("double"))
+          .withColumn("idf", log(
+            (col("n").cast("double") - col("df").cast("double") + lit(0.5))
+              / (col("df").cast("double") + lit(0.5)) + lit(1.0)))
+          .select(col("token"), col("doc_id"), col("tf"),
+            r6(col("idf") * (tfd * lit(2.2))
+              / (tfd + lit(1.2) * (lit(0.25) + lit(0.75)
+                * (col("dl").cast("double") / col("avgdl"))))).as("score"),
+            substring(md5(col("token").cast("binary")), 1, 1).as("pt"))
       }
+      scoreWith(sTf, sDl, sStats, sDfx)
+        .write.mode("overwrite").partitionBy("pt").parquet(path)
+      // T1: the batch arrives — scored with the PERSISTED stats (read
+      // back from disk: the serve-time contract is that upsert needs
+      // only the index artifacts), appended into the same layout
+      val batch = docs(spark, dir).filter(col("doc_id") % 7 === 0)
+      val bDl = batch.select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("dl"))
+      val bTf = batch.select(col("doc_id"),
+          explode(split(col("text"), " ")).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+      scoreWith(bTf, bDl, spark.read.parquet(statsPath),
+          spark.read.parquet(dfxPath))
+        .write.mode("append").partitionBy("pt").parquet(path)
       path
     }
     servePostings(spark.read.schema(postingsSchema).parquet(unionPath))
@@ -1389,6 +1360,22 @@ object Text {
     (out.toSeq, corpus)
   }
 
+  /** Write-once persisted BPE-encoded corpus per input content — tokenizer
+    * BUILD/SERVE separation, same pattern as the persisted PQ/IVF
+    * indexes: training (the iterated merge loop) runs once and lands in
+    * a parquet layout; every serve-path call reads the layout and plans
+    * ZERO training jobs. In production this artifact is the published
+    * tokenizer output a 100 TB corpus is encoded against — retraining
+    * per query would be the bug. */
+  private def bpeEncodedLayout(spark: SparkSession, dir: String): String =
+    CorpusScope.persisted("bpe", spark, dir, "documents") { a =>
+      val out = a.path("d")
+      val (_, corpus) = bpeTrainLoop(spark, dir)
+      corpus.select(col("doc_id"), col("toks"))
+        .write.mode("overwrite").parquet(out)
+      out
+    }
+
   /** BPE ENCODING — the serving half of the tokenizer: apply the
     * [[bpeTrain]]-learned merge table to every document and report the
     * encoded token stream with its compression ratio. (With the merge
@@ -1402,29 +1389,6 @@ object Text {
     * pre-merge token counts. The oracle replays all [[BpeTrainRounds]]
     * rounds and reads the final tok CTE — any drift in ANY round's merge
     * shows up in the encoded text. */
-  private lazy val bpeRoot: java.io.File = Util.processTempRoot("graft_bpe_")
-
-  /** Write-once persisted BPE-encoded corpus per input dir — tokenizer
-    * BUILD/SERVE separation, same pattern as the persisted PQ/IVF
-    * indexes: training (the iterated merge loop) runs once and lands in
-    * a parquet layout; every serve-path call reads the layout and plans
-    * ZERO training jobs. In production this artifact is the published
-    * tokenizer output a 100 TB corpus is encoded against — retraining
-    * per query would be the bug. */
-  private def bpeEncodedLayout(spark: SparkSession, dir: String): String =
-    // Keyed on dir + documents.parquet (size, mtime), not the path alone:
-    // the encoded corpus depends on FULL corpus content, so a regenerated
-    // fixture at the same path must invalidate this cache (the
-    // pruneScratch layouts tolerate the path-only key; this one doesn't).
-    CorpusScope.cached("bpe", Util.dirContentKey(dir, "documents.parquet")) {
-      val d = dir
-      val out = new java.io.File(bpeRoot, "d" + Util.dirContentKey(d, "documents.parquet"))
-      val (_, corpus) = bpeTrainLoop(spark, d)
-      corpus.select(col("doc_id"), col("toks"))
-        .write.mode("overwrite").parquet(out.getPath)
-      out.getPath
-    }
-
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val corpus = spark.read.parquet(bpeEncodedLayout(spark, dir))
     val before = docs(spark, dir)

@@ -189,23 +189,16 @@ object Util {
           + CAST($ax % 1073741824 AS DOUBLE)) / $d)"""
   }
 
-  /** MD5 hex of a path string — the scratch-layout cache key shared by
-    * every per-input-dir write-once layout (partition-prune scratch,
-    * bucketed-table names). One definition so key derivation cannot
-    * drift between the caches. */
-  def dirKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** [[dirKey]] strengthened with the named table file's (size, mtime) —
-    * for write-once caches whose OUTPUT depends on full input content
-    * (the BPE-encoded corpus): a path-only key silently serves stale
-    * results if the file at that path is regenerated within one JVM's
-    * lifetime. File metadata catches regeneration without a data scan;
-    * a same-size same-mtime in-place rewrite is out of scope (parquet
-    * writers land new files). Directory-shaped tables (the usual shape
-    * a parquet write produces) are stamped by folding every part
-    * file's (name, size, mtime) into the key — a regenerated corpus
+  /** MD5 of `dir` and the named table file's (size, mtime) — the key of
+    * every cache whose OUTPUT depends on full input content (table
+    * metadata, persisted artifacts via [[CorpusScope.persisted]]): a
+    * path-only key silently serves stale results if the file at that
+    * path is regenerated within one JVM's lifetime. File metadata
+    * catches regeneration without a data scan; a same-size same-mtime
+    * in-place rewrite is out of scope (parquet writers land new files).
+    * Directory-shaped tables (the usual shape a parquet write produces)
+    * are stamped by folding every part file's (name, size, mtime) into
+    * the key — a regenerated corpus
     * lands new part names/mtimes, so the key rolls (the r13 ADVICE
     * gap: a directory previously degraded to the path-only key and a
     * regenerated corpus silently served stale cache entries). Falls
@@ -257,13 +250,11 @@ object Util {
     *     `sparkContext.setCheckpointDir` to durable storage) — survives
     *     executor loss, the cluster-grade choice at 100 TB.
     *
-    * Set `spark.graft.checkpointMode=reliable` (runtime conf) to switch;
-    * the fixpoints are asserted checkpoint-mode agnostic in CcSpec. */
+    * Set `spark.graft.checkpointMode=reliable` (runtime conf, the only
+    * switch) to select it; the fixpoints are asserted checkpoint-mode agnostic in CcSpec. */
   def iterCheckpoint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val mode = spark.conf.getOption("spark.graft.checkpointMode")
-      .getOrElse(sys.env.getOrElse("GRAFT_CHECKPOINT_MODE", "local"))
-    if (mode == "reliable") {
+    if (spark.conf.getOption("spark.graft.checkpointMode").contains("reliable")) {
       if (spark.sparkContext.getCheckpointDir.isEmpty)
         spark.sparkContext.setCheckpointDir(
           processTempRoot("graft_ckpt_").getAbsolutePath)

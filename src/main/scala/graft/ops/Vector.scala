@@ -751,34 +751,19 @@ object Vector {
       .orderBy("probe_id", "rk")
   }
 
-  /** Build-count diagnostic for the persisted-index cache — lets the spec
-    * assert the search side retrains NOTHING once the index exists. */
-  private[graft] val pqIndexBuilds = new java.util.concurrent.atomic.AtomicInteger
-
-  private lazy val pqIndexRoot: java.io.File = processTempRoot("graft_pqidx_")
-
   /** Ensure the persisted PQ index for `dir` exists; returns
-    * (codes table name, codebook parquet path). Write-once per input dir
-    * per JVM (the `pipe_partition_prune` scratch discipline): codes land
+    * (codes table name, codebook parquet path). Write-once per corpus
+    * content ([[CorpusScope.persisted]]): codes land
     * as a BUCKETED catalog table on vec_id via
     * [[graft.sources.TableSinks.writeBucketed]] — at serving scale the
     * ADC aggregate groups on (probe_id, vec_id), and a vec_id-hash layout
     * already satisfies that clustering, so the scan-side aggregation runs
     * with NO exchange; codebooks (128 rows) land as plain parquet. */
   private def ensurePqIndex(spark: SparkSession, dir: String): (String, String) =
-    CorpusScope.cached("pqIndex", dir) {
-      val d = dir
-      pqIndexBuilds.incrementAndGet()
-      val key = dirKey(d).take(12)
-      val codesTable = s"g_pq_codes_$key"
-      val cbPath = new java.io.File(pqIndexRoot, s"cb_$key").getPath
-      // orphaned managed-table location from a previous JVM — same
-      // discipline as join_bucketed_colocated
-      val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-      val tdir = new java.io.File(wh, codesTable)
-      if (tdir.exists() && !spark.catalog.tableExists(codesTable))
-        new scala.reflect.io.Directory(tdir).deleteRecursively()
-      val (codes, cents) = pqTrainEncode(spark, d)
+    CorpusScope.persisted("pqIndex", spark, dir, "embeddings") { a =>
+      val codesTable = a.table("g_pq_codes_")
+      val cbPath = a.path("cb_")
+      val (codes, cents) = pqTrainEncode(spark, dir)
       graft.sources.TableSinks.writeBucketed(codes, codesTable, "vec_id", 8)
       cents.write.mode("overwrite").parquet(cbPath)
       (codesTable, cbPath)
@@ -787,7 +772,7 @@ object Vector {
   /** PQ ANN with BUILD/SEARCH SEPARATION — the missing piece between
     * [[simsearchPq]] and a production vector-serving path: at 100 TB the
     * index is built once and served many times, never retrained inside a
-    * query. The build ([[ensurePqIndex]], write-once per input dir)
+    * query. The build ([[ensurePqIndex]], write-once per corpus)
     * persists the 8-byte-per-vector code table to a vec_id-bucketed
     * parquet layout and the codebooks beside it; the SEARCH side reads
     * only the persisted tables — zero Lloyd jobs, zero raw-embedding
@@ -798,13 +783,6 @@ object Vector {
     val (codesTable, cbPath) = ensurePqIndex(spark, dir)
     pqSearch(spark, dir, spark.table(codesTable), spark.read.parquet(cbPath))
   }
-
-  /** Build-count diagnostics for the incremental index: `pqUpsertBuilds`
-    * counts standing-index builds (Lloyd training), `pqUpsertEncodes`
-    * counts batch encode+append passes — the spec asserts both stay at 1
-    * across repeated serves (zero retraining, zero re-appends). */
-  private[graft] val pqUpsertBuilds = new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val pqUpsertEncodes = new java.util.concurrent.atomic.AtomicInteger
 
   /** The "new arrivals" slice for the incremental-index demonstration:
     * vec_id % 5 == 0 (~20%) is the batch, the rest is the standing
@@ -833,31 +811,23 @@ object Vector {
     * write, exactly [[ensurePqIndex]]'s machinery over the standing
     * slice), then UPSERT the batch — encode it with the persisted frozen
     * codebooks and APPEND to the bucketed code table. Write-once per
-    * input dir per JVM; the append lands bucketed files in the same
+    * corpus content; the append lands bucketed files in the same
     * vec_id-hash layout, so the serve-side ADC aggregation still runs
     * with no exchange. */
-  private def ensurePqUpsertIndex(spark: SparkSession, dir: String): (String, String) =
-    CorpusScope.cached("pqUpsert", dir) {
-      val d = dir
-      pqUpsertBuilds.incrementAndGet()
-      val key = dirKey(d).take(12)
-      val codesTable = s"g_pqu_codes_$key"
-      val cbPath = new java.io.File(pqIndexRoot, s"cbu_$key").getPath
-      val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-      val tdir = new java.io.File(wh, codesTable)
-      if (tdir.exists() && !spark.catalog.tableExists(codesTable))
-        new scala.reflect.io.Directory(tdir).deleteRecursively()
+  private[graft] def ensurePqUpsertIndex(spark: SparkSession, dir: String): (String, String) =
+    CorpusScope.persisted("pqUpsert", spark, dir, "embeddings") { a =>
+      val codesTable = a.table("g_pqu_codes_")
+      val cbPath = a.path("cbu_")
       // T0: standing-only build — train + encode + persist
       val (sCodes, cents) = pqTrainEncodeOver(spark,
-        embWithNrm(spark, d).filter(!upsertBatchPred))
+        embWithNrm(spark, dir).filter(!upsertBatchPred))
       graft.sources.TableSinks.writeBucketed(
         sCodes.select("vec_id", "sub", "code"), codesTable, "vec_id", 8)
       cents.write.mode("overwrite").parquet(cbPath)
       // T1: the batch arrives — encode with the PERSISTED codebooks (read
       // back from disk, not the in-memory frame: the serve-time contract
       // is that upsert needs only the index artifacts) and append.
-      pqUpsertEncodes.incrementAndGet()
-      pqUpsertBatchCodes(spark, d, spark.read.parquet(cbPath))
+      pqUpsertBatchCodes(spark, dir, spark.read.parquet(cbPath))
         .write.format("parquet").mode("append")
         .bucketBy(8, "vec_id").sortBy("vec_id")
         .saveAsTable(codesTable)
@@ -885,18 +855,6 @@ object Vector {
     pqSearch(spark, dir, spark.table(codesTable), spark.read.parquet(cbPath))
   }
 
-  /** Persisted-codebook path of the incremental index (after at least one
-    * [[simsearchIndexUpsert]] call) — spec hook for plan-shape assertions
-    * on the batch-encode path. */
-  private[graft] def pqUpsertCodebookPath(dir: String): Option[String] =
-    CorpusScope.peek[(String, String)]("pqUpsert", dir).map(_._2)
-
-  /** Build-count diagnostic for the persisted IVF index — spec-asserted
-    * zero rebuilds on the serve path, as with [[pqIndexBuilds]]. */
-  private[graft] val ivfIndexBuilds = new java.util.concurrent.atomic.AtomicInteger
-
-  private lazy val ivfIndexRoot: java.io.File = processTempRoot("graft_ivfidx_")
-
   /** Ensure the persisted IVF index for `dir`: the Lloyd-trained corpus
     * assignment written as a parquet layout PARTITIONED BY cell (the
     * inverted file — each cell is a directory, so a probe's `cell IN`
@@ -904,16 +862,13 @@ object Vector {
     * probe set beside those — probe selection at serve time reads this
     * 10-row table, NOT the corpus, so the only corpus scan in a serve
     * plan is the partition-pruned scoring scan.
-    * Write-once per input dir per JVM. */
+    * Write-once per corpus content. */
   private def ensureIvfIndex(spark: SparkSession, dir: String): (String, String, String) =
-    CorpusScope.cached("ivfIndex", dir) {
-      val d = dir
-      ivfIndexBuilds.incrementAndGet()
-      val key = dirKey(d).take(12)
-      val corpusPath = new java.io.File(ivfIndexRoot, s"cells_$key").getPath
-      val centPath = new java.io.File(ivfIndexRoot, s"cent_$key").getPath
-      val probePath = new java.io.File(ivfIndexRoot, s"probes_$key").getPath
-      val (assigned, cents) = ivfTrainAssignCached(spark, d)
+    CorpusScope.persisted("ivfIndex", spark, dir, "embeddings") { a =>
+      val corpusPath = a.path("cells_")
+      val centPath = a.path("cent_")
+      val probePath = a.path("probes_")
+      val (assigned, cents) = ivfTrainAssignCached(spark, dir)
       assigned.write.mode("overwrite").partitionBy("cell").parquet(corpusPath)
       cents.write.mode("overwrite").parquet(centPath)
       ivfProbes(assigned).write.mode("overwrite").parquet(probePath)
@@ -939,12 +894,6 @@ object Vector {
     ivfServe(corpus, spark.read.parquet(probePath),
       spark.read.parquet(centPath), NProbe, prune = true)
   }
-
-  /** Build/assign-count diagnostics for the incremental IVF index —
-    * the spec asserts both stay at 1 across repeated serves (zero
-    * retraining, zero re-assignment of the batch). */
-  private[graft] val ivfUpsertBuilds = new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val ivfUpsertAssigns = new java.util.concurrent.atomic.AtomicInteger
 
   /** The "new arrivals" slice for the IVF incremental index — a modulus
     * distinct from the PQ upsert's %5 and dedup's %7 so the three
@@ -973,17 +922,15 @@ object Vector {
     * and APPENDED into the same cell-partitioned layout, so serve-side
     * partition pruning sees one unified inverted file. The persisted
     * probe table is refreshed from (standing probes ∪ batch) — a 10-row
-    * merge that never rescans standing vectors. Write-once per dir. */
-  private def ensureIvfUpsertIndex(spark: SparkSession, dir: String): (String, String, String) =
-    CorpusScope.cached("ivfUpsert", dir) {
-      val d = dir
-      ivfUpsertBuilds.incrementAndGet()
-      val key = dirKey(d).take(12)
-      val corpusPath = new java.io.File(ivfIndexRoot, s"cells_u_$key").getPath
-      val centPath = new java.io.File(ivfIndexRoot, s"cent_u_$key").getPath
-      val probePath = new java.io.File(ivfIndexRoot, s"probes_u_$key").getPath
+    * merge that never rescans standing vectors. Write-once per corpus. */
+  private[graft] def ensureIvfUpsertIndex(
+      spark: SparkSession, dir: String): (String, String, String) =
+    CorpusScope.persisted("ivfUpsert", spark, dir, "embeddings") { a =>
+      val corpusPath = a.path("cells_u_")
+      val centPath = a.path("cent_u_")
+      val probePath = a.path("probes_u_")
       // T0: standing-only build — train + assign + persist.
-      val eStanding = emb(spark, d).filter(!ivfBatchPred)
+      val eStanding = emb(spark, dir).filter(!ivfBatchPred)
         .select(col("vec_id"), col("embedding"), l2(col("embedding")).as("nrm"))
         .transform(iterCheckpoint)
       val cents = ivfTrainOver(spark, eStanding)
@@ -993,9 +940,8 @@ object Vector {
       ivfProbes(standingAssigned).write.mode("overwrite").parquet(probePath)
       // T1: the batch arrives — assign with the PERSISTED centroids and
       // append into the cell-partitioned layout.
-      ivfUpsertAssigns.incrementAndGet()
       val batchAssigned = iterCheckpoint(
-        ivfUpsertBatchAssign(spark, d, spark.read.parquet(centPath)))
+        ivfUpsertBatchAssign(spark, dir, spark.read.parquet(centPath)))
       batchAssigned.write.mode("append").partitionBy("cell").parquet(corpusPath)
       // Probe refresh: 10 lowest vec_ids of (standing probes ∪ batch) ==
       // the union corpus's 10 lowest, computed WITHOUT a standing rescan.
@@ -1036,12 +982,6 @@ object Vector {
     ivfServe(corpus, spark.read.parquet(probePath),
       spark.read.parquet(centPath), NProbe, prune = true)
   }
-
-  /** Persisted-centroid path of the incremental IVF index (after at
-    * least one [[simsearchIvfUpsert]] call) — spec hook for plan-shape
-    * assertions on the batch-assign path. */
-  private[graft] def ivfUpsertCentPath(dir: String): Option[String] =
-    CorpusScope.peek[(String, String, String)]("ivfUpsert", dir).map(_._2)
 
   /** Multimodal frame sampling — the video/audio access pattern over an
     * opaque binary payload: k evenly-spaced fixed-length "frames" per

@@ -168,11 +168,11 @@ class CcSpec extends AnyFunSuite with SparkFixture {
 
   test("incremental cc: standing index builds once across repeated serves") {
     val dir = "/root/testdata/sf0.001"
-    val before = Dedup.ccIndexBuilds.get()
+    val before = CorpusScope.builds("ccIndex")
     val a = Dedup.ccIncremental(spark, dir).collect()
-    val mid = Dedup.ccIndexBuilds.get()
+    val mid = CorpusScope.builds("ccIndex")
     val b = Dedup.ccIncremental(spark, dir).collect()
-    assert(Dedup.ccIndexBuilds.get() == mid && mid <= before + 1,
+    assert(CorpusScope.builds("ccIndex") == mid && mid <= before + 1,
       "second serve must reuse the persisted standing labels/buckets")
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq,
       "serves must be deterministic")

@@ -60,4 +60,15 @@ class CorpusScopeSpec extends AnyFunSuite {
     assert(CorpusScope.peek[String]("spec_drop_a", "k").isEmpty)
     assert(CorpusScope.peek[String]("spec_drop_b", "k").contains("b"))
   }
+
+  test("statsString: every token is name=<current>/<peak> with integers") {
+    // perfbench's scopeResident sums the current counts it parses from
+    // here; initialising the operator objects brings in anything they
+    // register at load time
+    assert(graft.ops.Dedup.queries.nonEmpty && graft.ops.Text.queries.nonEmpty)
+    CorpusScope.cached("spec_fmt", "k")("v")
+    val st = CorpusScope.statsString
+    st.split(" ").foreach(kv => assert(kv.matches("""[^=\s]+=\d+/\d+"""), st))
+    assert(st.contains("spec_fmt=1/1"), st)
+  }
 }

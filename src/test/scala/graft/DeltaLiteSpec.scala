@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.ops.PipelineOps
+import graft.ops.{CorpusScope, PipelineOps}
 import graft.sources.DeltaLite
 import graft.sources.DeltaLite.Action
 
@@ -13,8 +13,7 @@ import graft.sources.DeltaLite.Action
 class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft-dlite").toFile.getAbsolutePath
+  private def freshTable(): String = tempDir("graft-dlite")
 
   private def writeRows(dir: String, name: String, ids: Seq[Long]): Long = {
     val df = ids.toDF("id")
@@ -148,7 +147,7 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
     ms.addData(10L, 11L, 12L)
     val t2 = freshTable()
     val q = DeltaSink.start(ms.toDS().toDF("id"), t2,
-      java.nio.file.Files.createTempDirectory("graft-dsink-ckpt").toString)
+      tempDir("graft-dsink-ckpt"))
     q.awaitTermination()
     assert(DeltaLite.snapshot(spark, t2).as[Long].collect().toSet
       == Set(10L, 11L, 12L))
@@ -160,9 +159,9 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
       new Timestamp(base + i * 3600000L), i % 3, "view", 1.5, "{}"))
     val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
     PipelineOps.queries("pipe_delta_log")(spark, dir).collect()
-    val builds = PipelineOps.deltaBuilds.get
+    val builds = CorpusScope.builds("deltaScratch")
     val out = PipelineOps.queries("pipe_delta_log")(spark, dir).collect()
-    assert(PipelineOps.deltaBuilds.get == builds, "second read rebuilt the table")
+    assert(CorpusScope.builds("deltaScratch") == builds, "second read rebuilt the table")
     // v1 sees slices A+B (event_id % 3 in {0,1}: 20 rows), v4 everything
     val byVersion = out.groupBy(_.getAs[Long]("version"))
     assert(byVersion(1L).map(_.getAs[Long]("n")).sum == 20)

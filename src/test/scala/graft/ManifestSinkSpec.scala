@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 import graft.sources.{Manifest, TableSinks}
@@ -24,7 +23,7 @@ class ManifestSinkSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compaction collapses a many-small-files directory, content intact") {
-    val base = Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact")
     val in = s"$base/in"; val out = s"$base/out"
     // 24 rows scattered across 24 files — the streaming-sink accretion shape
     (1 to 24).map(i => EventRow(i.toLong, ts("2024-01-01 10:00:00"), 1, "click", i.toDouble, "{}"))
@@ -43,7 +42,7 @@ class ManifestSinkSpec extends AnyFunSuite with SparkFixture {
     val events = (1 to 48).map { i =>
       EventRow(i.toLong, ts(f"2024-01-${i % 4 + 1}%02d 10:00:00"), 1, "click", 1.0, "{}")
     }
-    val out = Files.createTempDirectory("graft-sink").toString + "/events"
+    val out = tempDir("graft-sink") + "/events"
     TableSinks.writeDatePartitioned(events.toDF, "ts", out, Seq("event_id"))
     val back = TableSinks.readDatePartitioned(spark, out)
       .filter(col("p_date") === "2024-01-02")
@@ -60,7 +59,7 @@ class ManifestSinkSpec extends AnyFunSuite with SparkFixture {
   test("dynamic partition overwrite replaces only the incoming day") {
     def ev(id: Long, day: Int, v: Double) =
       EventRow(id, ts(f"2024-01-$day%02d 10:00:00"), 1, "click", v, "{}")
-    val out = Files.createTempDirectory("graft-dyn").toString + "/events"
+    val out = tempDir("graft-dyn") + "/events"
     // initial load: days 1, 2, 3
     TableSinks.overwriteDatePartitions(
       Seq(ev(1, 1, 1.0), ev(2, 2, 2.0), ev(3, 3, 3.0)).toDF, "ts", out)
@@ -76,7 +75,7 @@ class ManifestSinkSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("mergeSchema read unions evolved schemas, old files read NULL for new columns") {
-    val base = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val base = tempDir("graft-evolve") + "/t"
     // v1 files: (id, a)
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .write.mode("append").parquet(base)

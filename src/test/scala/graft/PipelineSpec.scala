@@ -20,12 +20,12 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   private def mkFixture(): (String, String) = {
-    val dir = Files.createTempDirectory("graft-manifest").toString
+    val dir = tempDir("graft-manifest")
     Seq("snap_2024-01-01.zip", "snap_2024-01-03.zip", "snap_2024-01-02.zip",
       "notes.txt", "snap_2024-01-04.bak").foreach { n =>
       Files.write(Paths.get(dir, n), "x".getBytes)
     }
-    (dir, Files.createTempDirectory("graft-state").toString + "/state")
+    (dir, tempDir("graft-state") + "/state")
   }
 
   test("picks the lexicographically-latest matching artifact (A4+A6)") {
@@ -67,8 +67,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("empty manifest dir short-circuits (A5 guard)") {
-    val empty = Files.createTempDirectory("graft-empty").toString
-    val state = Files.createTempDirectory("graft-state2").toString + "/state"
+    val empty = tempDir("graft-empty")
+    val state = tempDir("graft-state2") + "/state"
     val p = new IngestPipeline(PipelineConfig(empty, state), new RecordingSink)
     assert(p.run(spark).isEmpty)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, PipelineOps, Relational, StreamingModel, Vector}
+import graft.ops.{CorpusScope, Dedup, PipelineOps, Relational, StreamingModel, Vector}
 import graft.pipeline.{IngestPipeline, PipelineConfig}
 import graft.plans.{CollectSortExec, CollectSortStrategy}
 
@@ -79,13 +79,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val w = df.coalesce(1)
     val wp = plan(w)
     assert(wp.contains("rangepartitioning") && !wp.contains("CollectSort"), wp)
-    val out = java.nio.file.Files.createTempDirectory("graft-collect-sort").toString + "/o"
+    val out = tempDir("graft-collect-sort") + "/o"
     w.write.parquet(out)
     assert(spark.read.parquet(out).collect().toSeq == rows.toSeq)
   }
 
   test("collected sort: ETL latest-artifact choice stays TakeOrderedAndProject") {
-    val m = java.nio.file.Files.createTempDirectory("graft-manifest")
+    val m = java.nio.file.Paths.get(tempDir("graft-manifest"))
     Seq("snap_2024-01-01.zip", "snap_2024-01-02.zip", "notes.txt")
       .foreach(n => java.nio.file.Files.write(m.resolve(n), "x".getBytes))
     val p = plan(new IngestPipeline(PipelineConfig(m.toString, s"$m/state"), (_, _) => ())
@@ -444,9 +444,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // must scan the persisted bucketed code table, not raw embeddings,
     // for the ADC stage.
     Vector.simsearchPqIndex(spark, dir).collect()
-    val builds = Vector.pqIndexBuilds.get
+    val builds = CorpusScope.builds("pqIndex")
     val df = Vector.simsearchPqIndex(spark, dir)
-    assert(Vector.pqIndexBuilds.get == builds,
+    assert(CorpusScope.builds("pqIndex") == builds,
       "second construction re-entered the index build (retraining)")
     val p = plan(df)
     assert(p.contains("g_pq_codes_"),
@@ -494,13 +494,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("simsearch_index_upsert: upsert encodes only the batch, serve retrains nothing") {
     // First call builds the standing index + appends the batch's codes.
     Vector.simsearchIndexUpsert(spark, dir).collect()
-    val builds = Vector.pqUpsertBuilds.get
-    val encodes = Vector.pqUpsertEncodes.get
+    // one build covers the standing train+encode AND the batch
+    // encode+append, so an unchanged count rules out both
+    val builds = CorpusScope.builds("pqUpsert")
     val df = Vector.simsearchIndexUpsert(spark, dir)
-    assert(Vector.pqUpsertBuilds.get == builds,
-      "second construction re-entered the standing-index build (retraining)")
-    assert(Vector.pqUpsertEncodes.get == encodes,
-      "second construction re-ran the batch encode+append")
+    assert(CorpusScope.builds("pqUpsert") == builds,
+      "second construction re-entered the standing build or the batch encode+append")
     val p = plan(df)
     assert(p.contains("g_pqu_codes_"),
       s"serve does not scan the persisted+appended code table:\n$p")
@@ -508,7 +507,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // one broadcast join + argmin agg, no iteration), and it must touch
     // ONLY the batch slice of the raw embeddings — the vec_id % 5 = 0
     // predicate reaches the scan — and never the standing code table.
-    val cbs = spark.read.parquet(Vector.pqUpsertCodebookPath(dir).get)
+    val cbs = spark.read.parquet(Vector.ensurePqUpsertIndex(spark, dir)._2)
     val bp = plan(Vector.pqUpsertBatchCodes(spark, dir, cbs))
     assert(!bp.contains("g_pqu_codes_"),
       s"batch encode rescans the standing code table:\n$bp")
@@ -521,9 +520,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   test("simsearch_ivf_index: serve retrains nothing and partition-prunes to the probed cells") {
     Vector.simsearchIvfIndex(spark, dir).collect()
-    val builds = Vector.ivfIndexBuilds.get
+    val builds = CorpusScope.builds("ivfIndex")
     val df = Vector.simsearchIvfIndex(spark, dir)
-    assert(Vector.ivfIndexBuilds.get == builds,
+    assert(CorpusScope.builds("ivfIndex") == builds,
       "second construction re-entered the index build (retraining)")
     val p = plan(df)
     assert(p.contains("cells_"),
@@ -548,13 +547,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("simsearch_ivf_upsert: upsert assigns only the batch, serve retrains nothing") {
     // First call builds the standing index + appends the batch's cells.
     Vector.simsearchIvfUpsert(spark, dir).collect()
-    val builds = Vector.ivfUpsertBuilds.get
-    val assigns = Vector.ivfUpsertAssigns.get
+    // one build covers the standing train+assign AND the batch
+    // assign+append, so an unchanged count rules out both
+    val builds = CorpusScope.builds("ivfUpsert")
     val df = Vector.simsearchIvfUpsert(spark, dir)
-    assert(Vector.ivfUpsertBuilds.get == builds,
-      "second construction re-entered the standing-index build (retraining)")
-    assert(Vector.ivfUpsertAssigns.get == assigns,
-      "second construction re-ran the batch assign+append")
+    assert(CorpusScope.builds("ivfUpsert") == builds,
+      "second construction re-entered the standing build or the batch assign+append")
     val p = plan(df)
     assert(p.contains("cells_u_"),
       s"serve does not scan the persisted+appended cell layout:\n$p")
@@ -570,7 +568,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // broadcast of the 16-row centroid table + argmax agg, no iteration),
     // and it must touch ONLY the batch slice of the raw embeddings —
     // never the standing cell layout.
-    val cents = spark.read.parquet(Vector.ivfUpsertCentPath(dir).get)
+    val cents = spark.read.parquet(Vector.ensureIvfUpsertIndex(spark, dir)._2)
     val bp = plan(Vector.ivfUpsertBatchAssign(spark, dir, cents))
     assert(!bp.contains("cells_u_"),
       s"batch assign rescans the standing cell layout:\n$bp")
@@ -586,9 +584,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // the build zero times and the probe plan must scan the persisted
     // hash/bucket/set tables — the standing corpus is never re-signed.
     Dedup.indexProbe(spark, dir).collect()
-    val builds = Dedup.dedupIndexBuilds.get
+    val builds = CorpusScope.builds("dedupIndex")
     val df = Dedup.indexProbe(spark, dir)
-    assert(Dedup.dedupIndexBuilds.get == builds,
+    assert(CorpusScope.builds("dedupIndex") == builds,
       "second construction re-entered the index build (re-signing)")
     val p = plan(df)
     Seq("shash_", "sbkt_", "ssets_").foreach { t =>
@@ -873,7 +871,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val eventScans = "events\\.parquet".r.findAllIn(p).length
     assert(eventScans == 1,
       s"expected exactly one raw-events scan (the batch), got $eventScans:\n$p")
-    assert(p.contains("graft_mv_"), s"persisted MV not read:\n$p")
+    assert(p.contains("/mv_"), s"persisted MV not read:\n$p")
   }
 
   test("events_ab_ttest: sufficient statistics aggregate partially map-side") {
@@ -920,7 +918,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"unexpected documents scan count ($docScans):\n$p")
     assert(p.contains("g_ccbkt_"),
       s"probe must read the persisted bucketed standing buckets:\n$p")
-    assert(p.contains("graft_ccidx_"),
+    assert(p.contains("cclbl_"),
       s"probe must read the persisted standing labels:\n$p")
   }
 

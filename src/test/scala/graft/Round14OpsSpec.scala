@@ -118,7 +118,7 @@ class Round14OpsSpec extends AnyFunSuite with SparkFixture {
 
   test("IdempotentSink suppresses a re-delivered batchId end-to-end") {
     import graft.streaming.IdempotentSink
-    val root = java.nio.file.Files.createTempDirectory("graft_eos_").toString
+    val root = tempDir("graft_eos_")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     assert(IdempotentSink.processBatch(df, 7L, root), "first delivery must commit")
     assert(!IdempotentSink.processBatch(df, 7L, root), "re-delivery must be skipped")
@@ -129,7 +129,7 @@ class Round14OpsSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Long]
-    val ckp = java.nio.file.Files.createTempDirectory("graft_eos_ckp_").toString
+    val ckp = tempDir("graft_eos_ckp_")
     val q = IdempotentSink.attach(ms.toDF.toDF("id"), root + "/live", ckp)
     try {
       ms.addData(1L, 2L); q.processAllAvailable()

@@ -21,7 +21,7 @@ class Round15OpsSpec extends AnyFunSuite with SparkFixture {
     // parquet write), and the marker still carries the correct count
     // (read back from the written files' footers, not the plan).
     import graft.streaming.IdempotentSink
-    val root = java.nio.file.Files.createTempDirectory("graft_eos1x_").toString
+    val root = tempDir("graft_eos1x_")
     val acc = spark.sparkContext.longAccumulator("epoch_rows_executed")
     val df = spark.range(0, 100, 1, 4)
       .map { x => acc.add(1); x }

@@ -18,7 +18,7 @@ class Round16OpsSpec extends AnyFunSuite with SparkFixture {
     import graft.streaming.{ConditionalPutCommit, IdempotentSink, MockConditionalPutStore}
     val store = new MockConditionalPutStore
     val markers = new ConditionalPutCommit(store)
-    val root = java.nio.file.Files.createTempDirectory("graft_cput_").toString
+    val root = tempDir("graft_cput_")
     val df = spark.range(0, 50, 1, 2).toDF("id")
 
     // first delivery commits through the store: exactly one create
@@ -59,7 +59,7 @@ class Round16OpsSpec extends AnyFunSuite with SparkFixture {
 
   test("filesystem markers still pass the same protocol surface through the seam") {
     import graft.streaming.{AtomicRenameCommit, IdempotentSink}
-    val root = java.nio.file.Files.createTempDirectory("graft_fsmk_").toString
+    val root = tempDir("graft_fsmk_")
     val df = spark.range(0, 20, 1, 2).toDF("id")
     assert(IdempotentSink.processBatch(df, 5L, root, AtomicRenameCommit))
     assert(!IdempotentSink.processBatch(df, 5L, root, AtomicRenameCommit))
@@ -279,7 +279,7 @@ class Round16OpsSpec extends AnyFunSuite with SparkFixture {
           .as("s"), // nulls every 10th row
         (col("id") * 2).cast("double").as("d"),
         (col("id") % 2 === 0).as("b"))
-    val out = java.nio.file.Files.createTempDirectory("graft_avro_").toString
+    val out = tempDir("graft_avro_")
     graft.sources.AvroFiles.writeAvro(df, out)
     assert(new java.io.File(out).listFiles()
       .count(_.getName.endsWith(".avro")) == 3,

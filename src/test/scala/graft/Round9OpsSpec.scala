@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.prop.TableDrivenPropertyChecks
-import graft.ops.{Relational, Text}
+import graft.ops.{CorpusScope, Relational, Text}
 
 /** Targeted edge/property tests for the round-9 operators — the cases
   * the fixture-scale DuckDB gate never exercises. */
@@ -849,9 +849,9 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
       doc(2L, "join alpha beta gamma delta filter"),
       doc(3L, "alpha beta gamma delta epsilon zeta"))
     val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val before = Text.bm25IndexBuilds.get()
+    val before = CorpusScope.builds("bm25Index")
     val served = Text.bm25IndexServe(spark, dir).collect()
-    assert(Text.bm25IndexBuilds.get() == before + 1)
+    assert(CorpusScope.builds("bm25Index") == before + 1)
     assert(served.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 2L),
       s"rank order wrong: ${served.mkString(",")}")
     // cross-check against the non-indexed operator: per-doc sum of the
@@ -864,7 +864,7 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
         s"served score diverges from corpus-computed for doc ${r.getAs[Long]("doc_id")}")
     }
     val again = Text.bm25IndexServe(spark, dir).collect()
-    assert(Text.bm25IndexBuilds.get() == before + 1, "second serve rebuilt the index")
+    assert(CorpusScope.builds("bm25Index") == before + 1, "second serve rebuilt the index")
     assert(again.map(_.toString).toSeq == served.map(_.toString).toSeq)
   }
 
@@ -877,16 +877,16 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
       doc(2L, "alpha beta gamma delta"),
       doc(14L, "join join alpha beta"))
     val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val before = Text.bm25UpsertEncodes.get()
+    val before = CorpusScope.builds("bm25Upsert")
     val out = Text.bm25Upsert(spark, dir).collect()
-    assert(Text.bm25UpsertEncodes.get() == before + 1)
+    assert(CorpusScope.builds("bm25Upsert") == before + 1)
     val ranked = out.map(r => (r.getAs[Long]("rk"), r.getAs[Long]("doc_id")))
     assert(ranked.map(_._2).toSeq == Seq(14L, 1L),
       s"frozen-stats ranking wrong: ${ranked.mkString(",")}")
     // idf is frozen on STANDING df ('join' df=1 of n=2) for BOTH docs:
     // the batch doc's occurrences change tf only, not idf
     val again = Text.bm25Upsert(spark, dir).collect()
-    assert(Text.bm25UpsertEncodes.get() == before + 1, "second serve re-encoded")
+    assert(CorpusScope.builds("bm25Upsert") == before + 1, "second serve re-encoded")
     assert(again.map(_.toString).toSeq == out.map(_.toString).toSeq)
   }
 

@@ -50,7 +50,7 @@ class SessionStateSpec extends AnyFunSuite with SparkFixture {
     Relational.windowTopkRewrite(spark, dir).collect()
     SqlSurface.sqlDotProduct(spark, dir).collect()
     Relational.joinBloomPrefilter(spark, dir).collect()
-    val out = Files.createTempDirectory("graft-session-state").toString + "/ev"
+    val out = tempDir("graft-session-state") + "/ev"
     graft.sources.TableSinks.overwriteDatePartitions(
       Util.table(spark, dir, "events"), "ts", out)
     assert(state(spark) == before)

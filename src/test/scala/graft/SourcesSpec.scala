@@ -21,7 +21,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("zip source explodes entries across archives with exact contents") {
-    val dir = Files.createTempDirectory("graft-zips").toString
+    val dir = tempDir("graft-zips")
     writeZip(dir, "a.zip", "db_2024-01-01.bak" -> "payload-a", "readme.txt" -> "meta")
     writeZip(dir, "b.zip", "db_2024-01-02.bak" -> "payload-bb")
     Files.write(java.nio.file.Paths.get(dir, "noise.txt"), "x".getBytes) // glob-filtered out
@@ -33,7 +33,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("DSv2 zip connector matches the binaryFile reader row-for-row") {
-    val dir = Files.createTempDirectory("graft-zipv2").toString
+    val dir = tempDir("graft-zipv2")
     writeZip(dir, "a.zip", "db_2024-01-01.bak" -> "payload-a", "readme.txt" -> "meta")
     writeZip(dir, "b.zip", "db_2024-01-02.bak" -> "payload-bb")
     val v2 = spark.read.format("graft.sources.ZipEntriesSource").load(dir)
@@ -48,7 +48,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("DSv2 zip connector prunes content and pushes name filters into the scan") {
-    val dir = Files.createTempDirectory("graft-zipv2p").toString
+    val dir = tempDir("graft-zipv2p")
     writeZip(dir, "a.zip", "db_2024-01-01.bak" -> "payload-a", "readme.txt" -> "meta")
     writeZip(dir, "b.zip", "db_2024-01-09.bak" -> "payload-bb")
     val manifest = spark.read.format("graft.sources.ZipEntriesSource").load(dir)
@@ -69,7 +69,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("DSv2 zip connector reports statistics: manifest side broadcasts in a join") {
-    val dir = Files.createTempDirectory("graft-zipv2s").toString
+    val dir = tempDir("graft-zipv2s")
     writeZip(dir, "a.zip", "db_2024-01-01.bak" -> "payload-a")
     writeZip(dir, "b.zip", "db_2024-01-09.bak" -> "payload-bb")
     val manifest = spark.read.format("graft.sources.ZipEntriesSource").load(dir)
@@ -84,7 +84,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("latest matching entry is the deterministic max, not last-wins (ref A10 fix)") {
-    val dir = Files.createTempDirectory("graft-zips2").toString
+    val dir = tempDir("graft-zips2")
     writeZip(dir, "a.zip", "db_2024-01-03.bak" -> "x", "db_2024-01-09.bak" -> "y",
       "db_2024-01-05.bak" -> "z", "notes.txt" -> "n")
     val r = ZipArchives.latestEntryMatching(spark, dir, ".bak").collect()
@@ -136,7 +136,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
 
   test("DSv2 zip connector: archive-only predicates prune input partitions at planning") {
     import org.apache.spark.sql.sources.{EqualTo, StringStartsWith}
-    val dir = Files.createTempDirectory("graft-zips-prune").toString
+    val dir = tempDir("graft-zips-prune")
     writeZip(dir, "a.zip", "x.bak" -> "payload")
     writeZip(dir, "b.zip", "y.bak" -> "payload")
     def partitions(filters: Array[org.apache.spark.sql.sources.Filter]) =

@@ -23,6 +23,13 @@ case class EmbRow(vec_id: Long, embedding: Array[Float], label: Int)
 case class JobTrace(jobs: Int, tasks: Int, shuffleWriteBytes: Long)
 
 object TestSpark {
+  /** Parent of every directory a spec makes, removed on JVM exit. */
+  private lazy val tmpRoot = graft.ops.Util.processTempRoot("graft-test")
+
+  /** A fresh directory under [[tmpRoot]]. */
+  def tempDir(prefix: String): String =
+    Files.createTempDirectory(tmpRoot.toPath, prefix).toString
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
@@ -30,8 +37,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // keep saveAsTable (bucketed-join spec) out of the repo working dir
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft-warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -43,11 +49,13 @@ trait SparkFixture {
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  def tempDir(prefix: String): String = TestSpark.tempDir(prefix)
+
   /** Write the given tables as `<tmpdir>/<name>.parquet` and return the dir —
     * the same layout the declared queries read, so edge-case fixtures run
     * through the exact production code path. */
   def fixtureDir(tables: (String, DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft-fixture").toFile.getAbsolutePath
+    val dir = tempDir("graft-fixture")
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

@@ -91,8 +91,8 @@ class StreamingDemoSpec extends AnyFunSuite with SparkFixture {
   test("foreachBatch lake sink: epoch dirs land rows once, checkpoint resume adds nothing") {
     import graft.streaming.LakeSink
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-lake-out").toString
-    val ckp = java.nio.file.Files.createTempDirectory("graft-lake-ckp").toString
+    val out = tempDir("graft-lake-out")
+    val ckp = tempDir("graft-lake-ckp")
     val ms = MemoryStream[(Long, String)]
     ms.addData((1L, "a"), (2L, "b"))
     LakeSink.start(ms.toDF.toDF("id", "v"), out, ckp).awaitTermination()

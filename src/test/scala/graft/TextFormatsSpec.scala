@@ -13,7 +13,7 @@ class TextFormatsSpec extends AnyFunSuite with SparkFixture {
     .add("id", LongType).add("name", StringType)
 
   test("csv round-trip preserves rows; malformed rows land in the corrupt column") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv")
     val out = s"$dir/t.csv"
     TextFormats.writeCsv(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), out)
     // append a malformed file alongside
@@ -29,7 +29,7 @@ class TextFormatsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("orc round-trip preserves rows and pushes filters like parquet") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/t.orc"
+    val dir = tempDir("graft-orc") + "/t.orc"
     TextFormats.writeOrc((1L to 50L).map(i => (i, s"n$i")).toDF("id", "name"), dir)
     val back = TextFormats.readOrc(spark, dir).filter(col("id") > 45L)
     assert(back.count() == 5)
@@ -39,7 +39,7 @@ class TextFormatsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("json-lines round-trip with explicit schema (no inference pass)") {
-    val dir = Files.createTempDirectory("graft-json").toString + "/t.json"
+    val dir = tempDir("graft-json") + "/t.json"
     TextFormats.writeJsonLines(Seq((7L, "x")).toDF("id", "name"), dir)
     val back = TextFormats.readJsonLines(spark, dir, schema)
       .select("id", "name").collect()
