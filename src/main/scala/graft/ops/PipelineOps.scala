@@ -79,14 +79,16 @@ object PipelineOps {
 
   /** Write-once date-partitioned scratch layout of `events`, shared by
     * the static ([[partitionPrune]]) and dynamic ([[joinPruneDynamic]])
-    * pruning queries. */
-  private def pruneLayout(spark: SparkSession, dir: String): String =
-    CorpusScope.persisted("pruneScratch", spark, dir, "events") { a =>
-      val out = a.path("d")
-      graft.sources.TableSinks.writeDatePartitioned(
-        table(spark, dir, "events"), "ts", out, Seq("event_id"))
-      out
-    }
+    * pruning queries, read back with the schema it was written with. */
+  private def pruneLayout(spark: SparkSession, dir: String): DataFrame = {
+    val (out, schema) =
+      CorpusScope.persisted("pruneScratch", spark, dir, "events") { a =>
+        val out = a.path("d")
+        out -> graft.sources.TableSinks.writeDatePartitioned(
+          table(spark, dir, "events"), "ts", out, Seq("event_id"))
+      }
+    graft.sources.TableSinks.readDatePartitioned(spark, out, schema)
+  }
 
   /** Partition-pruned scan, end to end: round-trip `events` through
     * [[graft.sources.TableSinks.writeDatePartitioned]] into a temp scratch
@@ -99,8 +101,7 @@ object PipelineOps {
     * [[CorpusScope.persisted]] artifact keyed on the content of `events`,
     * so an input rewritten in place gets a new layout, never a stale one. */
   def partitionPrune(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = pruneLayout(spark, dir)
-    graft.sources.TableSinks.readDatePartitioned(spark, scratch)
+    pruneLayout(spark, dir)
       .filter(col("p_date") === lit("2024-01-15"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsumR(col("value"), Qty).as("sum_value"))
@@ -118,8 +119,7 @@ object PipelineOps {
     * — the fact side never reads a non-qualifying directory, and the dim
     * broadcast is reused for both the pruning filter and the join. */
   def joinPruneDynamic(spark: SparkSession, dir: String): DataFrame = {
-    val fact = graft.sources.TableSinks.readDatePartitioned(
-      spark, pruneLayout(spark, dir))
+    val fact = pruneLayout(spark, dir)
     val dim = table(spark, dir, "events")
       .filter(col("event_type") === "signup")
       .select(to_date(col("ts")).as("p_date")).distinct()

@@ -404,9 +404,9 @@ object StreamingModel {
     * The committed ledger must therefore equal the plain per-batch
     * truth, values included — chk_cents carries content, not just
     * counts, so the gate verifies value-faithfulness of the committed
-    * output. The live twin is [[graft.streaming.IdempotentSink]]
-    * (foreachBatch + commit-log rename), spec-asserted to suppress a
-    * re-delivered batchId end-to-end. Shape at scale: one hash agg to
+    * output. The live twin is [[graft.streaming.DeltaSink]]
+    * (foreachBatch + one DeltaLite commit per batch), spec-asserted to
+    * suppress a re-delivered batchId end-to-end. Shape at scale: one hash agg to
     * the ≤|epochs| batch frame, then grid-bounded windows. */
   def exactlyOnceSink(spark: SparkSession, dir: String): DataFrame = {
     val b = table(spark, dir, "events")

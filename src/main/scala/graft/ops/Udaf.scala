@@ -131,26 +131,12 @@ object Udaf {
     // prose: the sketch is exact (and therefore oracle-gateable) only
     // while k=64 ≥ the group's vocabulary — past that it evicts and the
     // output becomes partition-order-dependent. Fail loudly instead of
-    // nondeterministically mismatching the exact-count oracle. The guard
-    // is VERIFICATION tooling, conf-gated (default on, because every run
-    // in this repo is oracle-gated): a production corpus whose vocabulary
-    // exceeds k runs with spark.graft.hhExactGuard=false, where
-    // approximation is the sketch's whole point and the guard's exact
-    // countDistinct (a vocabulary-sized aggregate alongside the bounded
-    // sketch) would defeat the sketch's reason to exist.
-    // guard stays ON unless the conf is explicitly "false" — any other
-    // spelling (off/0/typo) keeps the safe default instead of throwing
-    // String.toBoolean's raw IllegalArgumentException at plan time
-    val guarded = spark.conf.getOption("spark.graft.hhExactGuard")
-      .forall(v => !v.trim.equalsIgnoreCase("false"))
-    val agg =
-      if (guarded)
-        tok.groupBy("lang")
-          .agg(mg(col("token")).as("hh"), countDistinct(col("token")).as("nd"))
-          .withColumn("_guard", assert_true(col("nd") <= 64,
-            lit("agg_heavy_hitters exact regime violated: per-lang vocabulary > k=64")))
-          .filter(col("_guard").isNull)
-      else tok.groupBy("lang").agg(mg(col("token")).as("hh"))
+    // nondeterministically mismatching the exact-count oracle.
+    val agg = tok.groupBy("lang")
+      .agg(mg(col("token")).as("hh"), countDistinct(col("token")).as("nd"))
+      .withColumn("_guard", assert_true(col("nd") <= 64,
+        lit("agg_heavy_hitters exact regime violated: per-lang vocabulary > k=64")))
+      .filter(col("_guard").isNull)
     agg
       .select(col("lang"), explode(col("hh")).as(Seq("token", "est_n")))
       .withColumn("rk", row_number().over(w).cast("long"))

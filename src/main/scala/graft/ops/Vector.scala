@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import Util._
 
 /** Similarity search + multimodal surface over the `embeddings` table.
@@ -638,12 +638,6 @@ object Vector {
       spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     pqTrainEncodeOver(spark, embWithNrm(spark, dir))
 
-  /** Forensic hook for the perf scratch (NOT a declared query): forces
-    * the training+encode half of [[simsearchPq]] alone, so a bench drift
-    * can be attributed to train vs ADC-search. Returns the code count. */
-  private[ops] def pqTrainProbe(spark: SparkSession, dir: String): Long =
-    pqTrainEncode(spark, dir)._1.count()
-
   private def embWithNrm(spark: SparkSession, dir: String): DataFrame =
     emb(spark, dir)
       .select(col("vec_id"), col("embedding"), l2(col("embedding")).as("nrm"))
@@ -861,9 +855,11 @@ object Vector {
     * predicate prunes at the file listing), centroids beside it, and the
     * probe set beside those — probe selection at serve time reads this
     * 10-row table, NOT the corpus, so the only corpus scan in a serve
-    * plan is the partition-pruned scoring scan.
+    * plan is the partition-pruned scoring scan. The fourth element is
+    * the cell layout's schema (see [[readCells]]).
     * Write-once per corpus content. */
-  private def ensureIvfIndex(spark: SparkSession, dir: String): (String, String, String) =
+  private def ensureIvfIndex(spark: SparkSession, dir: String)
+      : (String, String, String, StructType) =
     CorpusScope.persisted("ivfIndex", spark, dir, "embeddings") { a =>
       val corpusPath = a.path("cells_")
       val centPath = a.path("cent_")
@@ -872,8 +868,15 @@ object Vector {
       assigned.write.mode("overwrite").partitionBy("cell").parquet(corpusPath)
       cents.write.mode("overwrite").parquet(centPath)
       ivfProbes(assigned).write.mode("overwrite").parquet(probePath)
-      (corpusPath, centPath, probePath)
+      (corpusPath, centPath, probePath, assigned.schema)
     }
+
+  /** An IVF cell layout read with the schema it was written with, not
+    * inferred: a zero-row corpus writes no cell directory to infer from. */
+  private def readCells(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
 
   /** IVF ANN with BUILD/SEARCH SEPARATION — [[simsearchIvf]]'s quantizer
     * trained ONCE and persisted ([[ensureIvfIndex]]), then served from
@@ -884,13 +887,10 @@ object Vector {
     * a 10-probe serve reads nprobe·10/16 of the corpus files, nothing
     * else). Floats, norms, and cell ids round-trip parquet exactly, so
     * the serve result is bit-identical to the in-memory path and the
-    * SAME oracle gates both. The partition column comes back as its
-    * directory string — cast to long restores the schema contract. */
+    * SAME oracle gates both. */
   def simsearchIvfIndex(spark: SparkSession, dir: String): DataFrame = {
-    val (corpusPath, centPath, probePath) = ensureIvfIndex(spark, dir)
-    val corpus = spark.read.parquet(corpusPath)
-      .withColumn("cell", col("cell").cast("long"))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+    val (corpusPath, centPath, probePath, cellSchema) = ensureIvfIndex(spark, dir)
+    val corpus = readCells(spark, corpusPath, cellSchema)
     ivfServe(corpus, spark.read.parquet(probePath),
       spark.read.parquet(centPath), NProbe, prune = true)
   }
@@ -922,9 +922,10 @@ object Vector {
     * and APPENDED into the same cell-partitioned layout, so serve-side
     * partition pruning sees one unified inverted file. The persisted
     * probe table is refreshed from (standing probes ∪ batch) — a 10-row
-    * merge that never rescans standing vectors. Write-once per corpus. */
+    * merge that never rescans standing vectors. Write-once per corpus.
+    * The fourth element is the cell layout's schema. */
   private[graft] def ensureIvfUpsertIndex(
-      spark: SparkSession, dir: String): (String, String, String) =
+      spark: SparkSession, dir: String): (String, String, String, StructType) =
     CorpusScope.persisted("ivfUpsert", spark, dir, "embeddings") { a =>
       val corpusPath = a.path("cells_u_")
       val centPath = a.path("cent_u_")
@@ -957,7 +958,7 @@ object Vector {
       val collected = probeRows.collect().toSeq
       spark.createDataFrame(collected.asJava, pSchema)
         .write.mode("overwrite").parquet(probePath)
-      (corpusPath, centPath, probePath)
+      (corpusPath, centPath, probePath, standingAssigned.schema)
     }
 
   /** INCREMENTAL IVF index maintenance — the IVF twin of
@@ -975,10 +976,8 @@ object Vector {
     * replays exactly that (standing-trained centroids, union assignment,
     * union probes). Output schema matches [[simsearchIvf]]. */
   def simsearchIvfUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val (corpusPath, centPath, probePath) = ensureIvfUpsertIndex(spark, dir)
-    val corpus = spark.read.parquet(corpusPath)
-      .withColumn("cell", col("cell").cast("long"))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+    val (corpusPath, centPath, probePath, cellSchema) = ensureIvfUpsertIndex(spark, dir)
+    val corpus = readCells(spark, corpusPath, cellSchema)
     ivfServe(corpus, spark.read.parquet(probePath),
       spark.read.parquet(centPath), NProbe, prune = true)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * version to learn the live file set, so
   *
   *   - COMMITS are atomic: a version is visible only once its complete
-  *     log file exists (one rename, no partial state);
+  *     log file exists (one link, no partial state);
   *   - TIME TRAVEL is a shorter replay prefix (`asOf`);
   *   - COMPACTION is remove+add of the same rows in fewer files —
   *     invisible to query results by construction;
@@ -24,6 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * checkpointing the log into parquet (Delta's `_checkpoint`) is the
   * documented growth path, not needed at fixture scale.
   *
+  * Create-once relies on link(2), which needs a real filesystem (local
+  * disk, HDFS, NFS). An object store (S3/ABFS/GCS) has no link and
+  * renames by copy+delete, so a log there needs a conditional put
+  * (`If-None-Match: *`) for the version file instead.
+  *
   * Reference tie-in: the ref pipeline's destructive overwrite + commit
   * marker (A11/A14, `src/bak_unload.ps1:95-118`) is exactly what a
   * transaction log replaces — versioned visibility instead of in-place
@@ -35,14 +40,9 @@ object DeltaLite {
   private def logDir(tableDir: String): java.io.File =
     new java.io.File(tableDir, "_log")
 
-  /** Append commit `version` with the given actions. Atomic via
-    * write-to-temp + rename (the object-store pattern). IDEMPOTENT on
-    * replay: if the version's log file already exists, the commit is a
-    * no-op — the contract (Delta's) is that a re-committed version
-    * carries identical content, which holds for deterministic writers
-    * like [[graft.streaming.DeltaSink]] replaying a micro-batch; the
-    * existing file, not the replay, stays authoritative. Driver-side IO
-    * is sound here: the log is metadata, bounded by #actions. */
+  private def logFile(tableDir: String, version: Long): java.io.File =
+    new java.io.File(logDir(tableDir), f"$version%05d.json")
+
   /** JSON string escape for log fields: backslash, quote, and control
     * chars — an unescaped path would parse as an all-null PERMISSIVE row
     * and silently drop a live file from every snapshot. */
@@ -53,39 +53,41 @@ object DeltaLite {
     case c => c.toString
   }
 
+  /** True when the log holds `version`. */
+  def committed(tableDir: String, version: Long): Boolean =
+    logFile(tableDir, version).exists()
+
+  /** Append commit `version` with the given actions. Returns true only
+    * when this call created the version's log file; false when the log
+    * already holds the version (a replay, or the loser of a race). The
+    * existing file, not the replay, stays authoritative. The body goes
+    * to a writer-unique temp file and `Files.createLink` publishes it:
+    * link(2) fails when the target exists, where rename(2) would
+    * silently replace it, so the first complete commit wins a race.
+    * Driver-side IO is sound here: the log is metadata, bounded by
+    * #actions. */
   def commit(tableDir: String, version: Long,
-      actions: Seq[Action]): Unit = {
-    val ld = logDir(tableDir)
-    ld.mkdirs()
-    // writer-unique temp name: a FIXED tmp path would let two concurrent
-    // replayers of the same version interleave output before the link
-    val tmp = new java.io.File(ld,
+      actions: Seq[Action]): Boolean = {
+    val dst = logFile(tableDir, version)
+    if (dst.exists()) return false
+    dst.getParentFile.mkdirs()
+    val tmp = new java.io.File(dst.getParentFile,
       f".tmp_$version%05d_${java.util.UUID.randomUUID().toString.take(8)}.json")
-    val dst = new java.io.File(ld, f"$version%05d.json")
-    if (dst.exists()) return
     // Files.write THROWS on any IO failure — a PrintWriter would swallow
-    // a partial write (ENOSPC) and rename a truncated log into place,
-    // violating "a version is visible only once its complete file exists"
+    // a partial write (ENOSPC) and link a truncated log into place
     val body = actions.map(a =>
       s"""{"version":${a.version},"action":"${jq(a.action)}","path":"${jq(a.path)}","n_rows":${a.n_rows}}""")
       .mkString("", "\n", "\n")
     java.nio.file.Files.write(tmp.toPath, body.getBytes("UTF-8"))
-    // create-if-absent, NOT rename: POSIX rename(2) silently REPLACES an
-    // existing destination, so a lost race would last-write-win and
-    // overwrite the authoritative first commit. A hard link fails with
-    // FileAlreadyExistsException when dst exists, so the first committed
-    // file genuinely wins and the "existing file is authoritative"
-    // contract is enforced, not assumed.
-    try java.nio.file.Files.createLink(dst.toPath, tmp.toPath)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost the race — the existing (first) commit stays authoritative
+    try {
+      java.nio.file.Files.createLink(dst.toPath, tmp.toPath)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
+      case _: java.io.IOException if dst.exists() => false
       case e: java.io.IOException =>
-        tmp.delete()
-        if (!dst.exists())
-          throw new java.io.IOException(s"commit link failed for $dst", e)
-    }
-    tmp.delete()
+        throw new java.io.IOException(s"commit link failed for $dst", e)
+    } finally tmp.delete()
   }
 
   /** All actions with version ≤ `asOf` (None = latest), as a DataFrame —

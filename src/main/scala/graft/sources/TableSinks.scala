@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table-layout sinks for the 100 TB path. The testdata is one file per
   * table; at scale layout IS performance: date-partitioned directories
@@ -13,11 +14,13 @@ object TableSinks {
 
   /** Write `df` date-partitioned by `tsCol`'s day with files sorted on
     * `sortCols`: `<path>/p_date=YYYY-MM-DD/part-*.parquet`. Readers
-    * filtering on p_date prune whole directories before any IO. */
+    * filtering on p_date prune whole directories before any IO. Returns
+    * the schema written, which [[readDatePartitioned]] reads back with. */
   def writeDatePartitioned(
       df: DataFrame, tsCol: String, path: String,
-      sortCols: Seq[String], maxRecordsPerFile: Long = 5000000L): Unit =
-    df.withColumn("p_date", to_date(col(tsCol)))
+      sortCols: Seq[String], maxRecordsPerFile: Long = 5000000L): StructType = {
+    val dated = df.withColumn("p_date", to_date(col(tsCol)))
+    dated
       .repartition(col("p_date"))                       // one shuffle: co-locate days
       .sortWithinPartitions(sortCols.map(col): _*)      // row-group stats skipping
       .write
@@ -25,11 +28,16 @@ object TableSinks {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode("overwrite")
       .parquet(path)
+    dated.schema
+  }
 
   /** Read back with partition pruning; `dayPredicate` hits only matching
-    * `p_date=` directories (verify via explain: PartitionFilters). */
-  def readDatePartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    * `p_date=` directories (verify via explain: PartitionFilters). The
+    * schema is the one the layout was written with, not inferred: a
+    * zero-row write leaves no data file to infer from. */
+  def readDatePartitioned(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 
   /** Compact a parquet directory's small files into ~`targetBytes` files.
     * The operational fix for the 100 TB small-files problem: streaming

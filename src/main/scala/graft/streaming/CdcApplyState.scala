@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `stream_cdc_apply` therefore holds per epoch (exactly — asserted in
   * StreamingDemoSpec through MemoryStream), and a history that spans
   * epochs materializes through the standard downstream compaction:
-  * last-epoch-wins per key (the [[LakeSink]]/[[graft.sources.DeltaLite]]
+  * last-epoch-wins per key (the [[DeltaSink]]/[[graft.sources.DeltaLite]]
   * upsert path), which restores the batch result. Emitting per epoch —
   * rather than holding every key forever — is what keeps state O(live
   * keys inside the horizon) instead of O(all keys ever seen).

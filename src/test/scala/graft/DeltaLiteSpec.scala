@@ -1,15 +1,18 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops.{CorpusScope, PipelineOps}
 import graft.sources.DeltaLite
 import graft.sources.DeltaLite.Action
+import graft.streaming.DeltaSink
 
 /** Transaction-log table format: time travel, compaction invariance,
-  * commit atomicity, replay-order robustness, and the write-once build
-  * of the declared queries' table. */
+  * commit atomicity, replay-order robustness, the exactly-once streaming
+  * sink on the log, and the write-once build of the declared queries'
+  * table. */
 class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
@@ -125,32 +128,104 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
       s"hostile path corrupted the log line: ${acts.mkString(",")}")
   }
 
+  /** Every file under `dir` with its bytes, by path relative to `dir`. */
+  private def filesOf(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString ->
+        java.nio.file.Files.readAllBytes(f).toSeq).toMap
+  }
+
+  private def nRowsByVersion(t: String): Map[Long, Long] =
+    DeltaLite.actions(spark, t).collect()
+      .map(r => r.getAs[Long]("version") -> r.getAs[Long]("n_rows")).toMap
+
   test("DeltaSink: streamed batches become visible commits; replays are no-ops") {
-    import graft.streaming.DeltaSink
     val t = freshTable()
     // direct batch commits (the foreachBatch body) — two batches
-    DeltaSink.commitBatch(t)(Seq(1L, 2L).toDF("id"), 0L)
-    DeltaSink.commitBatch(t)(Seq(3L).toDF("id"), 1L)
+    assert(DeltaSink.commitBatch(t)(Seq(1L, 2L).toDF("id"), 0L))
+    assert(DeltaSink.commitBatch(t)(Seq(3L).toDF("id"), 1L))
     assert(DeltaLite.snapshot(spark, t).as[Long].collect().toSet == Set(1L, 2L, 3L))
-    // replay batch 0 (at-least-once upstream): same file, same version —
-    // commit is a no-op, snapshot unchanged, no duplicate rows
-    DeltaSink.commitBatch(t)(Seq(1L, 2L).toDF("id"), 0L)
+    val v0 = filesOf(s"$t/part_00000.parquet")
+    // replay batch 0 with DIFFERENT content: the committed version, its
+    // data files and its row stats stay those of the first commit
+    assert(!DeltaSink.commitBatch(t)(Seq(7L, 8L, 9L).toDF("id"), 0L),
+      "a replay of a committed version must not commit")
+    assert(filesOf(s"$t/part_00000.parquet") == v0,
+      "the replay rewrote the committed data files")
     assert(DeltaLite.snapshot(spark, t).as[Long].collect().toSeq.sorted
       == Seq(1L, 2L, 3L))
     // row stats rode the log: vacuum-style metadata query, no file reads
-    val acts = DeltaLite.actions(spark, t).collect()
-      .map(r => r.getAs[Long]("version") -> r.getAs[Long]("n_rows")).toMap
-    assert(acts == Map(0L -> 2L, 1L -> 1L))
-    // end-to-end through a real streaming query
+    assert(nRowsByVersion(t) == Map(0L -> 2L, 1L -> 1L))
+  }
+
+  test("DeltaSink suppresses a re-delivered batchId end-to-end") {
+    val t = freshTable()
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    assert(DeltaSink.commitBatch(t)(df, 7L), "first delivery must commit")
+    assert(!DeltaSink.commitBatch(t)(df, 7L), "re-delivery must be skipped")
+    assert(DeltaLite.snapshot(spark, t).select("id").as[Long].collect().sorted
+      .toSeq == Seq(1L, 2L), "committed data must not duplicate")
+    // live foreachBatch path: two drains, each commits its own rows
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Long]
-    ms.addData(10L, 11L, 12L)
-    val t2 = freshTable()
-    val q = DeltaSink.start(ms.toDS().toDF("id"), t2,
-      tempDir("graft-dsink-ckpt"))
-    q.awaitTermination()
-    assert(DeltaLite.snapshot(spark, t2).as[Long].collect().toSet
-      == Set(10L, 11L, 12L))
+    val live = freshTable()
+    val ckp = tempDir("graft-dsink-ckpt")
+    ms.addData(1L, 2L)
+    DeltaSink.start(ms.toDF().toDF("id"), live, ckp).awaitTermination()
+    ms.addData(3L)
+    DeltaSink.start(ms.toDF().toDF("id"), live, ckp).awaitTermination()
+    def ids(v: Long) = DeltaLite.snapshot(spark, live, Some(v)).as[Long].collect().toSet
+    assert(ids(0) == Set(1L, 2L) && ids(1) == Set(1L, 2L, 3L))
+    assert(nRowsByVersion(live) == Map(0L -> 2L, 1L -> 1L))
+  }
+
+  test("DeltaSink runs a 100-row batch once and stamps n_rows from the footers") {
+    // An accumulator bumped once per row proves the batch executes
+    // exactly once (the parquet write): counting it for the add action's
+    // stats would run it a second time.
+    val t = freshTable()
+    val acc = spark.sparkContext.longAccumulator("epoch_rows_executed")
+    val df = spark.range(0, 100, 1, 4)
+      .map { x => acc.add(1); x }
+      .toDF("id")
+    assert(DeltaSink.commitBatch(t)(df, 3L), "first delivery must commit")
+    assert(acc.value == 100L,
+      s"batch executed ${acc.value / 100.0}x (expected exactly once)")
+    assert(nRowsByVersion(t) == Map(3L -> 100L))
+  }
+
+  test("DeltaSink.start: each drain lands its rows once, an empty resume adds no version") {
+    implicit val sqlCtx = spark.sqlContext
+    val t = freshTable()
+    val ckp = tempDir("graft-dsink-ckpt")
+    val ms = MemoryStream[(Long, String)]
+    def drain(): Unit =
+      DeltaSink.start(ms.toDF().toDF("id", "v"), t, ckp).awaitTermination()
+    def rows() = DeltaLite.snapshot(spark, t).as[(Long, String)].collect().toSeq.sorted
+    ms.addData((1L, "a"), (2L, "b"))
+    drain()
+    assert(rows() == Seq((1L, "a"), (2L, "b")))
+    ms.addData((3L, "c"))
+    drain()
+    assert(rows() == Seq((1L, "a"), (2L, "b"), (3L, "c")), "replay duplicated or dropped rows")
+    // third drain with NOTHING new: checkpoint resume must add nothing
+    drain()
+    assert(rows().length == 3, "empty resume re-emitted an epoch")
+    assert(nRowsByVersion(t).keySet == Set(0L, 1L), "empty resume committed a version")
+  }
+
+  test("createLink is DeltaLite's alone; no source names a deleted sink") {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"scanned too few sources: ${files.size}")
+    def hits(word: String) = files.filter(f =>
+      java.nio.file.Files.readString(f).contains(word))
+      .map(f => f.toString.stripPrefix("src/main/scala/graft/"))
+    assert(hits("Files.createLink") == Seq("sources/DeltaLite.scala"))
+    for (gone <- Seq("LakeSink", "IdempotentSink", "MarkerCommit"))
+      assert(hits(gone).isEmpty, s"$gone named in ${hits(gone)}")
   }
 
   test("declared delta table builds once per input dir") {

@@ -43,8 +43,8 @@ class ManifestSinkSpec extends AnyFunSuite with SparkFixture {
       EventRow(i.toLong, ts(f"2024-01-${i % 4 + 1}%02d 10:00:00"), 1, "click", 1.0, "{}")
     }
     val out = tempDir("graft-sink") + "/events"
-    TableSinks.writeDatePartitioned(events.toDF, "ts", out, Seq("event_id"))
-    val back = TableSinks.readDatePartitioned(spark, out)
+    val schema = TableSinks.writeDatePartitioned(events.toDF, "ts", out, Seq("event_id"))
+    val back = TableSinks.readDatePartitioned(spark, out, schema)
       .filter(col("p_date") === "2024-01-02")
     assert(back.count() == 12)
     val plan = back.queryExecution.executedPlan.toString

@@ -80,6 +80,16 @@ class PersistedArtifactSpec extends AnyFunSuite with SparkFixture {
     assert(builds() == before.map(_ + 1))
   }
 
+  test("partitioned layouts of zero-row inputs read back as zero rows") {
+    // A zero-row write leaves no partition directory, so these layouts
+    // must be read with the schema they were written with.
+    val empty = fixtureDir(Seq("events", "embeddings").map(t =>
+      t -> spark.read.parquet(s"$sf/$t.parquet").limit(0)): _*)
+    for (q <- Seq("pipe_partition_prune", "join_prune_dynamic",
+        "simsearch_ivf_index", "simsearch_ivf_upsert"))
+      assert(rows(q, empty).isEmpty, q)
+  }
+
   test("dropAll after spark.stop() does not throw and still deletes the files") {
     // Stopping the shared test session would break every later suite, so
     // the teardown runs in a child JVM on the same classpath.

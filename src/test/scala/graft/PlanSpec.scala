@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.ReturnAnswer
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{CorpusScope, Dedup, PipelineOps, Relational, StreamingModel, Vector}
@@ -20,6 +21,24 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Every file scan in `df`'s executed plan, through AQE stages and
+    * subqueries. */
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
+    Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+
+  /** The root paths the file scans of `df` read. Path checks go through
+    * these, not the plan string, where Spark cuts a scan's `Location` at
+    * 100 characters. */
+  private def scanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    scans(df).flatMap(_.relation.location.rootPaths.map(_.toString))
+
+  private def scansPath(df: org.apache.spark.sql.DataFrame, part: String): Boolean =
+    scanPaths(df).exists(_.contains(part))
 
   test("scan_project_filter pushes the range filter into the parquet scan") {
     val p = plan(Relational.scanProjectFilter(spark, dir))
@@ -525,7 +544,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(CorpusScope.builds("ivfIndex") == builds,
       "second construction re-entered the index build (retraining)")
     val p = plan(df)
-    assert(p.contains("cells_"),
+    assert(scansPath(df, "cells_"),
       s"serve does not scan the persisted cell-partitioned corpus:\n$p")
     // The probed-cell IN list must reach the scan as a PartitionFilter —
     // the inverted-file promise: a serve lists only the probed cells'
@@ -537,7 +556,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // Probe selection must read the 10-row persisted probe table, not
     // rescan the corpus: the only cells_ scan in a serve plan is the
     // partition-pruned scoring scan.
-    assert(p.contains("probes_"),
+    assert(scansPath(df, "probes_"),
       s"probe selection does not read the persisted probe table:\n$p")
     val fromIndex = df.collect().toSeq
     val inMemory = Vector.simsearchIvf(spark, dir).collect().toSeq
@@ -554,7 +573,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(CorpusScope.builds("ivfUpsert") == builds,
       "second construction re-entered the standing build or the batch assign+append")
     val p = plan(df)
-    assert(p.contains("cells_u_"),
+    assert(scansPath(df, "cells_u_"),
       s"serve does not scan the persisted+appended cell layout:\n$p")
     // Appended batch partitions join the same inverted file: the probed
     // cells still arrive as PartitionFilters over the unified layout.
@@ -562,15 +581,16 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       .find(_.contains("cell")).getOrElse("")
     assert(pf.contains("cell IN") || pf.contains("cell#"),
       s"probed cells not pushed as PartitionFilters:\n$p")
-    assert(p.contains("probes_u_"),
+    assert(scansPath(df, "probes_u_"),
       s"probe selection does not read the persisted probe table:\n$p")
     // The batch-assign plan itself: zero Lloyd jobs is structural (one
     // broadcast of the 16-row centroid table + argmax agg, no iteration),
     // and it must touch ONLY the batch slice of the raw embeddings —
     // never the standing cell layout.
     val cents = spark.read.parquet(Vector.ensureIvfUpsertIndex(spark, dir)._2)
-    val bp = plan(Vector.ivfUpsertBatchAssign(spark, dir, cents))
-    assert(!bp.contains("cells_u_"),
+    val batch = Vector.ivfUpsertBatchAssign(spark, dir, cents)
+    val bp = plan(batch)
+    assert(!scansPath(batch, "cells_u_"),
       s"batch assign rescans the standing cell layout:\n$bp")
     assert(bp.contains("BroadcastNestedLoopJoin") || bp.contains("BroadcastHashJoin"),
       s"centroid join is not a broadcast:\n$bp")
@@ -590,7 +610,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       "second construction re-entered the index build (re-signing)")
     val p = plan(df)
     Seq("shash_", "sbkt_", "ssets_").foreach { t =>
-      assert(p.contains(t), s"probe does not scan persisted $t table:\n$p")
+      assert(scansPath(df, t), s"probe does not scan persisted $t table:\n$p")
     }
     // persisted probe must be bit-identical to the inline incremental path
     val fromIndex = df.collect().toSeq
@@ -871,7 +891,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val eventScans = "events\\.parquet".r.findAllIn(p).length
     assert(eventScans == 1,
       s"expected exactly one raw-events scan (the batch), got $eventScans:\n$p")
-    assert(p.contains("/mv_"), s"persisted MV not read:\n$p")
+    assert(scansPath(df, "/mv_"), s"persisted MV not read:\n$p")
   }
 
   test("events_ab_ttest: sufficient statistics aggregate partially map-side") {
@@ -911,14 +931,15 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   test("dedup_cc_incremental: serve probe scans documents only for the batch slice") {
     // The fixpoint checkpoints eagerly, so the serve-path properties
     // live in the probe-edge subplan (what actually executes at serve).
-    val p = plan(Dedup.ccProbeEdges(spark, dir))
+    val edges = Dedup.ccProbeEdges(spark, dir)
+    val p = plan(edges)
     val docScans = p.linesIterator.count(l =>
       l.contains("documents.parquet") && l.contains("FileScan"))
     assert(docScans >= 1 && docScans <= 2, // star edges + probe bands, batch slice each
       s"unexpected documents scan count ($docScans):\n$p")
     assert(p.contains("g_ccbkt_"),
       s"probe must read the persisted bucketed standing buckets:\n$p")
-    assert(p.contains("cclbl_"),
+    assert(scansPath(edges, "cclbl_"),
       s"probe must read the persisted standing labels:\n$p")
   }
 
@@ -952,14 +973,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("text_bm25_index: serve bucket-prunes to the query terms, corpus never rescanned") {
-    val p = plan(graft.ops.Text.bm25IndexServe(spark, dir))
-    assert(!p.contains("documents.parquet"),
+    val df = graft.ops.Text.bm25IndexServe(spark, dir)
+    val p = plan(df)
+    assert(!scansPath(df, "documents.parquet"),
       s"serve path rescans the corpus:\n$p")
-    assert(p.contains("postings_"), s"postings index scan missing:\n$p")
-    val pf = p.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains("postings_"))
-      .orElse(p.linesIterator.find(_.contains("PartitionFilters")))
-    assert(pf.exists(_.contains("pt")),
+    val postings = scans(df).filter(
+      _.relation.location.rootPaths.exists(_.toString.contains("postings_")))
+    assert(postings.nonEmpty, s"postings index scan missing:\n$p")
+    assert(postings.exists(_.partitionFilters.exists(_.references.exists(_.name == "pt"))),
       s"pt filter did not reach PartitionFilters (no static pruning):\n$p")
   }
 

@@ -116,31 +116,6 @@ class Round14OpsSpec extends AnyFunSuite with SparkFixture {
     assert(out.map(_.getAs[Long]("cents_committed")).sum == 5 * 200L)
   }
 
-  test("IdempotentSink suppresses a re-delivered batchId end-to-end") {
-    import graft.streaming.IdempotentSink
-    val root = tempDir("graft_eos_")
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    assert(IdempotentSink.processBatch(df, 7L, root), "first delivery must commit")
-    assert(!IdempotentSink.processBatch(df, 7L, root), "re-delivery must be skipped")
-    assert(IdempotentSink.committedBatches(root) == Seq(7L))
-    assert(spark.read.parquet(s"$root/batch=7").count() == 2,
-      "committed data must not duplicate")
-    // live foreachBatch path: two drains, distinct epochs, no dupes
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Long]
-    val ckp = tempDir("graft_eos_ckp_")
-    val q = IdempotentSink.attach(ms.toDF.toDF("id"), root + "/live", ckp)
-    try {
-      ms.addData(1L, 2L); q.processAllAvailable()
-      ms.addData(3L); q.processAllAvailable()
-    } finally q.stop()
-    val ids = IdempotentSink.committedBatches(root + "/live")
-      .flatMap(b => spark.read.parquet(s"$root/live/batch=$b")
-        .collect().map(_.getLong(0)))
-    assert(ids.sorted == Seq(1L, 2L, 3L), s"live sink rows: $ids")
-  }
-
   // ---- stream_session_state: hand-traced open/close/state accounting --
 
   test("session_state: a session closes when the watermark passes last+gap") {

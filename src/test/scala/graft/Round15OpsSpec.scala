@@ -12,28 +12,6 @@ import graft.ops.{Relational, StreamingModel, Text, Vector}
 class Round15OpsSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  // ---- IdempotentSink: the commit stamp must not re-execute the epoch
-
-  test("IdempotentSink stamps the commit marker without re-executing the batch") {
-    // The r14 spelling stamped `rows=` with df.count() — a SECOND full
-    // execution of the epoch inside foreachBatch. An accumulator bumped
-    // once per row proves the dataframe now executes exactly once (the
-    // parquet write), and the marker still carries the correct count
-    // (read back from the written files' footers, not the plan).
-    import graft.streaming.IdempotentSink
-    val root = tempDir("graft_eos1x_")
-    val acc = spark.sparkContext.longAccumulator("epoch_rows_executed")
-    val df = spark.range(0, 100, 1, 4)
-      .map { x => acc.add(1); x }
-      .toDF("id")
-    assert(IdempotentSink.processBatch(df, 3L, root), "first delivery must commit")
-    assert(acc.value == 100L,
-      s"epoch executed ${acc.value / 100.0}x (expected exactly once)")
-    val marker = java.nio.file.Files.readString(
-      java.nio.file.Path.of(root, "_commits", "3"))
-    assert(marker == "rows=100", s"marker stamp: $marker")
-  }
-
   // ---- agg_jackknife_variance: degenerate-corpus guard ----------------
 
   test("jackknife variance: a single-day corpus yields NULL se/ci, not NaN") {

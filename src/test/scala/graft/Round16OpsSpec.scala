@@ -8,67 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round16OpsSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  // ---- IdempotentSink: the conditional-put marker strategy ------------
-  // The object-store deployment path (IdempotentSink doc) gets an
-  // executable witness: the MarkerCommit seam carries the protocol, and
-  // the mock store models exactly the create-or-409 semantics of
-  // `PUT … If-None-Match: *`.
-
-  test("conditional-put markers: commit-once, suppress re-delivery, survive the zombie-driver race") {
-    import graft.streaming.{ConditionalPutCommit, IdempotentSink, MockConditionalPutStore}
-    val store = new MockConditionalPutStore
-    val markers = new ConditionalPutCommit(store)
-    val root = tempDir("graft_cput_")
-    val df = spark.range(0, 50, 1, 2).toDF("id")
-
-    // first delivery commits through the store: exactly one create
-    assert(IdempotentSink.processBatch(df, 11L, root, markers),
-      "first delivery must commit")
-    assert(store.creates.get == 1 && store.conflicts.get == 0)
-    val key = s"$root/_commits/11"
-    assert(store.get(key).contains("rows=50"),
-      s"marker content: ${store.get(key)}")
-
-    // re-delivery is suppressed by the exists() probe — no second PUT
-    assert(!IdempotentSink.processBatch(df, 11L, root, markers),
-      "re-delivery must be suppressed")
-    assert(store.creates.get == 1 && store.conflicts.get == 0,
-      "re-delivery must not issue another conditional put")
-
-    // zombie-driver race: two writers that BOTH passed the exists()
-    // probe (network partition, both think they own the epoch) race the
-    // conditional put itself — the store arbitrates, exactly one wins,
-    // the loser sees a 409 (false), and the marker is written once.
-    // This is the case ATOMIC_MOVE-on-object-store cannot provide.
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
-    val ts = (1 to 2).map { _ =>
-      val t = new Thread(() => {
-        results.add(markers.commit(
-          new java.io.File(root, "_commits"), "12", "rows=50"))
-      })
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    val wins = results.toArray(Array.empty[java.lang.Boolean]).count(_.booleanValue)
-    assert(wins == 1, s"exactly one writer must win the marker create, got $wins")
-    assert(store.creates.get == 2 && store.conflicts.get == 1)
-
-    // the committed set reads back through the same seam
-    assert(IdempotentSink.committedBatches(root, markers) == Seq(11L, 12L))
-  }
-
-  test("filesystem markers still pass the same protocol surface through the seam") {
-    import graft.streaming.{AtomicRenameCommit, IdempotentSink}
-    val root = tempDir("graft_fsmk_")
-    val df = spark.range(0, 20, 1, 2).toDF("id")
-    assert(IdempotentSink.processBatch(df, 5L, root, AtomicRenameCommit))
-    assert(!IdempotentSink.processBatch(df, 5L, root, AtomicRenameCommit))
-    assert(IdempotentSink.committedBatches(root) == Seq(5L))
-    val marker = java.nio.file.Files.readString(
-      java.nio.file.Path.of(root, "_commits", "5"))
-    assert(marker == "rows=20", s"marker stamp: $marker")
-  }
-
   // ---- agg_conformal_interval: constant-target group -----------------
 
   test("conformal interval: a constant-target group gives a zero-width interval with full coverage") {

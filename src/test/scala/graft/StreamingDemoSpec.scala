@@ -88,26 +88,6 @@ class StreamingDemoSpec extends AnyFunSuite with SparkFixture {
     } finally q.stop()
   }
 
-  test("foreachBatch lake sink: epoch dirs land rows once, checkpoint resume adds nothing") {
-    import graft.streaming.LakeSink
-    implicit val sqlCtx = spark.sqlContext
-    val out = tempDir("graft-lake-out")
-    val ckp = tempDir("graft-lake-ckp")
-    val ms = MemoryStream[(Long, String)]
-    ms.addData((1L, "a"), (2L, "b"))
-    LakeSink.start(ms.toDF.toDF("id", "v"), out, ckp).awaitTermination()
-    assert(spark.read.parquet(out).count() == 2)
-    // second drain with NEW data: lands in a new epoch, old rows intact
-    ms.addData((3L, "c"))
-    LakeSink.start(ms.toDF.toDF("id", "v"), out, ckp).awaitTermination()
-    val all = spark.read.parquet(out)
-    assert(all.count() == 3, "replay duplicated or dropped rows")
-    assert(all.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    // third drain with NOTHING new: checkpoint resume must add nothing
-    LakeSink.start(ms.toDF.toDF("id", "v"), out, ckp).awaitTermination()
-    assert(spark.read.parquet(out).count() == 3, "empty resume re-emitted an epoch")
-  }
-
   test("flatMapGroupsWithState sessionizer emits a session on event-time timeout") {
     import graft.streaming.Sessionize
     import graft.streaming.Sessionize.SessEvent
