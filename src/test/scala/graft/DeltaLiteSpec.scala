@@ -196,7 +196,7 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
     assert(nRowsByVersion(t) == Map(3L -> 100L))
   }
 
-  test("DeltaSink.start: each drain lands its rows once, an empty resume adds no version") {
+  test("DeltaSink.start: each drain lands rows once, an empty resume adds no version") {
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
     val ckp = tempDir("graft-dsink-ckpt")
