@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: |A ∩ B| of two string-token SETS encoded
   * as arrays SORTED ascending in UTF8 binary order with UNIQUE elements
-  * (`array_sort(array_distinct(...))` — Spark's string array_sort IS the
-  * UTF8String binary order this merge compares by). A two-pointer merge
-  * counts equal elements inside whole-stage codegen.
+  * (`Dedup.jaccardPairs` array_sorts each distinct side — Spark's string
+  * array_sort IS the UTF8String binary order this merge compares by). A
+  * two-pointer merge counts equal elements inside whole-stage codegen.
   *
   * This is the per-pair hot loop of the dedup VERIFY family (exact token
   * Jaccard over LSH candidate pairs): `size(array_intersect(t1, t2))`
@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   * non-null prefixes and counts one more when both end in null, as
   * `size(array_intersect)` does. Unsorted or duplicate-bearing input
   * silently under/over-counts — the expression is package-internal and
-  * only fed by sorted builders.
+  * only fed by `jaccardPairs`, which owns the sort.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -33,19 +33,54 @@ object Dedup {
       col("doc_id"), col("source"),
       explode(split(col("text"), " ")).as("token"))
 
-  /** Exact |t1 ∩ t2| of the verify joins — the codegen'd sorted-merge
-    * [[graft.functions.SortedIntersectCount]] over token arrays the
-    * callers build as array_sort(array_distinct(...)). r17 optimization
-    * round: size(array_intersect(...)) builds a hash set and hashes
-    * every element of both arrays PER PAIR — measured 2.3 s of
+  /** A whitespace token set: the distinct tokens of `split(text, " ")`,
+    * in text order. The signature passes over it are order-insensitive
+    * (slice minima), and [[jaccardPairs]] sorts its own sides, so no
+    * base sorts. */
+  private def tokenSet(text: Column): Column = array_distinct(split(text, " "))
+
+  /** One side of [[jaccardPairs]]: `sets` with `toks` sorted once per
+    * doc, the precondition of the sorted-merge intersect. The persisted
+    * dedup index writes its standing sets through it
+    * ([[ensureDedupIndex]]), so a probe's sort of that side runs over
+    * arrays already in order (one linear TimSort pass per doc). */
+  private def verifySide(sets: DataFrame): DataFrame =
+    sets.withColumn("toks", array_sort(col("toks")))
+
+  /** Exact token-set Jaccard of candidate pairs: the verify stage of the
+    * MinHash family. `pairs` holds (d1, d2, …) and `sets` holds
+    * (doc_id, toks, carry…) with `toks` a distinct element set. Returns
+    * the pair columns plus t1/t2, each `carry` column suffixed 1/2,
+    * `inter` = |t1 ∩ t2| and `jac` ([[Util.jaccard]]). The joins are
+    * inner; a zero-intersection pair stays with jac 0.0, because
+    * band-signature equality does not guarantee a shared token (20-bit
+    * slice minima can agree across disjoint sets) and the oracles'
+    * LEFT-joined intersection count keeps the same pair.
+    *
+    * |t1 ∩ t2| is the codegen'd sorted merge
+    * [[graft.functions.SortedIntersectCount]]. r17 optimization round:
+    * size(array_intersect(...)) builds a hash set and hashes every
+    * element of both arrays PER PAIR — measured 2.3 s of
     * dedup_cascade_audit's 3.8 s across its 303k candidate pairs at
     * sf0.1; the sorted merge (memcmp per step, no allocation) read the
-    * same frame at 1.35-1.45 s vs 2.7-2.8 s. The per-doc array_sort is
-    * paid once per doc instead of per pair, and every signature path
-    * fed by the sorted toks is order-insensitive (slice-minima /
-    * array_min), so banding is unchanged. */
-  private def sortedInter(a: Column, b: Column): Column =
-    graft.functions.SortedIntersectCount.sortedIntersect(a, b)
+    * same frame at 1.35-1.45 s vs 2.7-2.8 s. [[verifySide]] pays the
+    * sort once per doc before each join, never per pair. */
+  private[graft] def jaccardPairs(
+      pairs: DataFrame, sets: DataFrame, carry: String*): DataFrame =
+    jaccardPairs(pairs, sets, sets, carry: _*)
+
+  /** [[jaccardPairs]] with a different frame on the d2 side (a batch
+    * probing a standing corpus). */
+  private[graft] def jaccardPairs(pairs: DataFrame, sets1: DataFrame,
+      sets2: DataFrame, carry: String*): DataFrame = {
+    def side(sets: DataFrame, i: Int): DataFrame =
+      verifySide(sets).select(col("doc_id").as(s"d$i") +: col("toks").as(s"t$i") +:
+        carry.map(c => col(c).as(s"$c$i")): _*)
+    pairs.join(side(sets1, 1), "d1").join(side(sets2, 2), "d2")
+      .withColumn("inter", graft.functions.SortedIntersectCount.sortedIntersect(
+        col("t1"), col("t2")))
+      .withColumn("jac", jaccard(col("inter"), size(col("t1")), size(col("t2"))))
+  }
 
   /** MinHash+LSH: per doc, K min-hashes min_i(md5("s<i>|" ++ token));
     * signatures are banded (r=2) and hashed; docs sharing any (source,
@@ -59,10 +94,7 @@ object Dedup {
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashLshOver(
       table(spark, dir, "documents").select(
-        col("doc_id"), col("source"),
-        // sorted for the sortedInter verify merge (signatures are
-        // order-insensitive slice-minima)
-        array_sort(array_distinct(split(col("text"), " "))).as("toks")),
+        col("doc_id"), col("source"), tokenSet(col("text")).as("toks")),
       saltPrefix = "s", verifyThreshold = 0.9)
 
   /** The brief's order-sensitive variant: shingle → minhash → band →
@@ -78,7 +110,7 @@ object Dedup {
         // full shingle expression into the filter
         .filter(size(split(col("text"), " ")) >= 3)
         .select(col("doc_id"), col("source"),
-          array_sort(shingle3(col("text"))).as("toks")),
+          shingle3(col("text")).as("toks")),
       saltPrefix = "g", verifyThreshold = 0.8)
 
   /** MinHash ESTIMATE CALIBRATION — the measurement behind every
@@ -105,8 +137,7 @@ object Dedup {
     // toks+sig arrays cost more than the re-derived md5 passes it
     // saved; the lazy spelling stays.)
     val base = table(spark, dir, "documents").select(
-      col("doc_id"), col("source"),
-      array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+      col("doc_id"), col("source"), tokenSet(col("text")).as("toks"))
     val cand = candidatePairs(base, "s")
     val sigs = base
       .withColumn("hs", transform(col("toks"), t =>
@@ -114,16 +145,9 @@ object Dedup {
       .withColumn("sig", expr(
         s"transform(sequence(0, ${K - 1}), i -> array_min(transform(hs, h -> substring(h, i * 5 + 1, 5))))"))
       .select(col("doc_id"), col("toks"), col("sig"))
-    val paired = cand
-      .join(sigs.select(col("doc_id").as("dd1"), col("toks").as("t1"),
-        col("sig").as("g1")), col("d1") === col("dd1"))
-      .join(sigs.select(col("doc_id").as("dd2"), col("toks").as("t2"),
-        col("sig").as("g2")), col("d2") === col("dd2"))
-      .withColumn("inter", sortedInter(col("t1"), col("t2")))
-      .withColumn("jac", col("inter").cast("double")
-        / (size(col("t1")) + size(col("t2")) - col("inter")).cast("double"))
+    val paired = jaccardPairs(cand, sigs, "sig")
       .withColumn("est", expr(
-        s"CAST(size(filter(zip_with(g1, g2, (a, b) -> a = b), x -> x)) AS DOUBLE) / $K.0"))
+        s"CAST(size(filter(zip_with(sig1, sig2, (a, b) -> a = b), x -> x)) AS DOUBLE) / $K.0"))
       .withColumn("abs_err", abs(col("est") - col("jac")))
     paired.groupBy("source").agg(
         count(lit(1)).as("n_pairs"),
@@ -157,28 +181,13 @@ object Dedup {
     // dedupChunkMinhash's narrower post-slice rows on trusted
     // full-bench evidence — see its in-method receipt.)
     val cand = candidatePairs(base, saltPrefix)
-    // Verify candidates against per-doc token SETS (codegen'd sorted
-    // merge per pair — r17; was array_intersect) instead of a
-    // candidate×token join. (Band-signature equality
-    // does NOT guarantee a shared token — 20-bit slice minima can agree
-    // across disjoint sets — so a zero-intersection candidate is legal:
-    // it scores jac = 0 here and the oracle's LEFT-joined intersection
-    // count keeps the same pair.) (The bitmask encoding from
-    // Text.tokenSets was measured NET SLOWER here: its dictionary build
-    // adds a count job + shuffle, and candidate verification isn't this
-    // query's bottleneck.)
-    val sets = base.select(col("doc_id"), col("toks"))
-    val jac = cand
-      .join(sets.select(col("doc_id").as("dd1"), col("toks").as("t1")),
-        col("d1") === col("dd1"))
-      .join(sets.select(col("doc_id").as("dd2"), col("toks").as("t2")),
-        col("d2") === col("dd2"))
-      .select(col("source"),
-        sortedInter(col("t1"), col("t2")).as("inter"),
-        size(col("t1")).as("n1"), size(col("t2")).as("n2"))
-      .withColumn("jac",
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
-    jac.groupBy("source")
+    // Verify candidates against per-doc token SETS instead of a
+    // candidate×token join. (The bitmask encoding from Text.tokenSets
+    // was measured NET SLOWER here: its dictionary build adds a count
+    // job + shuffle, and candidate verification isn't this query's
+    // bottleneck.)
+    jaccardPairs(cand, base.select(col("doc_id"), col("toks")))
+      .groupBy("source")
       .agg(
         count(lit(1)).as("n_candidates"),
         sum(when(col("jac") >= verifyThreshold, 1L).otherwise(0L)).as("n_verified"))
@@ -307,7 +316,7 @@ object Dedup {
     CorpusScope.cached("candGraph", key) {
       val base = table(spark, dir, "documents")
         .select(col("doc_id"), col("source"),
-          array_distinct(split(Text.normTextExpr, " ")).as("toks"))
+          tokenSet(Text.normTextExpr).as("toks"))
       iterCheckpoint(candidatePairsGlobal(base, "s"))
     }
   }
@@ -321,7 +330,7 @@ object Dedup {
     CorpusScope.cached("candGraph", key) {
       val base = table(spark, dir, "documents")
         .select(col("doc_id"), col("source"),
-          array_distinct(split(Text.normTextExpr, " ")).as("toks"))
+          tokenSet(Text.normTextExpr).as("toks"))
       iterCheckpoint(candidateStarEdgesGlobal(base, "s").distinct())
     }
   }
@@ -582,7 +591,7 @@ object Dedup {
   def ccGroups(spark: SparkSession, dir: String): DataFrame = {
     val base = table(spark, dir, "documents").select(
       col("doc_id"), col("source"),
-      array_distinct(split(col("text"), " ")).as("toks"))
+      tokenSet(col("text")).as("toks"))
     val lbl = ccLargeSmallStar(candidateStarEdges(base, "s"), inputCanonical = true)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("root")
     lbl.withColumn("n_members", count(lit(1)).over(w))
@@ -616,7 +625,7 @@ object Dedup {
   def pipelineE2e(spark: SparkSession, dir: String): DataFrame = {
     val d = table(spark, dir, "documents")
     val base = d.select(col("doc_id"), col("source"),
-      array_distinct(split(Text.normTextExpr, " ")).as("toks"))
+      tokenSet(Text.normTextExpr).as("toks"))
     val lbl = ccLargeSmallStar(candidateStarEdges(base, "s"), inputCanonical = true)
     val (_, _, _, score) = Text.compositeQuality
     val dq = d.select(col("doc_id"), col("source"), score.as("q"))
@@ -664,18 +673,8 @@ object Dedup {
     * r6-rounded terms as exact DECIMAL. */
   def thresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     val d = table(spark, dir, "documents")
-    val base = d.select(col("doc_id"), col("source"),
-      array_sort(array_distinct(split(Text.normTextExpr, " "))).as("toks"))
-    val pairs = candGraphCached(spark, dir)
-    val ts = base.select(col("doc_id"), col("toks"))
-    val j = pairs
-      .join(ts.select(col("doc_id").as("d1"), col("toks").as("t1")), "d1")
-      .join(ts.select(col("doc_id").as("d2"), col("toks").as("t2")), "d2")
-      // inter/(n1+n2-inter) == inter/|union| on distinct arrays
-      .withColumn("inter", sortedInter(col("t1"), col("t2")))
-      .withColumn("jac",
-        col("inter").cast("double") /
-          (size(col("t1")) + size(col("t2")) - col("inter")).cast("double"))
+    val ts = d.select(col("doc_id"), tokenSet(Text.normTextExpr).as("toks"))
+    val j = jaccardPairs(candGraphCached(spark, dir), ts)
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
     j.agg(
       count(lit(1)).as("n_pairs"),
@@ -689,7 +688,7 @@ object Dedup {
   def minhashGlobal(spark: SparkSession, dir: String): DataFrame = {
     val d = table(spark, dir, "documents")
     val base = d.select(col("doc_id"), col("source"),
-      array_distinct(split(Text.normTextExpr, " ")).as("toks"))
+      tokenSet(Text.normTextExpr).as("toks"))
     val lbl = ccLargeSmallStar(
       candidateStarEdgesGlobal(base, "s"), inputCanonical = true)
     val (_, _, _, score) = Text.compositeQuality
@@ -871,11 +870,7 @@ object Dedup {
 
   private def withHashToks(df: DataFrame): DataFrame = df.select(
     col("doc_id"), col("source"),
-    md5(col("text").cast("binary")).as("h"),
-    // sorted for the sortedInter probe merge; the persisted index
-    // round-trips array order exactly, and band signatures are
-    // order-insensitive slice-minima
-    array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+    md5(col("text").cast("binary")).as("h"), tokenSet(col("text")).as("toks"))
 
   /** The standing corpus's THREE signature artifacts — everything a
     * batch probe ever touches (the standing docs themselves are never
@@ -894,8 +889,7 @@ object Dedup {
     val sBuckets = bandRows(sBase.select("doc_id", "source", "toks"), "s")
       .groupBy("band", "bsig")
       .agg(graft.functions.MinKLongsAgg.minKLongs(col("doc_id"), LshBucketCap).as("ds"))
-    val sSets = sBase.select(col("doc_id").as("s_id"), col("toks").as("s_toks"))
-    (sHash, sBuckets, sSets)
+    (sHash, sBuckets, sBase.select("doc_id", "toks"))
   }
 
   /** The probe half shared verbatim by [[incremental]] (signatures
@@ -904,20 +898,14 @@ object Dedup {
   private def probeStanding(bBase: DataFrame, sHash: DataFrame,
       sBuckets: DataFrame, sSets: DataFrame): DataFrame = {
     val bBands = bandRows(bBase.select("doc_id", "source", "toks"), "s")
-      .select(col("doc_id").as("b_id"), col("band"), col("bsig"))
+      .select(col("doc_id").as("d1"), col("band"), col("bsig"))
     val cand = bBands.join(sBuckets, Seq("band", "bsig"))
-      .select(col("b_id"), explode(col("ds")).as("s_id"))
+      .select(col("d1"), explode(col("ds")).as("d2"))
       .distinct()
-    val bSets = bBase.select(col("doc_id").as("b_id"), col("toks").as("b_toks"))
-    val scored = cand.join(bSets, "b_id").join(sSets, "s_id")
-      .select(col("b_id"), col("s_id"),
-        sortedInter(col("b_toks"), col("s_toks")).as("inter"),
-        size(col("b_toks")).as("nb"), size(col("s_toks")).as("ns"))
-      .withColumn("jac", col("inter").cast("double")
-        / (col("nb") + col("ns") - col("inter")).cast("double"))
-    val best = scored.groupBy(col("b_id").as("doc_id"))
+    val best = jaccardPairs(cand, bBase.select("doc_id", "toks"), sSets)
+      .groupBy(col("d1").as("doc_id"))
       .agg(
-        max_by(col("s_id"), struct(col("jac"), -col("s_id"))).as("near_id"),
+        max_by(col("d2"), struct(col("jac"), -col("d2"))).as("near_id"),
         max(col("jac")).as("bj"))
     bBase.select(col("doc_id"), col("source"), col("h"))
       .join(sHash, Seq("h"), "left")
@@ -952,7 +940,7 @@ object Dedup {
       val (sHash, sBuckets, sSets) = standingSignatures(sBase)
       sHash.write.mode("overwrite").parquet(hashPath)
       sBuckets.write.mode("overwrite").parquet(bktPath)
-      sSets.write.mode("overwrite").parquet(setPath)
+      verifySide(sSets).write.mode("overwrite").parquet(setPath)
       (hashPath, bktPath, setPath)
     }
 
@@ -995,7 +983,7 @@ object Dedup {
       val sBase = table(spark, dir, "documents")
         .filter(col("doc_id") % 7 =!= 0)
         .select(col("doc_id"), col("source"),
-          array_distinct(split(col("text"), " ")).as("toks"))
+          tokenSet(col("text")).as("toks"))
       ccLargeSmallStar(candidateStarEdges(sBase, "s"), inputCanonical = true)
         .write.mode("overwrite").parquet(lblPath)
       bandRows(sBase, "s")
@@ -1050,7 +1038,7 @@ object Dedup {
     val bBase = table(spark, dir, "documents")
       .filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), col("source"),
-        array_distinct(split(col("text"), " ")).as("toks"))
+        tokenSet(col("text")).as("toks"))
     val eBB = candidateStarEdges(bBase, "s")
     // The batch probe side is CAPPED exactly like every other bucket
     // consumer (MinKLongs ≤ LshBucketCap per (source, band, bsig), the
@@ -1126,7 +1114,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val d = table(spark, dir, "documents")
     val base = d.select(col("doc_id"), col("source"),
-      array_distinct(split(col("text"), " ")).as("toks"))
+      tokenSet(col("text")).as("toks"))
     val txt = d.select(col("doc_id"), col("text"))
     val w = Window.partitionBy("source").orderBy("d1", "d2")
     candidatePairs(base, "s")
@@ -1314,19 +1302,10 @@ object Dedup {
     val chunks = Text.chunkRows(spark, dir)
       .select((col("doc_id") * 1000000L + col("ci")).as("doc_id"),
         lit("all").as("source"),
-        array_sort(array_distinct(slice(col("toks"),
-          (col("ci") * 6 + 1).cast("int"), lit(8)))).as("toks"))
-    val cand = candidatePairs(chunks, "s", ChunkBucketCap)
-    val sets = chunks.select(col("doc_id"), col("toks"))
-    val jac = cand
-      .join(sets.select(col("doc_id").as("dd1"), col("toks").as("t1")),
-        col("d1") === col("dd1"))
-      .join(sets.select(col("doc_id").as("dd2"), col("toks").as("t2")),
-        col("d2") === col("dd2"))
-      .withColumn("inter", sortedInter(col("t1"), col("t2")))
-      .withColumn("jac", col("inter").cast("double") /
-        (size(col("t1")) + size(col("t2")) - col("inter")).cast("double"))
-    jac
+        array_distinct(slice(col("toks"),
+          (col("ci") * 6 + 1).cast("int"), lit(8))).as("toks"))
+    jaccardPairs(candidatePairs(chunks, "s", ChunkBucketCap),
+        chunks.select(col("doc_id"), col("toks")))
       .withColumn("da", expr("d1 DIV 1000000"))
       .withColumn("db", expr("d2 DIV 1000000"))
       .filter(col("da") =!= col("db"))
@@ -1395,19 +1374,9 @@ object Dedup {
     * mean. */
   def dedupLshCalibration(spark: SparkSession, dir: String): DataFrame = {
     val base = table(spark, dir, "documents").select(
-      col("doc_id"), col("source"),
-      array_sort(array_distinct(split(col("text"), " "))).as("toks"))
-    val cand = candidatePairs(base, "s")
-    val sets = base.select(col("doc_id"), col("toks"))
-    val jac = cand
-      .join(sets.select(col("doc_id").as("dd1"), col("toks").as("t1")),
-        col("d1") === col("dd1"))
-      .join(sets.select(col("doc_id").as("dd2"), col("toks").as("t2")),
-        col("d2") === col("dd2"))
-      .withColumn("inter", sortedInter(col("t1"), col("t2")))
-      .withColumn("jac", col("inter").cast("double") /
-        (size(col("t1")) + size(col("t2")) - col("inter")).cast("double"))
-    val buckets = jac
+      col("doc_id"), col("source"), tokenSet(col("text")).as("toks"))
+    val buckets = jaccardPairs(candidatePairs(base, "s"),
+        base.select(col("doc_id"), col("toks")))
       .withColumn("bucket", least(lit(9L), floor(col("jac") * 10).cast("long")))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_obs"),
@@ -1499,9 +1468,7 @@ object Dedup {
       .join(e.select(col("d1").as("a"), col("d2").as("b"),
         lit(true).as("is_edge")), Seq("a", "b"), "left")
       .select(col("a"), col("b"), col("n_common"),
-        r6(col("n_common").cast("double") /
-          (col("da") + col("db") - col("n_common")).cast("double"))
-          .as("nbr_jaccard"),
+        r6(jaccard(col("n_common"), col("da"), col("db"))).as("nbr_jaccard"),
         coalesce(col("is_edge"), lit(false)).as("is_edge"))
       .orderBy(desc("n_common"), col("a"), col("b")).limit(20)
   }
@@ -1958,14 +1925,8 @@ object Dedup {
     val s1 = iterCheckpoint(
       d.groupBy(md5(lower(trim(col("text"))).cast("binary")).as("h"))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id"))
-    val base = d.select(col("doc_id"),
-      array_sort(array_distinct(split(Text.normTextExpr, " "))).as("toks"))
-    val verified = candGraphCached(spark, dir)
-      .join(base.select(col("doc_id").as("d1"), col("toks").as("t1")), "d1")
-      .join(base.select(col("doc_id").as("d2"), col("toks").as("t2")), "d2")
-      .withColumn("inter", sortedInter(col("t1"), col("t2")))
-      .withColumn("jac", col("inter").cast("double")
-        / (size(col("t1")) + size(col("t2")) - col("inter")).cast("double"))
+    val verified = jaccardPairs(candGraphCached(spark, dir),
+        d.select(col("doc_id"), tokenSet(Text.normTextExpr).as("toks")))
       .filter(col("jac") >= 0.5)
       .select("d1", "d2")
     val s2drop = iterCheckpoint(verified
@@ -2024,8 +1985,7 @@ object Dedup {
     // aggBootstrapCi lesson: a narrow n-row shuffle buys K·tokens·n
     // parallelism)
     val base = table(spark, dir, "documents")
-      .select(col("doc_id"),
-        array_sort(array_distinct(split(Text.normTextExpr, " "))).as("toks"))
+      .select(col("doc_id"), tokenSet(Text.normTextExpr).as("toks"))
       .repartition(spark.sparkContext.defaultParallelism)
     val sig = base.select(col("doc_id"), col("toks"),
       boundCol(col("toks")) { tk =>
@@ -2035,22 +1995,12 @@ object Dedup {
               .cast("binary")), 1, 15), 16, 10).cast("long"))) % 2L)
             .cast("int"))
       }.as("bits"))
-    val pairs = candGraphCached(spark, dir)
-      .join(sig.select(col("doc_id").as("d1"), col("toks").as("t1"),
-        col("bits").as("b1")), "d1")
-      .join(sig.select(col("doc_id").as("d2"), col("toks").as("t2"),
-        col("bits").as("b2")), "d2")
     val matches = aggregate(
-      zip_with(col("b1"), col("b2"), (x, y) =>
+      zip_with(col("bits1"), col("bits2"), (x, y) =>
         when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
-    val scored = pairs
-      // inter/(n1+n2-inter) == inter/|union| on distinct arrays
-      .withColumn("bint", sortedInter(col("t1"), col("t2")))
-      .select(
-      (col("bint").cast("double") /
-        (size(col("t1")) + size(col("t2")) - col("bint")).cast("double")).as("jac"),
-      (matches.cast("double") / lit(BbitK.toDouble)).as("a"))
+    val scored = jaccardPairs(candGraphCached(spark, dir), sig, "bits")
+      .select(col("jac"), (matches.cast("double") / lit(BbitK.toDouble)).as("a"))
       .withColumn("est",
         greatest(lit(2.0) * col("a") - lit(1.0), lit(0.0)))
       .withColumn("bucket", floor(col("jac") * lit(5.0)) / lit(5.0))

@@ -772,14 +772,6 @@ object Text {
         sum(bit_count(col("m"))).cast("long").as("n"))
   }
 
-  /** |∩| of two chunked bitmasks: AND word-wise, popcount, sum — the
-    * codegen'd sorted-merge [[graft.functions.MaskIntersectCount]]
-    * (bit-identical to the `map_zip_with` HOF formulation it replaces;
-    * that one evaluated interpreted lambdas per pair). */
-  private[ops] def maskIntersect(m1: org.apache.spark.sql.Column,
-      m2: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.MaskIntersectCount.maskIntersect(m1, m2)
-
   /** Deterministic per-source block-size cap for [[dedupNearJaccard]]'s
     * exact pairwise baseline: only the first `NearJacBlockCap` docs of a
     * source (by doc_id) enter the pair join, bounding pair generation at
@@ -820,11 +812,11 @@ object Text {
       .join(sets.alias("b"),
         col("a.source") === col("b.source") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.source").as("source"),
-        maskIntersect(col("a.mask"), col("b.mask")).as("inter"),
+        graft.functions.MaskIntersectCount.maskIntersect(col("a.mask"), col("b.mask"))
+          .as("inter"),
         col("a.n").as("n1"), col("b.n").as("n2"))
       .filter(col("inter") >= 1)   // the unnest-join oracle only sees pairs sharing a token
-      .withColumn("jac",
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
+      .withColumn("jac", jaccard(col("inter"), col("n1"), col("n2")))
     jac.groupBy("source")
       .agg(
         count(lit(1)).as("n_pairs"),
@@ -919,8 +911,7 @@ object Text {
 
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     val jac = shinglePairCounts(spark, dir)
-      .withColumn("jac",
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
+      .withColumn("jac", jaccard(col("inter"), col("n1"), col("n2")))
     jac.groupBy("source")
       .agg(
         count(lit(1)).as("n_pairs"),
@@ -971,8 +962,7 @@ object Text {
       .join(src.select(col("doc_id").as("d1"), col("source").as("s1")), "d1")
       .join(src.select(col("doc_id").as("d2"), col("source").as("s2")), "d2")
       .withColumn("cross_source", when(col("s1") =!= col("s2"), 1L).otherwise(0L))
-      .withColumn("jac",
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")).cast("double"))
+      .withColumn("jac", jaccard(col("inter"), col("n1"), col("n2")))
     pairs.groupBy("cross_source")
       .agg(
         count(lit(1)).as("n_pairs"),

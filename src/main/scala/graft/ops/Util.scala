@@ -109,6 +109,13 @@ object Util {
   def r4D(x: Double): Double = rpD(x, 4)
   def r6D(x: Double): Double = rpD(x, 6)
 
+  /** Set Jaccard from an intersection count and the two set sizes:
+    * inter / (n1 + n2 − inter) = |A∩B| / |A∪B| on distinct sets. One
+    * double division of exact integers, so it is bit-identical to the
+    * oracles' `CAST(inter AS DOUBLE) / CAST(n1 + n2 - inter AS DOUBLE)`. */
+  def jaccard(inter: Column, n1: Column, n2: Column): Column =
+    inter.cast("double") / (n1 + n2 - inter).cast("double")
+
   /** DuckDB spelling of [[rp]] — textually identical arithmetic. */
   def rpSql(x: String, p: Int): String = {
     val f = "1" + ("0" * p) + ".0"

@@ -2369,8 +2369,7 @@ object Vector {
     cand
       .join(kc.select(col("doc_id").as("d1"), col("kc").as("k1")), "d1")
       .join(kc.select(col("doc_id").as("d2"), col("kc").as("k2")), "d2")
-      .withColumn("kf_jaccard", r6(col("n_shared").cast("double") /
-        (col("k1") + col("k2") - col("n_shared")).cast("double")))
+      .withColumn("kf_jaccard", r6(jaccard(col("n_shared"), col("k1"), col("k2"))))
       .select(col("d1"), col("d2"), col("n_shared"), col("k1"), col("k2"),
         col("kf_jaccard"), (col("kf_jaccard") >= 0.5).as("within_threshold"))
       .orderBy(desc("kf_jaccard"), col("d1"), col("d2")).limit(20)

@@ -37,8 +37,12 @@ object DeltaLite {
   /** One log record. `n_rows` is the add-time stat (−1 on removes). */
   case class Action(version: Long, action: String, path: String, n_rows: Long)
 
+  /** The log directory. Its name starts with neither `_` nor `.`:
+    * Spark's file index hides such names, and a read of the directory
+    * would then rely on the root-path exception (and warn that all
+    * paths were ignored). The `.tmp_*` commit files inside stay hidden. */
   private def logDir(tableDir: String): java.io.File =
-    new java.io.File(tableDir, "_log")
+    new java.io.File(tableDir, "log")
 
   private def logFile(tableDir: String, version: Long): java.io.File =
     new java.io.File(logDir(tableDir), f"$version%05d.json")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
+import graft.ops.Util.r4D
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.ops.StreamingModel.backlogModel]]
@@ -36,9 +37,6 @@ object BacklogState {
 
   private val HourMs = 3600000L
 
-  /** Scalar twin of [[graft.ops.Util.r4]] — identical IEEE ops. */
-  private def r4(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
-
   private def fmt(hourMs: Long): String = {
     val f = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss")
     f.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
@@ -67,7 +65,7 @@ object BacklogState {
               val n = s.pending.getOrElse(h, 0L)
               b = math.max(0L, b + n - cap)
               out += BacklogOut(fmt(h), n, cap, b,
-                r4(n.toDouble / cap.toDouble), b > 0L)
+                r4D(n.toDouble / cap.toDouble), b > 0L)
               h += HourMs
             }
             val remaining = s.pending.filter(_._1 >= h)

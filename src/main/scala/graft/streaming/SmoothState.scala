@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
+import graft.ops.Util.r6D
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.ops.Relational.eventsEwma]] (`events_ewma`):
@@ -33,10 +34,6 @@ object SmoothState {
   /** Quiet gap after a user's last event before their summary emits. */
   val QuietGapMinutes = 60
 
-  /** The batch fold's per-step quantization, scalar spelling — the same
-    * floor(x·10⁶ + 0.5)/10⁶ IEEE ops as [[graft.ops.Util.r6]]. */
-  private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
   def ewma(events: Dataset[ValEvent]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
 
@@ -49,8 +46,8 @@ object SmoothState {
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator.single(EwmaOut(uid, s.n, r6(s.ewma),
-              r6(s.sumCents / 100.0 / s.n.toDouble)))
+            Iterator.single(EwmaOut(uid, s.n, r6D(s.ewma),
+              r6D(s.sumCents / 100.0 / s.n.toDouble)))
           } else {
             // microsecond event time + event_id: the batch fold's exact
             // ordering key (array_sort over (t_us, event_id, value)) —
@@ -63,7 +60,7 @@ object SmoothState {
               s = EwmaState(
                 n = s.n + 1,
                 sumCents = s.sumCents + cents,
-                ewma = if (s.n == 0L) e.value else r6(s.ewma * 0.75 + e.value * 0.25),
+                ewma = if (s.n == 0L) e.value else r6D(s.ewma * 0.75 + e.value * 0.25),
                 lastUs = math.max(s.lastUs, e.ts.getTime * 1000L))
             }
             state.update(s)

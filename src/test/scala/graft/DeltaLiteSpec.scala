@@ -44,7 +44,7 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
       p => new java.io.File(p).getName) == Seq("ab.parquet"),
       "compacted snapshot must read only the rewritten file")
     // no temp debris from the atomic rename protocol
-    val tmps = new java.io.File(t, "_log").listFiles.filter(_.getName.startsWith(".tmp"))
+    val tmps = new java.io.File(t, "log").listFiles.filter(_.getName.startsWith(".tmp"))
     assert(tmps.isEmpty, s"commit left temp files: ${tmps.toSeq}")
   }
 
@@ -106,7 +106,7 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
-    val logFile = new java.io.File(s"$t/_log/00009.json")
+    val logFile = new java.io.File(s"$t/log/00009.json")
     val body = new String(
       java.nio.file.Files.readAllBytes(logFile.toPath), "UTF-8")
     val winners = (0 until 8).filter(i => body contains s"w$i.parquet")
@@ -114,7 +114,7 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
     assert(body ==
       s"""{"version":9,"action":"add","path":"w${winners.head}.parquet","n_rows":${winners.head}}""" + "\n",
       s"winner's payload not intact: $body")
-    val tmps = new java.io.File(s"$t/_log").listFiles()
+    val tmps = new java.io.File(s"$t/log").listFiles()
       .filter(_.getName.startsWith(".tmp"))
     assert(tmps.isEmpty, s"race left temp files: ${tmps.toSeq}")
   }
@@ -214,6 +214,16 @@ class DeltaLiteSpec extends AnyFunSuite with SparkFixture {
     drain()
     assert(rows().length == 3, "empty resume re-emitted an epoch")
     assert(nRowsByVersion(t).keySet == Set(0L, 1L), "empty resume committed a version")
+  }
+
+  test("the log directory's name is visible to Spark's file index") {
+    val t = freshTable()
+    DeltaLite.commit(t, 0, Seq(Action(0, "add", "a.parquet", 1L)))
+    val dirs = new java.io.File(t).listFiles.filter(_.isDirectory).map(_.getName).toSeq
+    assert(dirs.size == 1, s"expected one log directory: $dirs")
+    assert(!dirs.head.startsWith("_") && !dirs.head.startsWith("."),
+      s"log directory ${dirs.head} is hidden from Spark's file index")
+    assert(DeltaLite.actions(spark, t).count() == 1)
   }
 
   test("createLink is DeltaLite's alone; no source names a deleted sink") {

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, PipelineOps, Relational, StreamingModel, Text}
+import graft.ops.{PipelineOps, Relational, StreamingModel, Text}
 
 case class CustRow10(c_custkey: Long, c_mktsegment: String,
     c_acctbal: java.math.BigDecimal)
@@ -104,34 +104,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
     out.foreach { r =>
       assert(r.getAs[Boolean]("never_under"), s"CMS under-estimated: $r")
       assert(r.getAs[Boolean]("within_eps"), s"CMS outside eps bound: $r")
-    }
-  }
-
-  // ---- graph_kcore: the peel is monotone ------------------------------
-
-  test("kcore: node and edge counts never increase across peel rounds") {
-    val out = Dedup.graphKcore(spark, "/root/testdata/sf0.001")
-      .collect().sortBy(_.getAs[Long]("round"))
-    assert(out.length == 4)
-    out.sliding(2).foreach { case Array(a, b) =>
-      assert(b.getAs[Long]("n_nodes") <= a.getAs[Long]("n_nodes"),
-        "peeling must not add nodes")
-      assert(b.getAs[Long]("n_edges") <= a.getAs[Long]("n_edges"),
-        "peeling must not add edges")
-    }
-  }
-
-  // ---- graph_common_neighbors: score-range + ordering invariants ------
-
-  test("common neighbors: scores well-formed, ordered pairs, jaccard in (0,1]") {
-    val out = Dedup.graphCommonNeighbors(spark, "/root/testdata/sf0.001")
-      .collect()
-    assert(out.nonEmpty, "sf0.001 candidate graph has wedges")
-    out.foreach { r =>
-      assert(r.getAs[Long]("a") < r.getAs[Long]("b"), "pairs are ordered")
-      assert(r.getAs[Long]("n_common") >= 1L)
-      val j = r.getAs[Double]("nbr_jaccard")
-      assert(j > 0.0 && j <= 1.0, s"jaccard out of range: $j")
     }
   }
 
@@ -322,29 +294,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
     // 'data': deg 1, freq 1 -> 1.
     assert(math.abs(coll.getAs[Double]("score") - 9.0) < 1e-9, s"$coll")
     assert(math.abs(solo.getAs[Double]("score") - 1.0) < 1e-9, s"$solo")
-  }
-
-  // ---- graph_modularity: closed-form Q on planted cliques -------------
-
-  test("modularity: three equal duplicate cliques give Q = 2/3") {
-    // 3 groups x 4 identical docs: identical texts share every LSH band
-    // -> each group is a 4-clique (6 edges), no cross-group edges.
-    // L_c = m/3, D_c = 2m/3 -> Q = 3*(1/3 - 1/9) = 2/3.
-    val groups = Seq(
-      "alpha beta gamma delta epsilon zeta",
-      "one two three four five six",
-      "red green blue yellow purple orange")
-    val rows = for {
-      (t, g) <- groups.zipWithIndex
-      i <- 0 until 4
-    } yield DocRow(g * 10L + i + 1, t, "en", s"src$i", t.length.toLong)
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val r = Dedup.queries("graph_modularity")(spark, dir).collect()(0)
-    assert(r.getAs[Long]("n_nodes") == 12L && r.getAs[Long]("n_edges") == 18L,
-      s"three 4-cliques expected: $r")
-    assert(r.getAs[Long]("n_communities") == 3L, s"$r")
-    assert(math.abs(r.getAs[Double]("q_modularity") - 2.0 / 3.0) < 1e-3,
-      s"closed-form Q: $r")
   }
 
   // ---- text_burstiness: uniform vs bursty tokens ----------------------
@@ -911,34 +860,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
       s"frontier mismatch: $got")
   }
 
-  // ---- dedup_cdc_chunks: content-defined boundaries re-align ----------
-
-  test("cdc chunks: chunk boundaries survive a front insertion (the anti-fixed-width property)") {
-    def toks(n: Int): Seq[String] =
-      (0 until n).map(i => s"w${(i * i * 2654435761L) % 97}")
-    val body = toks(200).mkString(" ")
-    val shifted = "zzz yyy xxx " + body // 3 junk tokens prepended
-    val rows = Seq(
-      DocRow(1L, body, "en", "s1", body.length.toLong),
-      DocRow(2L, body, "en", "s2", body.length.toLong),
-      DocRow(3L, shifted, "en", "s3", shifted.length.toLong))
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val out = Dedup.dedupCdcChunks(spark, dir).collect()
-    assert(out.nonEmpty, "identical docs must share chunks")
-    // identical docs 1,2 share every reported chunk; the shifted doc 3
-    // must RE-ALIGN after its prefix: at least one chunk is shared by
-    // all three (fixed-offset chunking would share none with doc 3)
-    val triple = out.filter(_.getAs[Long]("n_docs") == 3L)
-    assert(triple.nonEmpty,
-      "CDC must re-align chunks across a front insertion")
-    triple.foreach { r =>
-      assert(r.getAs[Long]("min_doc") == 1L &&
-        r.getAs[Long]("max_doc") == 3L, s"triple-shared span: $r")
-    }
-    // every reported chunk is >= the 5-token report floor
-    out.foreach(r => assert(r.getAs[Long]("token_len") >= 5L))
-  }
-
   // ---- agg_shapley_channel: the Shapley axioms on a planted game ------
 
   test("shapley attribution: null player gets 0, symmetric players tie, efficiency holds") {
@@ -1006,25 +927,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
     score *= decay(tMax - last)
     assert(math.abs(out(3L).getAs[Double]("decayed_score") - score) < 1e-3,
       s"batch decayed sum must equal the streaming counter: $score")
-  }
-
-  // ---- graph_bfs_layers: frontier contiguity and seed discipline ------
-
-  test("bfs layers: contiguous non-empty layers from exactly 3 seeds, disjoint by construction") {
-    val out = Dedup.graphBfsLayers(spark, "/root/testdata/sf0.001")
-      .collect().map(r => r.getAs[Long]("dist") -> r).toMap
-    assert(out.keySet.subsetOf(Set(-1L, 0L, 1L, 2L, 3L)))
-    assert(out(0L).getAs[Long]("n_nodes") == 3L,
-      "BFS starts from exactly the 3 top-degree seeds")
-    // frontier contiguity: a layer can only exist if the previous did
-    (1L to 3L).foreach { t =>
-      if (out.contains(t)) assert(out.contains(t - 1),
-        s"layer $t cannot exist without layer ${t - 1}")
-    }
-    out.values.foreach { r =>
-      assert(r.getAs[Long]("n_nodes") > 0L)
-      assert(r.getAs[Long]("min_doc") <= r.getAs[Long]("max_doc"))
-    }
   }
 
   // ---- agg_markov_attribution: removal effects on a planted chain -----
@@ -1205,34 +1107,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
     assert(!r2.getAs[Boolean]("overdispersed"))
     assert(r2.isNullAt(r2.fieldIndex("nb_r")),
       "at-or-under Poisson dispersion must yield NULL NB params")
-  }
-
-  // ---- dedup_minhash_bbit: exactness at J=1 and the high-J tightening --
-
-  test("b-bit minhash: identical docs estimate J=1 exactly; error tightens toward high J") {
-    // identical docs: every permutation's min matches, so every bit
-    // matches -> A = 1 -> est = 1, abs err exactly 0
-    val txt = (1 to 60).map(i => s"w${(i * 37) % 83}").mkString(" ")
-    val rows = Seq(DocRow(1L, txt, "en", "a", 0L), DocRow(2L, txt, "en", "b", 0L))
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val out = Dedup.dedupMinhashBbit(spark, dir).collect()
-    assert(out.length == 1 && out(0).getAs[Double]("bucket") == 1.0,
-      s"identical docs land in the J=1 bucket: ${out.toSeq}")
-    assert(out(0).getAs[Double]("mean_est") == 1.0)
-    assert(out(0).getAs[Double]("mean_abs_err") == 0.0)
-    // real corpus: the Li-König behavior — the top-J band's calibration
-    // error is below the lowest band's (1-bit agreement is noisy at low
-    // J, tight exactly where dedup thresholds live)
-    val real = Dedup.dedupMinhashBbit(spark, "/root/testdata/sf0.001")
-      .collect().sortBy(_.getAs[Double]("bucket"))
-    assert(real.length >= 2, "sf0.001 must produce multiple J bands")
-    val lo = real.head.getAs[Double]("mean_abs_err")
-    val hi = real.last.getAs[Double]("mean_abs_err")
-    assert(hi < lo, s"error must tighten toward high J: low=$lo high=$hi")
-    real.foreach { r =>
-      val e = r.getAs[Double]("mean_est")
-      assert(e >= 0.0 && e <= 1.0, s"estimator out of range: $r")
-    }
   }
 
   // ---- cluster_centroid_classify: separable vs shuffled labels --------

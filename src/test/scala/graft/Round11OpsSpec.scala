@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, PipelineOps, Relational, Text}
+import graft.ops.{PipelineOps, Relational, Text}
 
 /** Targeted edge/property tests for the round-11 operators — the
   * invariants the fixture-scale DuckDB gate never exercises. */
@@ -134,40 +134,8 @@ class Round11OpsSpec extends AnyFunSuite with SparkFixture {
     assert(rp.last.getAs[Double]("skew_30") > 3.0, s"${rp.last}")
   }
 
-  // ---- candidate-graph analytics: clique closed forms -------------------
-
   private def doc(id: Long, text: String, source: String = "web") =
     DocRow(id, text, "en", source, text.length.toLong)
-
-  private def cliqueDir(): String = {
-    // Docs 1-5 identical -> candidate graph K5; docs 6/7 disjoint.
-    val dup = "alpha beta gamma delta epsilon zeta eta theta"
-    fixtureDir("documents" -> spark.createDataset(Seq(
-      doc(1, dup), doc(2, dup), doc(3, dup), doc(4, dup), doc(5, dup),
-      doc(6, "one two three four five six seven eight"),
-      doc(7, "red green blue cyan magenta yellow black white"))).toDF)
-  }
-
-  test("adamic-adar: K5 pairs score 3 * r6(1/ln 4), all flagged edges") {
-    val out = Dedup.graphAdamicAdar(spark, cliqueDir()).collect()
-    assert(out.length == 10, s"K5 has C(5,2)=10 pairs, got ${out.length}")
-    val expect = 3.0 * math.floor(1e6 / math.log(4.0) + 0.5) / 1e6
-    out.foreach { r =>
-      assert(r.getAs[Long]("n_common") == 3L, s"$r")
-      assert(math.abs(r.getAs[Double]("aa_score") - expect) < 1e-9, s"$r")
-      assert(r.getAs[Boolean]("is_edge"), s"clique pairs are edges: $r")
-      assert(r.getAs[Long]("a") < r.getAs[Long]("b"))
-    }
-  }
-
-  test("assortativity: a regular graph has zero degree variance -> NULL") {
-    val r = Dedup.graphAssortativity(spark, cliqueDir()).collect()(0)
-    assert(r.getAs[Long]("n_nodes") == 5L)
-    assert(r.getAs[Long]("n_edges") == 10L)
-    assert(r.getAs[Double]("mean_deg") == 4.0)
-    assert(r.isNullAt(r.fieldIndex("assortativity")),
-      s"4-regular K5 must yield null assortativity: $r")
-  }
 
   // ---- text LM/collocation additions ------------------------------------
 

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, PipelineOps, Relational, StreamingModel}
+import graft.ops.{PipelineOps, Relational, StreamingModel}
 
 /** Planted-structure tests for the round-12 operators — each fixture
   * builds a configuration whose answer is known on paper, so a logic
@@ -120,19 +120,6 @@ class Round12OpsSpec extends AnyFunSuite with SparkFixture {
       .map(_.toDouble).getOrElse(0.0))
     assert(fpps(0) >= fpps(1) && fpps(1) >= fpps(2),
       s"fpp must not increase with filter size: ${fpps.toSeq}")
-  }
-
-  test("local_clustering: wedge accounting holds on the real candidate graph") {
-    val rows = Dedup.graphLocalClustering(spark, "/root/testdata/sf0.001")
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val deg = r.getAs[Long]("deg"); val w = r.getAs[Long]("n_wedges")
-      assert(w == deg * (deg - 1) / 2, s"wedges != C(deg,2): $r")
-      val lcc = r.getAs[Double]("lcc")
-      assert(lcc >= 0.0 && lcc <= 1.0, s"lcc out of range: $r")
-      assert(r.getAs[Long]("n_triangles") <= w)
-    }
   }
 
   test("watermark_advance: late row in batch 1 drops against batch-0 watermark") {

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, PipelineOps, Relational, Text, Vector}
+import graft.ops.{PipelineOps, Relational, Text, Vector}
 
 case class SuppRow13(s_suppkey: Long, s_name: String, s_nationkey: Int,
     s_acctbal: Double)
@@ -298,29 +298,6 @@ class Round13OpsSpec extends AnyFunSuite with SparkFixture {
       - ((2000000L + 2213062L) / 2.0 / 1e6)) < 1e-6)
   }
 
-  test("closeness_sample: planted triangle gives harmonic 2.0, closeness 1") {
-    // 3 identical docs form a candidate-graph triangle; 2 unrelated docs
-    // share no tokens -> graph = K3, seeds = the three members (deg 2),
-    // each with n1 = 2, n2 = n3 = 0, n_nodes = 3 -> closeness = 1.0
-    val same = "alpha beta gamma delta epsilon zeta eta theta"
-    val docs = Seq(
-      DocRow(1L, same, "en", "s", same.length.toLong),
-      DocRow(2L, same, "en", "s", same.length.toLong),
-      DocRow(3L, same, "en", "s", same.length.toLong),
-      DocRow(4L, "uno dos tres quatro cinco seis", "en", "s", 30L),
-      DocRow(5L, "moon star cloud rain snow wind", "en", "s", 30L))
-    val dir = fixtureDir("documents" -> spark.createDataset(docs).toDF)
-    val r = Dedup.graphClosenessSample(spark, dir).collect()
-    assert(r.length == 3)
-    r.foreach { row =>
-      assert(Set(1L, 2L, 3L).contains(row.getAs[Long]("seed")))
-      assert(row.getAs[Long]("n1") == 2)
-      assert(row.getAs[Long]("n2") == 0 && row.getAs[Long]("n3") == 0)
-      assert(row.getAs[Long]("harmonic_micro") == 2000000L)
-      assert(row.getAs[Double]("closeness") == 1.0)
-    }
-  }
-
   test("nprobe_sweep: recall is monotone in nprobe, baseline size fixed") {
     val rows = Vector.simsearchNprobeSweep(spark, "/root/testdata/sf0.001")
       .collect()
@@ -337,35 +314,6 @@ class Round13OpsSpec extends AnyFunSuite with SparkFixture {
       Seq(0.0625, 0.125, 0.1875, 0.25))
   }
 
-  test("cascade_audit: each rung drops exactly its planted duplicate") {
-    // docs 3/4: same token SET, different text -> identical minhash
-    // signature (candidate in every band, deterministically) with
-    // verified Jaccard 1.0, yet NOT an exact dup (md5 differs)
-    val docs = Seq(
-      DocRow(1L, "same text twin one copy here now", "en", "s", 32L),
-      DocRow(2L, "same text twin one copy here now", "en", "s", 32L), // exact dup of 1
-      DocRow(3L, "red orange yellow green blue indigo", "en", "s", 36L),
-      DocRow(4L, "orange red yellow green indigo blue", "en", "s", 36L), // near dup of 3
-      DocRow(5L, "lion tiger bear wolf fox deer", "en", "s", 30L),
-      DocRow(6L, "ocean river lake pond creek bay", "en", "s", 30L))
-    val embs = Seq(
-      EmbRow(1L, Array(1f, 0f, 0f, 0f), 0),
-      EmbRow(2L, Array(0f, 1f, 0f, 0f), 0),
-      EmbRow(3L, Array(0f, 0f, 1f, 0f), 0),
-      EmbRow(4L, Array(0f, 0f, 0f, 1f), 0),
-      EmbRow(5L, Array(0.6f, 0.8f, 0f, 0f), 0),
-      EmbRow(6L, Array(0.6f, 0.8f, 0f, 0f), 0)) // semantic dup of 5
-    val dir = fixtureDir(
-      "documents" -> spark.createDataset(docs).toDF,
-      "embeddings" -> spark.createDataset(embs).toDF)
-    val r = Dedup.dedupCascadeAudit(spark, dir).collect()
-      .map(x => x.getAs[Long]("stage") -> x).toMap
-    assert(r(1L).getAs[Long]("n_in") == 6 && r(1L).getAs[Long]("n_dropped") == 1)
-    assert(r(2L).getAs[Long]("n_in") == 5 && r(2L).getAs[Long]("n_dropped") == 1)
-    assert(r(3L).getAs[Long]("n_in") == 4 && r(3L).getAs[Long]("n_dropped") == 1)
-    assert(r(3L).getAs[Long]("n_out") == 3)
-    assert(math.abs(r(3L).getAs[Double]("drop_frac") - 0.25) < 1e-9)
-  }
 }
 
 case class LineKmv13(l_orderkey: Long, l_partkey: Long, l_suppkey: Long)

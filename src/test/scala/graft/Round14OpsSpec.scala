@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, PipelineOps, Relational, StreamingModel, Vector}
+import graft.ops.{PipelineOps, Relational, StreamingModel, Vector}
 
 /** Planted-structure tests for the round-14 operators — each fixture
   * builds a configuration whose answer is known on paper, so a logic
@@ -12,40 +12,6 @@ class Round14OpsSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   private def day(d: String) = ts(s"$d 00:00:00")
-
-  // ---- graph_betweenness_sample: hand-computed Brandes on a path ------
-
-  test("betweenness: path graph 1-2-3-4-5 gives the hand-computed truncated Brandes values") {
-    // seeds = top-3 by degree, id tiebreak -> {2, 3, 4}.
-    // Hand computation (depth cap 3, micro units):
-    //   seed 2: d2 level: delta(4) = 1·(1+0)        = 1e6
-    //           d1 level: delta(3) = 1·(1+delta(4)) = 2e6
-    //   seed 3: dist3 empty; d1: delta(2) = 1e6 (child 1),
-    //           delta(4) = 1e6 (child 5)
-    //   seed 4: mirror of seed 2: delta(2) = 1e6, delta(3) = 2e6
-    // totals: node2 = 2e6, node3 = 4e6, node4 = 2e6; endpoints absent.
-    // (True Brandes check: from seed 2, node 3 carries pairs 2→4 and
-    // 2→5 ⇒ δ = 2; symmetric from seed 4; node 2 carries 3→1 and 4→1.)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
-    val out = Dedup.betweennessFromEdges(spark, edges).collect()
-    val byNode = out.map(r => r.getAs[Long]("doc_id") ->
-      (r.getAs[Long]("bc_micro"), r.getAs[Long]("n_seeds"),
-        r.getAs[Double]("betweenness"))).toMap
-    assert(byNode.keySet == Set(2L, 3L, 4L), s"wrong node set: $byNode")
-    assert(byNode(2L) == ((2000000L, 2L, 2.0)))
-    assert(byNode(3L) == ((4000000L, 2L, 4.0)))
-    assert(byNode(4L) == ((2000000L, 2L, 2.0)))
-    // ordering: bc desc then id asc -> 3, 2, 4
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(3L, 2L, 4L))
-  }
-
-  test("betweenness: a clique has no bridges (all dependencies zero)") {
-    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L)).toDF("d1", "d2")
-    // every pair is adjacent: no shortest path passes through anyone —
-    // the backward pass finds no dist-2 children, output is empty
-    assert(Dedup.betweennessFromEdges(spark, edges).collect().isEmpty)
-  }
 
   // ---- agg_jackknife_variance: two-block hand case ---------------------
 

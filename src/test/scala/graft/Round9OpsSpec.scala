@@ -316,20 +316,6 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
     out.groupBy(_.getLong(0)).values.foreach(rs => assert(rs.length <= 3))
   }
 
-  test("degree stats: three identical docs form a triangle (deg 2, avg nbr deg 2)") {
-    val dup = "spark shuffle partition broadcast executor memory column " +
-      "predicate codegen catalyst tungsten adaptive skew salt bucket"
-    val rows = Seq(doc(1, dup), doc(2, dup), doc(3, dup),
-      doc(4, "completely different words entirely unrelated content here " +
-        "nothing shared with the duplicated template at all ever"))
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.Dedup.graphDegreeStats(spark, dir).collect()
-    val d2 = out.find(_.getLong(0) == 2L)
-    assert(d2.isDefined, s"expected a degree-2 class: ${out.mkString(";")}")
-    assert(d2.get.getLong(1) == 3 && d2.get.getDouble(2) == 2.0,
-      s"triangle nodes: 3 nodes of degree 2 with avg nbr deg 2: ${d2.get}")
-  }
-
   test("analyze stats: ndv, nulls, and native-type (not lexicographic) min/max") {
     val cust = Seq(
       CustRow(5, "a", 1, -12.5, "AUTO"), CustRow(10, "b", 1, 99.0, "AUTO"),
@@ -447,22 +433,6 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
       "same rate at 25x n must give a narrower interval")
     assert(d2.getDouble(3) == 0.0 && d2.getDouble(4) >= 0.0,
       s"Wilson lower bound at p=0 stays in [0,1]: $d2")
-  }
-
-  test("source overlap: duplicated template across sources fills the right cells") {
-    val dup = "spark shuffle partition broadcast executor memory column " +
-      "predicate codegen catalyst tungsten adaptive skew salt bucket"
-    val rows = Seq(doc(1, dup, source = "srcA"), doc(2, dup, source = "srcA"),
-      doc(3, dup, source = "srcB"),
-      doc(4, "totally unrelated vocabulary nothing else matches anywhere " +
-        "disparate other terms beyond these words", source = "srcB"))
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.Dedup.dedupSourceOverlap(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    // clique {1,2,3}: (1,2) within srcA; (1,3),(2,3) bridge srcA↔srcB
-    assert(out(("srcA", "srcA")) == 1 && out(("srcA", "srcB")) == 2,
-      s"overlap cells wrong: $out")
-    assert(!out.contains(("srcB", "srcA")), "matrix must be upper-triangular")
   }
 
   test("lag features: calendar RANGE frame ages out, recency counts gaps") {
@@ -625,19 +595,6 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
     assert(r.getDouble(3) == 0.5 && r.getDouble(4) == 2.0, s"support/lift: $r")
   }
 
-  test("dedup rate report: exact dups counted by content, near rate covers the clique") {
-    val dup = "spark shuffle partition broadcast executor memory column " +
-      "predicate codegen catalyst tungsten adaptive skew salt bucket"
-    val rows = Seq(doc(1, dup), doc(2, dup), doc(3, dup),
-      doc(4, "some completely different text with its own vocabulary " +
-        "that shares nothing at all with the template words"))
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val r = graft.ops.Dedup.dedupRateReport(spark, dir).collect().head
-    assert(r.getLong(0) == 4 && r.getLong(1) == 2, s"3 identical docs = 2 exact dups: $r")
-    assert(r.getLong(3) == 3 && r.getDouble(6) == 0.75, s"clique of 3 in pairs: $r")
-    assert(r.getLong(4) == 0, "single-source fixture has no cross-source pairs")
-  }
-
   test("elasticity: a known log-log law is recovered exactly") {
     // qty = 100 / price  →  ln(qty) = ln(100) − 1·ln(unit price), slope −1
     val li = Seq(1.0, 2.0, 4.0, 5.0, 10.0).zipWithIndex.map { case (p, i) =>
@@ -719,17 +676,6 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
     val dirD = fixtureDir("events" -> spark.createDataset(shift).toDF)
     val zD = Relational.eventsTwoProportionZ(spark, dirD).collect().head
     assert(zD.getDouble(6) > 0, s"conversion drop must give positive z: $zD")
-  }
-
-  test("cluster sizes: histogram counts groups and the dup share reads off Σ(sz≥2)") {
-    val dup = "identical content"
-    val rows = Seq(doc(1, dup), doc(2, dup), doc(3, dup),
-      doc(4, "unique one"), doc(5, "unique two"))
-    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.Dedup.dedupClusterSizes(spark, dir).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    assert(out(1L).getLong(1) == 2 && out(3L).getLong(1) == 1, s"histogram: $out")
-    assert(out(1L).getDouble(3) == 0.6, "3 of 5 docs sit in a dup cluster")
   }
 
   test("fuzzy match: near names link inside the block, cross-block twins never meet") {

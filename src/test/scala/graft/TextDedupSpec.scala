@@ -464,4 +464,371 @@ class TextDedupSpec extends AnyFunSuite with SparkFixture {
     assert(r.getAs[Long]("n_split_docs") == 1L, "only doc2 crosses the cut")
     assert(r.getAs[Double]("fill_frac") == math.floor(300.0 / 512.0 * 1e4 + 0.5) / 1e4)
   }
+
+  test("degree stats: three identical docs form a triangle (deg 2, avg nbr deg 2)") {
+    val dup = "spark shuffle partition broadcast executor memory column " +
+      "predicate codegen catalyst tungsten adaptive skew salt bucket"
+    val rows = Seq(doc(1, dup), doc(2, dup), doc(3, dup),
+      doc(4, "completely different words entirely unrelated content here " +
+        "nothing shared with the duplicated template at all ever"))
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val out = graft.ops.Dedup.graphDegreeStats(spark, dir).collect()
+    val d2 = out.find(_.getLong(0) == 2L)
+    assert(d2.isDefined, s"expected a degree-2 class: ${out.mkString(";")}")
+    assert(d2.get.getLong(1) == 3 && d2.get.getDouble(2) == 2.0,
+      s"triangle nodes: 3 nodes of degree 2 with avg nbr deg 2: ${d2.get}")
+  }
+
+  test("source overlap: duplicated template across sources fills the right cells") {
+    val dup = "spark shuffle partition broadcast executor memory column " +
+      "predicate codegen catalyst tungsten adaptive skew salt bucket"
+    val rows = Seq(doc(1, dup, source = "srcA"), doc(2, dup, source = "srcA"),
+      doc(3, dup, source = "srcB"),
+      doc(4, "totally unrelated vocabulary nothing else matches anywhere " +
+        "disparate other terms beyond these words", source = "srcB"))
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val out = graft.ops.Dedup.dedupSourceOverlap(spark, dir).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    // clique {1,2,3}: (1,2) within srcA; (1,3),(2,3) bridge srcA↔srcB
+    assert(out(("srcA", "srcA")) == 1 && out(("srcA", "srcB")) == 2,
+      s"overlap cells wrong: $out")
+    assert(!out.contains(("srcB", "srcA")), "matrix must be upper-triangular")
+  }
+
+  test("dedup rate report: exact dups counted by content, near rate covers the clique") {
+    val dup = "spark shuffle partition broadcast executor memory column " +
+      "predicate codegen catalyst tungsten adaptive skew salt bucket"
+    val rows = Seq(doc(1, dup), doc(2, dup), doc(3, dup),
+      doc(4, "some completely different text with its own vocabulary " +
+        "that shares nothing at all with the template words"))
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val r = graft.ops.Dedup.dedupRateReport(spark, dir).collect().head
+    assert(r.getLong(0) == 4 && r.getLong(1) == 2, s"3 identical docs = 2 exact dups: $r")
+    assert(r.getLong(3) == 3 && r.getDouble(6) == 0.75, s"clique of 3 in pairs: $r")
+    assert(r.getLong(4) == 0, "single-source fixture has no cross-source pairs")
+  }
+
+  test("cluster sizes: histogram counts groups and the dup share reads off Σ(sz≥2)") {
+    val dup = "identical content"
+    val rows = Seq(doc(1, dup), doc(2, dup), doc(3, dup),
+      doc(4, "unique one"), doc(5, "unique two"))
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val out = graft.ops.Dedup.dedupClusterSizes(spark, dir).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    assert(out(1L).getLong(1) == 2 && out(3L).getLong(1) == 1, s"histogram: $out")
+    assert(out(1L).getDouble(3) == 0.6, "3 of 5 docs sit in a dup cluster")
+  }
+
+  // ---- graph_kcore: the peel is monotone ------------------------------
+
+  test("kcore: node and edge counts never increase across peel rounds") {
+    val out = Dedup.graphKcore(spark, "/root/testdata/sf0.001")
+      .collect().sortBy(_.getAs[Long]("round"))
+    assert(out.length == 4)
+    out.sliding(2).foreach { case Array(a, b) =>
+      assert(b.getAs[Long]("n_nodes") <= a.getAs[Long]("n_nodes"),
+        "peeling must not add nodes")
+      assert(b.getAs[Long]("n_edges") <= a.getAs[Long]("n_edges"),
+        "peeling must not add edges")
+    }
+  }
+
+  // ---- graph_common_neighbors: score-range + ordering invariants ------
+
+  test("common neighbors: scores well-formed, ordered pairs, jaccard in (0,1]") {
+    val out = Dedup.graphCommonNeighbors(spark, "/root/testdata/sf0.001")
+      .collect()
+    assert(out.nonEmpty, "sf0.001 candidate graph has wedges")
+    out.foreach { r =>
+      assert(r.getAs[Long]("a") < r.getAs[Long]("b"), "pairs are ordered")
+      assert(r.getAs[Long]("n_common") >= 1L)
+      val j = r.getAs[Double]("nbr_jaccard")
+      assert(j > 0.0 && j <= 1.0, s"jaccard out of range: $j")
+    }
+  }
+
+  // ---- graph_modularity: closed-form Q on planted cliques -------------
+
+  test("modularity: three equal duplicate cliques give Q = 2/3") {
+    // 3 groups x 4 identical docs: identical texts share every LSH band
+    // -> each group is a 4-clique (6 edges), no cross-group edges.
+    // L_c = m/3, D_c = 2m/3 -> Q = 3*(1/3 - 1/9) = 2/3.
+    val groups = Seq(
+      "alpha beta gamma delta epsilon zeta",
+      "one two three four five six",
+      "red green blue yellow purple orange")
+    val rows = for {
+      (t, g) <- groups.zipWithIndex
+      i <- 0 until 4
+    } yield DocRow(g * 10L + i + 1, t, "en", s"src$i", t.length.toLong)
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val r = Dedup.queries("graph_modularity")(spark, dir).collect()(0)
+    assert(r.getAs[Long]("n_nodes") == 12L && r.getAs[Long]("n_edges") == 18L,
+      s"three 4-cliques expected: $r")
+    assert(r.getAs[Long]("n_communities") == 3L, s"$r")
+    assert(math.abs(r.getAs[Double]("q_modularity") - 2.0 / 3.0) < 1e-3,
+      s"closed-form Q: $r")
+  }
+
+  // ---- dedup_cdc_chunks: content-defined boundaries re-align ----------
+
+  test("cdc chunks: chunk boundaries survive a front insertion (anti-fixed-width)") {
+    def toks(n: Int): Seq[String] =
+      (0 until n).map(i => s"w${(i * i * 2654435761L) % 97}")
+    val body = toks(200).mkString(" ")
+    val shifted = "zzz yyy xxx " + body // 3 junk tokens prepended
+    val rows = Seq(
+      DocRow(1L, body, "en", "s1", body.length.toLong),
+      DocRow(2L, body, "en", "s2", body.length.toLong),
+      DocRow(3L, shifted, "en", "s3", shifted.length.toLong))
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val out = Dedup.dedupCdcChunks(spark, dir).collect()
+    assert(out.nonEmpty, "identical docs must share chunks")
+    // identical docs 1,2 share every reported chunk; the shifted doc 3
+    // must RE-ALIGN after its prefix: at least one chunk is shared by
+    // all three (fixed-offset chunking would share none with doc 3)
+    val triple = out.filter(_.getAs[Long]("n_docs") == 3L)
+    assert(triple.nonEmpty,
+      "CDC must re-align chunks across a front insertion")
+    triple.foreach { r =>
+      assert(r.getAs[Long]("min_doc") == 1L &&
+        r.getAs[Long]("max_doc") == 3L, s"triple-shared span: $r")
+    }
+    // every reported chunk is >= the 5-token report floor
+    out.foreach(r => assert(r.getAs[Long]("token_len") >= 5L))
+  }
+
+  // ---- graph_bfs_layers: frontier contiguity and seed discipline ------
+
+  test("bfs layers: contiguous non-empty layers from exactly 3 seeds, disjoint") {
+    val out = Dedup.graphBfsLayers(spark, "/root/testdata/sf0.001")
+      .collect().map(r => r.getAs[Long]("dist") -> r).toMap
+    assert(out.keySet.subsetOf(Set(-1L, 0L, 1L, 2L, 3L)))
+    assert(out(0L).getAs[Long]("n_nodes") == 3L,
+      "BFS starts from exactly the 3 top-degree seeds")
+    // frontier contiguity: a layer can only exist if the previous did
+    (1L to 3L).foreach { t =>
+      if (out.contains(t)) assert(out.contains(t - 1),
+        s"layer $t cannot exist without layer ${t - 1}")
+    }
+    out.values.foreach { r =>
+      assert(r.getAs[Long]("n_nodes") > 0L)
+      assert(r.getAs[Long]("min_doc") <= r.getAs[Long]("max_doc"))
+    }
+  }
+
+  // ---- dedup_minhash_bbit: exactness at J=1 and the high-J tightening --
+
+  test("b-bit minhash: identical docs estimate J=1 exactly; error tightens at high J") {
+    // identical docs: every permutation's min matches, so every bit
+    // matches -> A = 1 -> est = 1, abs err exactly 0
+    val txt = (1 to 60).map(i => s"w${(i * 37) % 83}").mkString(" ")
+    val rows = Seq(DocRow(1L, txt, "en", "a", 0L), DocRow(2L, txt, "en", "b", 0L))
+    val dir = fixtureDir("documents" -> spark.createDataset(rows).toDF)
+    val out = Dedup.dedupMinhashBbit(spark, dir).collect()
+    assert(out.length == 1 && out(0).getAs[Double]("bucket") == 1.0,
+      s"identical docs land in the J=1 bucket: ${out.toSeq}")
+    assert(out(0).getAs[Double]("mean_est") == 1.0)
+    assert(out(0).getAs[Double]("mean_abs_err") == 0.0)
+    // real corpus: the Li-König behavior — the top-J band's calibration
+    // error is below the lowest band's (1-bit agreement is noisy at low
+    // J, tight exactly where dedup thresholds live)
+    val real = Dedup.dedupMinhashBbit(spark, "/root/testdata/sf0.001")
+      .collect().sortBy(_.getAs[Double]("bucket"))
+    assert(real.length >= 2, "sf0.001 must produce multiple J bands")
+    val lo = real.head.getAs[Double]("mean_abs_err")
+    val hi = real.last.getAs[Double]("mean_abs_err")
+    assert(hi < lo, s"error must tighten toward high J: low=$lo high=$hi")
+    real.foreach { r =>
+      val e = r.getAs[Double]("mean_est")
+      assert(e >= 0.0 && e <= 1.0, s"estimator out of range: $r")
+    }
+  }
+
+  private def cliqueDir(): String = {
+    // Docs 1-5 identical -> candidate graph K5; docs 6/7 disjoint.
+    val dup = "alpha beta gamma delta epsilon zeta eta theta"
+    fixtureDir("documents" -> spark.createDataset(Seq(
+      doc(1, dup), doc(2, dup), doc(3, dup), doc(4, dup), doc(5, dup),
+      doc(6, "one two three four five six seven eight"),
+      doc(7, "red green blue cyan magenta yellow black white"))).toDF)
+  }
+
+  test("adamic-adar: K5 pairs score 3 * r6(1/ln 4), all flagged edges") {
+    val out = Dedup.graphAdamicAdar(spark, cliqueDir()).collect()
+    assert(out.length == 10, s"K5 has C(5,2)=10 pairs, got ${out.length}")
+    val expect = 3.0 * math.floor(1e6 / math.log(4.0) + 0.5) / 1e6
+    out.foreach { r =>
+      assert(r.getAs[Long]("n_common") == 3L, s"$r")
+      assert(math.abs(r.getAs[Double]("aa_score") - expect) < 1e-9, s"$r")
+      assert(r.getAs[Boolean]("is_edge"), s"clique pairs are edges: $r")
+      assert(r.getAs[Long]("a") < r.getAs[Long]("b"))
+    }
+  }
+
+  test("assortativity: a regular graph has zero degree variance -> NULL") {
+    val r = Dedup.graphAssortativity(spark, cliqueDir()).collect()(0)
+    assert(r.getAs[Long]("n_nodes") == 5L)
+    assert(r.getAs[Long]("n_edges") == 10L)
+    assert(r.getAs[Double]("mean_deg") == 4.0)
+    assert(r.isNullAt(r.fieldIndex("assortativity")),
+      s"4-regular K5 must yield null assortativity: $r")
+  }
+
+  test("local_clustering: wedge accounting holds on the real candidate graph") {
+    val rows = Dedup.graphLocalClustering(spark, "/root/testdata/sf0.001")
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val deg = r.getAs[Long]("deg"); val w = r.getAs[Long]("n_wedges")
+      assert(w == deg * (deg - 1) / 2, s"wedges != C(deg,2): $r")
+      val lcc = r.getAs[Double]("lcc")
+      assert(lcc >= 0.0 && lcc <= 1.0, s"lcc out of range: $r")
+      assert(r.getAs[Long]("n_triangles") <= w)
+    }
+  }
+
+  test("closeness_sample: planted triangle gives harmonic 2.0, closeness 1") {
+    // 3 identical docs form a candidate-graph triangle; 2 unrelated docs
+    // share no tokens -> graph = K3, seeds = the three members (deg 2),
+    // each with n1 = 2, n2 = n3 = 0, n_nodes = 3 -> closeness = 1.0
+    val same = "alpha beta gamma delta epsilon zeta eta theta"
+    val docs = Seq(
+      DocRow(1L, same, "en", "s", same.length.toLong),
+      DocRow(2L, same, "en", "s", same.length.toLong),
+      DocRow(3L, same, "en", "s", same.length.toLong),
+      DocRow(4L, "uno dos tres quatro cinco seis", "en", "s", 30L),
+      DocRow(5L, "moon star cloud rain snow wind", "en", "s", 30L))
+    val dir = fixtureDir("documents" -> spark.createDataset(docs).toDF)
+    val r = Dedup.graphClosenessSample(spark, dir).collect()
+    assert(r.length == 3)
+    r.foreach { row =>
+      assert(Set(1L, 2L, 3L).contains(row.getAs[Long]("seed")))
+      assert(row.getAs[Long]("n1") == 2)
+      assert(row.getAs[Long]("n2") == 0 && row.getAs[Long]("n3") == 0)
+      assert(row.getAs[Long]("harmonic_micro") == 2000000L)
+      assert(row.getAs[Double]("closeness") == 1.0)
+    }
+  }
+
+  test("cascade_audit: each rung drops exactly its planted duplicate") {
+    // docs 3/4: same token SET, different text -> identical minhash
+    // signature (candidate in every band, deterministically) with
+    // verified Jaccard 1.0, yet NOT an exact dup (md5 differs)
+    val docs = Seq(
+      DocRow(1L, "same text twin one copy here now", "en", "s", 32L),
+      DocRow(2L, "same text twin one copy here now", "en", "s", 32L), // exact dup of 1
+      DocRow(3L, "red orange yellow green blue indigo", "en", "s", 36L),
+      DocRow(4L, "orange red yellow green indigo blue", "en", "s", 36L), // near dup of 3
+      DocRow(5L, "lion tiger bear wolf fox deer", "en", "s", 30L),
+      DocRow(6L, "ocean river lake pond creek bay", "en", "s", 30L))
+    val embs = Seq(
+      EmbRow(1L, Array(1f, 0f, 0f, 0f), 0),
+      EmbRow(2L, Array(0f, 1f, 0f, 0f), 0),
+      EmbRow(3L, Array(0f, 0f, 1f, 0f), 0),
+      EmbRow(4L, Array(0f, 0f, 0f, 1f), 0),
+      EmbRow(5L, Array(0.6f, 0.8f, 0f, 0f), 0),
+      EmbRow(6L, Array(0.6f, 0.8f, 0f, 0f), 0)) // semantic dup of 5
+    val dir = fixtureDir(
+      "documents" -> spark.createDataset(docs).toDF,
+      "embeddings" -> spark.createDataset(embs).toDF)
+    val r = Dedup.dedupCascadeAudit(spark, dir).collect()
+      .map(x => x.getAs[Long]("stage") -> x).toMap
+    assert(r(1L).getAs[Long]("n_in") == 6 && r(1L).getAs[Long]("n_dropped") == 1)
+    assert(r(2L).getAs[Long]("n_in") == 5 && r(2L).getAs[Long]("n_dropped") == 1)
+    assert(r(3L).getAs[Long]("n_in") == 4 && r(3L).getAs[Long]("n_dropped") == 1)
+    assert(r(3L).getAs[Long]("n_out") == 3)
+    assert(math.abs(r(3L).getAs[Double]("drop_frac") - 0.25) < 1e-9)
+  }
+
+  // ---- graph_betweenness_sample: hand-computed Brandes on a path ------
+
+  test("betweenness: path 1-2-3-4-5 gives the hand-computed truncated Brandes values") {
+    // seeds = top-3 by degree, id tiebreak -> {2, 3, 4}.
+    // Hand computation (depth cap 3, micro units):
+    //   seed 2: d2 level: delta(4) = 1·(1+0)        = 1e6
+    //           d1 level: delta(3) = 1·(1+delta(4)) = 2e6
+    //   seed 3: dist3 empty; d1: delta(2) = 1e6 (child 1),
+    //           delta(4) = 1e6 (child 5)
+    //   seed 4: mirror of seed 2: delta(2) = 1e6, delta(3) = 2e6
+    // totals: node2 = 2e6, node3 = 4e6, node4 = 2e6; endpoints absent.
+    // (True Brandes check: from seed 2, node 3 carries pairs 2→4 and
+    // 2→5 ⇒ δ = 2; symmetric from seed 4; node 2 carries 3→1 and 4→1.)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
+    val out = Dedup.betweennessFromEdges(spark, edges).collect()
+    val byNode = out.map(r => r.getAs[Long]("doc_id") ->
+      (r.getAs[Long]("bc_micro"), r.getAs[Long]("n_seeds"),
+        r.getAs[Double]("betweenness"))).toMap
+    assert(byNode.keySet == Set(2L, 3L, 4L), s"wrong node set: $byNode")
+    assert(byNode(2L) == ((2000000L, 2L, 2.0)))
+    assert(byNode(3L) == ((4000000L, 2L, 4.0)))
+    assert(byNode(4L) == ((2000000L, 2L, 2.0)))
+    // ordering: bc desc then id asc -> 3, 2, 4
+    assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(3L, 2L, 4L))
+  }
+
+  test("betweenness: a clique has no bridges (all dependencies zero)") {
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L)).toDF("d1", "d2")
+    // every pair is adjacent: no shortest path passes through anyone —
+    // the backward pass finds no dist-2 children, output is empty
+    assert(Dedup.betweennessFromEdges(spark, edges).collect().isEmpty)
+  }
+
+  test("jaccardPairs equals a Scala Set Jaccard; zero-overlap pairs stay at 0.0") {
+    import org.apache.spark.sql.functions.{array_distinct, col, split}
+    // duplicate-laden, unsorted texts; toks is the bases' distinct split
+    val texts = Map(1L -> "d b a b c d", 2L -> "c a e a", 3L -> "z y z",
+      4L -> "b d a c", 5L -> "q a")
+    val sets = texts.toSeq.map { case (id, t) => (id, t, s"tag$id") }
+      .toDF("doc_id", "text", "tag")
+      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"),
+        col("tag"))
+    val pairs = Seq((1L, 2L, "p"), (1L, 4L, "p"), (2L, 3L, "p"), (3L, 5L, "p"),
+      (2L, 5L, "p")).toDF("d1", "d2", "src")
+    val out = Dedup.jaccardPairs(pairs, sets, "tag").collect()
+    assert(out.length == 5, "inner joins on present docs keep every pair")
+    out.foreach { r =>
+      val (d1, d2) = (r.getAs[Long]("d1"), r.getAs[Long]("d2"))
+      val (a, b) = (texts(d1).split(" ").toSet, texts(d2).split(" ").toSet)
+      assert(r.getAs[Double]("jac") == (a & b).size.toDouble / (a | b).size.toDouble,
+        s"($d1, $d2): $r")
+      assert(r.getAs[Long]("inter") == (a & b).size)
+      assert(r.getAs[collection.Seq[String]]("t1") == a.toSeq.sorted)
+      assert(r.getAs[collection.Seq[String]]("t2") == b.toSeq.sorted)
+      assert(r.getAs[String]("tag1") == s"tag$d1" && r.getAs[String]("tag2") == s"tag$d2")
+      assert(r.getAs[String]("src") == "p")
+    }
+    val zero = out.filter(r => r.getAs[Long]("d1") == 2L && r.getAs[Long]("d2") == 3L)
+    assert(zero.length == 1 && zero.head.getAs[Double]("jac") == 0.0)
+  }
+
+  test("jaccardPairs alone owns the sorted-merge intersect, the verify sort and Jaccard") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"scanned too few sources: ${files.size}")
+    // (file, line, enclosing member) of every line matching `hit`
+    def hits(hit: String => Boolean): Seq[(String, Int, String)] = for {
+      f <- files
+      lines = Files.readString(f).split("\n").toSeq
+      (l, i) <- lines.zipWithIndex if hit(l)
+    } yield {
+      val member = lines.take(i).reverse.map("""^  (?:private\S* )?def (\w+)""".r.findFirstMatchIn(_))
+        .collectFirst { case Some(m) => m.group(1) }.getOrElse("")
+      (root.relativize(f).toString, i + 1, member)
+    }
+    val calls = hits(_.contains("SortedIntersectCount.sortedIntersect("))
+    assert(calls.map(c => (c._1, c._3)) == Seq(("ops/Dedup.scala", "jaccardPairs")),
+      s"sortedIntersect called outside jaccardPairs: $calls")
+    val dedup = Files.readString(root.resolve("ops/Dedup.scala"))
+    assert(!dedup.contains("array_sort(array_distinct("),
+      "a Dedup base sorts its token set; jaccardPairs owns the sort")
+    val denom = """\+[^+]*-\s*(?:col\("\w+"\)|\w+)\)\.cast\("double"\)""".r
+    val spelled = hits(l => denom.findFirstIn(l).isDefined)
+    assert(spelled.map(c => (c._1, c._3)) == Seq(("ops/Util.scala", "jaccard")),
+      s"a Jaccard denominator outside Util.jaccard: $spelled")
+  }
 }
