@@ -219,9 +219,10 @@ object StreamingModel {
     * final table state — last change wins per key, a trailing DELETE
     * removes the key. This is the [[graft.ops.PipelineOps.upsertCdc]]
     * MERGE run to the stream's END instead of one batch: the streaming
-    * runtime spells the identical fold as `mapGroupsWithState` keyed on
-    * user_id with O(1) state per key (op+value+version), which is why
-    * the batch window here IS the oracle-gateable model of it. One
+    * twin ([[graft.streaming.CdcApplyState]]) spells the identical fold
+    * as `flatMapGroupsWithState` state keyed on user_id, O(1) per key
+    * (op+value+version), which is why the batch window here IS the
+    * oracle-gateable model of it. One
     * partitioned window (no raw-data global sort); survivors only. */
   def cdcApply(spark: SparkSession, dir: String): DataFrame = {
     val order = Window.partitionBy("user_id").orderBy(desc("ts"), desc("event_id"))

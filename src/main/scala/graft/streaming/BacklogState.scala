@@ -19,9 +19,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Shape at scale: the stream folds into a per-hour count map (bounded
   * by the watermark horizon — hours in flight, not stream length); an
   * hour FINALIZES when the event-time watermark passes its end
-  * (EventTimeTimeout, the [[SmoothState]] / [[SequenceMatch]] eviction
-  * discipline), emitting in hour order so the recursion is
-  * deterministic. The single group key mirrors the batch model's one
+  * (EventTimeTimeout), emitting in hour order so the recursion is
+  * deterministic. This is the one twin outside [[KeyedFold]]: its
+  * timeout is armed at the oldest pending hour's end, on input and on
+  * timeout alike, not at the last event plus a quiet gap, and its
+  * per-batch counts need no fold order. The single group key mirrors the batch model's one
   * global queue — the inherently sequential recursion a real deployment
   * shards per queue/tenant key. Capacity is a constructor parameter:
   * streaming cannot derive it from a corpus total the way the batch

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.ops.StreamingModel.cdcApply]]
   * (`stream_cdc_apply`): the per-key CDC fold — last change wins,
@@ -12,13 +11,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * change history is unbounded, so this twin keeps exactly the fold's
   * state — (last op, last value, last event time, change count) — and
   * emits the key's row when its event time falls a quiet gap behind
-  * the watermark (EventTimeTimeout, the [[SmoothState]] /
+  * the watermark ([[KeyedFold]], the [[SmoothState]] /
   * [[SequenceMatch]] eviction discipline). Deleted keys emit nothing.
   *
-  * EPOCH contract (shared with every timeout-evicting twin in this
-  * package): eviction closes the key's quiet-gap EPOCH — a key whose
-  * next change arrives more than [[QuietGapMinutes]] of event time
-  * later starts a fresh epoch and will emit again, with n_changes
+  * EPOCH contract ([[KeyedFold]]'s, shared with every timeout-evicting
+  * twin in this package): eviction closes the key's quiet-gap EPOCH — a
+  * key whose next change arrives more than [[QuietGapMinutes]] of event
+  * time later starts a fresh epoch and will emit again, with n_changes
   * counting that epoch only, and a pre-delete emission is not
   * retracted by a later epoch's DELETE. Batch/stream parity with
   * `stream_cdc_apply` therefore holds per epoch (exactly — asserted in
@@ -29,7 +28,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * rather than holding every key forever — is what keeps state O(live
   * keys inside the horizon) instead of O(all keys ever seen).
   *
-  * Ordering contract (shared with [[SmoothState]]): rows fold in
+  * Ordering contract ([[KeyedFold]]'s): rows fold in
   * (microsecond event time, event_id) order WITHIN each micro-batch —
   * the batch window's exact sort key; cross-batch disorder inside the
   * watermark horizon is not re-sorted. */
@@ -37,7 +36,7 @@ object CdcApplyState {
 
   final case class ChangeEvent(
       user_id: Long, event_id: Long, ts: Timestamp,
-      event_type: String, value: Double)
+      event_type: String, value: Double) extends KeyedFold.Timed
   final case class CdcState(
       op: String, value: Double, lastUs: Long, lastId: Long, nChanges: Long)
   final case class CdcOut(
@@ -55,44 +54,26 @@ object CdcApplyState {
   def apply(changes: Dataset[ChangeEvent]): Dataset[CdcOut] = {
     import changes.sparkSession.implicits._
 
-    changes
-      .withWatermark("ts", s"$QuietGapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CdcState, CdcOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[ChangeEvent], state: GroupState[CdcState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            if (s.op == "D") Iterator.empty
-            // HALF_UP via BigDecimal — the exact rounding Spark's
-            // round(col, 2) applies in the batch twin; math.round rounds
-            // half toward +infinity and diverges on negative half-cents
-            // (-0.125 -> -0.12 instead of batch's -0.13)
-            else Iterator.single(CdcOut(uid, s.op,
-              java.math.BigDecimal.valueOf(s.value)
-                .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue(),
-              s.nChanges))
-          } else {
-            val sorted = rows.toSeq.sortBy(e =>
-              (e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L, e.event_id))
-            var s = state.getOption.getOrElse(CdcState("", 0.0, 0L, 0L, 0L))
-            sorted.foreach { e =>
-              val us = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-              // last-change-wins on the SAME key the batch window ranks by
-              val isLater = us > s.lastUs || (us == s.lastUs && e.event_id > s.lastId)
-              s = CdcState(
-                op = if (isLater) opOf(e.event_type) else s.op,
-                value = if (isLater) e.value else s.value,
-                lastUs = math.max(s.lastUs, us),
-                lastId = if (isLater) e.event_id else s.lastId,
-                nChanges = s.nChanges + 1)
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              s.lastUs / 1000L + QuietGapMinutes * 60L * 1000L)
-            Iterator.empty
-          }
-      }
+    KeyedFold(changes, QuietGapMinutes)(_.user_id, _.event_id, CdcState("", 0.0, 0L, 0L, 0L))(
+      step = (_, s, e, us) => {
+        // last-change-wins on the SAME key the batch window ranks by
+        val isLater = us > s.lastUs || (us == s.lastUs && e.event_id > s.lastId)
+        (CdcState(
+          op = if (isLater) opOf(e.event_type) else s.op,
+          value = if (isLater) e.value else s.value,
+          lastUs = math.max(s.lastUs, us),
+          lastId = if (isLater) e.event_id else s.lastId,
+          nChanges = s.nChanges + 1), Nil)
+      },
+      expire = (uid, s, _) => (None,
+        if (s.op == "D") Nil
+        // HALF_UP via BigDecimal — the exact rounding Spark's
+        // round(col, 2) applies in the batch twin; math.round rounds
+        // half toward +infinity and diverges on negative half-cents
+        // (-0.125 -> -0.12 instead of batch's -0.13)
+        else Seq(CdcOut(uid, s.op,
+          java.math.BigDecimal.valueOf(s.value)
+            .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue(),
+          s.nChanges))))
   }
 }

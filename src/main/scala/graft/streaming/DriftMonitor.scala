@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.ops.Relational.eventsCusumShift]]
   * (`events_cusum_shift`): the one-sided CUSUM drift monitor as
@@ -18,10 +17,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * whole value and must survive quiet gaps (state is bounded by the
   * number of event types, not by time). A day is FINALIZED (emitted,
   * folded into the cusum) when a newer day's first event arrives, or on
-  * event-time timeout ONLY once the watermark has passed the day's end
-  * — an earlier intra-day lull re-arms the timeout instead of emitting
-  * a partial day (and resetting the recursion), which a first version
-  * of this monitor did and the review caught: any overnight gap both
+  * event-time timeout ([[KeyedFold]]) ONLY once the watermark has passed
+  * the day's end — an earlier intra-day lull re-arms the timeout instead
+  * of emitting a partial day (and resetting the recursion), which a
+  * first version of this monitor did: any overnight gap both
   * double-emitted the split day and silently zeroed the accumulated
   * drift statistic.
   *
@@ -36,10 +35,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * needs. Rows later than the watermark never reach the function. */
 object DriftMonitor {
 
-  final case class DriftEvent(event_type: String, ts: Timestamp)
+  final case class DriftEvent(event_type: String, ts: Timestamp) extends KeyedFold.Timed
   final case class DriftState(
-      dayUs: Long, n: Long, cusum: Double, lateDropped: Long, lastUs: Long,
-      doneUs: Long)
+      dayUs: Long, n: Long, cusum: Double, lateDropped: Long, doneUs: Long)
   final case class DriftOut(
       event_type: String, day: String, n: Long, cusum: Double,
       alarm: Boolean, late_dropped: Long)
@@ -60,7 +58,7 @@ object DriftMonitor {
 
     def zone = java.time.ZoneId.of(zoneStr)
     def dayStartUs(us: Long): Long =
-      java.time.Instant.ofEpochMilli(us / 1000).atZone(zone)
+      java.time.Instant.ofEpochMilli(Math.floorDiv(us, 1000L)).atZone(zone)
         .toLocalDate.atStartOfDay(zone).toInstant.toEpochMilli * 1000L
     def dayEndUs(dayUs: Long): Long =
       java.time.Instant.ofEpochMilli(dayUs / 1000).atZone(zone)
@@ -69,72 +67,44 @@ object DriftMonitor {
       java.time.Instant.ofEpochMilli(dayUs / 1000).atZone(zone)
         .toLocalDate.toString
     def zOf(n: Long): Double = (n.toDouble - mu0 - 0.5 * sigma0) / sigma0
-    def foldDay(s: DriftState): (DriftState, DriftOut) = {
+    def foldDay(typ: String, s: DriftState): (DriftState, Seq[DriftOut]) = {
       val c = math.max(0.0, s.cusum + zOf(s.n))
-      val out = DriftOut(event_type = "", dayStr(s.dayUs), s.n, c,
-        alarm = c > h, s.lateDropped)
+      val out = DriftOut(typ, dayStr(s.dayUs), s.n, c, alarm = c > h, s.lateDropped)
       (s.copy(cusum = c, lateDropped = 0L, doneUs = s.dayUs, dayUs = -1L, n = 0L),
-        out)
+        Seq(out))
     }
 
-    events
-      .withWatermark("ts", s"$QuietGapMinutes minutes")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[DriftState, DriftOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (typ: String, rows: Iterator[DriftEvent], state: GroupState[DriftState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            val wmUs = state.getCurrentWatermarkMs() * 1000L
-            if (s.n > 0 && s.dayUs >= 0 && wmUs >= dayEndUs(s.dayUs)) {
-              // the open day can never be extended again (a same-day row
-              // would be behind the watermark and dropped upstream):
-              // emit it and KEEP the cusum — state survives the gap
-              val (folded, out) = foldDay(s)
-              state.update(folded)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + QuietGapMinutes * 60L * 1000L)
-              Iterator.single(out.copy(event_type = typ))
-            } else {
-              // a quiet lull while the day could still receive rows
-              // (other keys raced the watermark forward): re-arm, emit
-              // nothing — finalizing here would split the day
-              state.update(s)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + QuietGapMinutes * 60L * 1000L)
-              Iterator.empty
-            }
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var s = state.getOption.getOrElse(
-              DriftState(-1L, 0L, 0.0, 0L, 0L, -1L))
-            val emitted = scala.collection.mutable.ArrayBuffer[DriftOut]()
-            sorted.foreach { e =>
-              val us = e.ts.getTime * 1000L
-              val d = dayStartUs(us)
-              if (d <= s.doneUs) {
-                // a day that already folded into the cusum
-                s = s.copy(lateDropped = s.lateDropped + 1)
-              } else if (s.dayUs < 0) {
-                s = s.copy(dayUs = d, n = 1L)
-              } else if (d == s.dayUs) {
-                s = s.copy(n = s.n + 1)
-              } else if (d > s.dayUs) {
-                val (folded, out) = foldDay(s)
-                emitted += out.copy(event_type = typ)
-                s = folded.copy(dayUs = d, n = 1L)
-              } else {
-                // older than the open day but newer than the last
-                // finalized one: cross-day disorder inside the horizon
-                s = s.copy(lateDropped = s.lateDropped + 1)
-              }
-              s = s.copy(lastUs = math.max(s.lastUs, us))
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              s.lastUs / 1000L + QuietGapMinutes * 60L * 1000L)
-            emitted.iterator
-          }
-      }
+    KeyedFold(events, QuietGapMinutes)(_.event_type, _ => 0L,
+      DriftState(-1L, 0L, 0.0, 0L, -1L))(
+      step = (typ, s, _, us) => {
+        val d = dayStartUs(us)
+        if (d <= s.doneUs || (s.dayUs >= 0 && d < s.dayUs)) {
+          // a day that already folded into the cusum, or one older than
+          // the open day but newer than the last finalized one
+          // (cross-day disorder inside the horizon): counted, not folded
+          (s.copy(lateDropped = s.lateDropped + 1), Nil)
+        } else if (s.dayUs < 0) {
+          (s.copy(dayUs = d, n = 1L), Nil)
+        } else if (d == s.dayUs) {
+          (s.copy(n = s.n + 1), Nil)
+        } else {
+          val (folded, out) = foldDay(typ, s)
+          (folded.copy(dayUs = d, n = 1L), out)
+        }
+      },
+      // the state is never dropped: the cusum survives quiet gaps
+      expire = (typ, s, wmUs) =>
+        if (s.n > 0 && s.dayUs >= 0 && wmUs >= dayEndUs(s.dayUs)) {
+          // the open day can never be extended again (a same-day row
+          // would be behind the watermark and dropped upstream):
+          // emit it and KEEP the cusum
+          val (folded, out) = foldDay(typ, s)
+          (Some(folded), out)
+        } else {
+          // a quiet lull while the day could still receive rows
+          // (other keys raced the watermark forward): re-arm, emit
+          // nothing — finalizing here would split the day
+          (Some(s), Nil)
+        })
   }
 }

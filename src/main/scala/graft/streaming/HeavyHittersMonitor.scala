@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.Udaf
 
 /** Streaming heavy hitters — the sketch family
   * ([[graft.ops.Udaf.MisraGries]], declared `agg_heavy_hitters`) joined
   * to the streaming runtime: per hourly event-time window, a Misra–Gries
   * summary of the hot keys (users, tokens, IPs …) maintained as
-  * flatMapGroupsWithState state and emitted when the watermark closes
+  * [[KeyedFold]] state and emitted when the watermark closes
   * the window. This is the ops question "who is hammering us RIGHT NOW"
   * answered with bounded memory: state per open window is ≤ k counters
   * no matter how many distinct keys the window sees — the property that
@@ -20,15 +20,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * present. The spec drives a skewed fixture and asserts both the
   * guarantee and the bound against exact counts.
   *
-  * The fold/merge arithmetic is [[graft.ops.Udaf.MisraGries]]'s,
-  * re-spelled over a mutable map in local defs (the
-  * [[DriftMonitor]] serialization discipline); parity with the batch
-  * aggregator's semantics is part of the spec. */
+  * The fold is [[graft.ops.Udaf.MisraGries]]'s own `reduce` over its
+  * buffer, so the monitor and the batch aggregator share one MG step. */
 object HeavyHittersMonitor {
 
-  final case class KeyEvent(key: String, ts: Timestamp)
-  final case class HHState(windowUs: Long, counters: Map[String, Long],
-      nRows: Long, lastUs: Long)
+  final case class KeyEvent(key: String, ts: Timestamp) extends KeyedFold.Timed
+  final case class HHState(windowUs: Long, mg: Udaf.MGBuf, nRows: Long)
   final case class HHOut(window_start: String, key: String, est_n: Long,
       n_rows: Long, rank: Int)
 
@@ -39,59 +36,29 @@ object HeavyHittersMonitor {
   /** Per-hour MG(K) top-N over `events`, emitted as each hour closes. */
   def monitor(events: Dataset[KeyEvent]): Dataset[HHOut] = {
     import events.sparkSession.implicits._
-    val k = K
+    val mg = new Udaf.MisraGries(K)
     val topN = TopN
     val hourUs = 3600000000L
 
-    def mgAdd(m: Map[String, Long], key: String): Map[String, Long] =
-      m.get(key) match {
-        case Some(c) => m.updated(key, c + 1)
-        case None if m.size < k => m.updated(key, 1L)
-        case None => m.flatMap { case (t, c) =>
-          if (c > 1) Some(t -> (c - 1)) else None }
-      }
-    def emit(s: HHState): Iterator[HHOut] = {
+    def emit(s: HHState): Seq[HHOut] = {
       val start = java.time.Instant.ofEpochMilli(s.windowUs / 1000)
         .atZone(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:00"))
-      s.counters.toSeq.sortBy { case (key, c) => (-c, key) }.take(topN)
-        .zipWithIndex.iterator
+      s.mg.m.toSeq.sortBy { case (key, c) => (-c, key) }.take(topN)
+        .zipWithIndex
         .map { case ((key, c), i) => HHOut(start, key, c, s.nRows, i + 1) }
     }
 
-    events
-      .withWatermark("ts", s"$QuietGapMinutes minutes")
-      .groupByKey(_ => "all") // one monitor; shard the key for multi-tenant
-      .flatMapGroupsWithState[HHState, HHOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: String, rows: Iterator[KeyEvent], state: GroupState[HHState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            if (s.nRows > 0) emit(s) else Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.key))
-            var s = state.getOption.getOrElse(HHState(-1L, Map.empty, 0L, 0L))
-            val out = scala.collection.mutable.ArrayBuffer[HHOut]()
-            sorted.foreach { e =>
-              val us = e.ts.getTime * 1000L
-              val w = us - us % hourUs
-              if (s.windowUs < 0) s = s.copy(windowUs = w)
-              if (w > s.windowUs) {           // hour rolled over: flush
-                out ++= emit(s)
-                s = HHState(w, Map.empty, 0L, s.lastUs)
-              }
-              if (w >= s.windowUs) {
-                s = s.copy(counters = mgAdd(s.counters, e.key),
-                  nRows = s.nRows + 1)
-              }                                // pre-finalized hour: drop
-              s = s.copy(lastUs = math.max(s.lastUs, us))
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              s.lastUs / 1000L + QuietGapMinutes * 60L * 1000L)
-            out.iterator
-          }
-      }
+    // one monitor; shard the key for multi-tenant
+    KeyedFold(events, QuietGapMinutes)(_ => "all", _.key, HHState(-1L, mg.zero, 0L))(
+      step = (_, s, e, us) => {
+        val w = us - us % hourUs
+        if (s.windowUs < 0 || w == s.windowUs)
+          (HHState(w, mg.reduce(s.mg, e.key), s.nRows + 1), Nil)
+        else if (w > s.windowUs)           // hour rolled over: flush
+          (HHState(w, mg.reduce(mg.zero, e.key), 1L), emit(s))
+        else (s, Nil)                      // pre-finalized hour: drop
+      },
+      expire = (_, s, _) => (None, if (s.nRows > 0) emit(s) else Nil))
   }
 }

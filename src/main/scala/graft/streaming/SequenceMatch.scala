@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.ops.Relational.eventsSequenceMatch]]
   * (`events_sequence_match`): per-user conversion-pattern matching
@@ -12,8 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * streaming scale the path is unbounded, so this twin keeps O(1) state
   * per user — a 3-field automaton — and emits the summary when the
   * user's event-time falls a quiet-gap behind the watermark
-  * (EventTimeTimeout), the same state-eviction discipline as
-  * [[Sessionize]].
+  * ([[KeyedFold]], the same state-eviction discipline as
+  * [[Sessionize]]).
   *
   * The automaton IS the regex, scanned left to right: 'c' (re)arms a
   * candidate (the leftmost-match retry point), 'v' sustains it, 'p'
@@ -22,17 +21,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `cv*p` exactly (StreamingDemoSpec asserts stream/batch parity on a
   * fixture driven through MemoryStream).
   *
-  * Ordering contract (shared with [[Sessionize]]): rows are folded in
-  * event-time order WITHIN each micro-batch; cross-batch disorder inside
-  * the watermark horizon is not re-sorted. A deployment needing total
-  * order buffers rows in state until the watermark passes them —
-  * bounded by the same horizon — at the cost of a larger state row. */
+  * Ordering contract ([[KeyedFold]]'s): rows fold in (microsecond event
+  * time, event_id) order WITHIN each micro-batch — the batch path's
+  * `array_sort` key; cross-batch disorder inside the watermark horizon
+  * is not re-sorted. */
 object SequenceMatch {
 
-  final case class SeqEvent(user_id: Long, ts: Timestamp, event_type: String)
+  final case class SeqEvent(user_id: Long, event_id: Long, ts: Timestamp, event_type: String)
+      extends KeyedFold.Timed
   final case class SeqState(
       inCand: Boolean, nEvents: Long, nConv: Long, sawError: Boolean,
-      pathHead: String, lastUs: Long)
+      pathHead: String)
   final case class SeqOut(
       user_id: Long, n_events: Long, n_conversions: Long,
       saw_error: Boolean, path_head: String)
@@ -44,7 +43,7 @@ object SequenceMatch {
   def sequenceMatch(events: Dataset[SeqEvent]): Dataset[SeqOut] = {
     import events.sparkSession.implicits._
 
-    def fold(s: SeqState, ch: Char, us: Long): SeqState = {
+    def fold(s: SeqState, ch: Char): SeqState = {
       val (inCand, conv) = ch match {
         case 'c' => (true, s.nConv)
         case 'v' => (s.inCand, s.nConv)
@@ -56,32 +55,13 @@ object SequenceMatch {
         nEvents = s.nEvents + 1,
         nConv = conv,
         sawError = s.sawError || ch == 'e',
-        pathHead = if (s.pathHead.length < 20) s.pathHead + ch else s.pathHead,
-        lastUs = math.max(s.lastUs, us))
+        pathHead = if (s.pathHead.length < 20) s.pathHead + ch else s.pathHead)
     }
 
-    events
-      .withWatermark("ts", s"$QuietGapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqState, SeqOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[SeqEvent], state: GroupState[SeqState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SeqOut(uid, s.nEvents, s.nConv, s.sawError, s.pathHead))
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_type))
-            var s = state.getOption.getOrElse(
-              SeqState(inCand = false, 0L, 0L, sawError = false, "", 0L))
-            sorted.foreach { e =>
-              s = fold(s, e.event_type.charAt(0), e.ts.getTime * 1000L)
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              s.lastUs / 1000L + QuietGapMinutes * 60L * 1000L)
-            Iterator.empty
-          }
-      }
+    KeyedFold(events, QuietGapMinutes)(_.user_id, _.event_id,
+      SeqState(inCand = false, 0L, 0L, sawError = false, ""))(
+      step = (_, s, e, _) => (fold(s, e.event_type.charAt(0)), Nil),
+      expire = (uid, s, _) =>
+        (None, Seq(SeqOut(uid, s.nEvents, s.nConv, s.sawError, s.pathHead))))
   }
 }

@@ -2,19 +2,20 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom streaming state via KeyValueGroupedDataset.flatMapGroupsWithState:
-  * per-user session windows with an inactivity gap — the stateful
-  * counterpart of the lag+cumsum batch model in
-  * [[graft.ops.StreamingModel.sessionGap]] and the semantics of
-  * `session_window(ts, gap)`, but with explicit state so the session can
-  * carry arbitrary payload (counts here; at 100 TB the state store shards
-  * by user across executors, and event-time timeouts bound state size).
+/** Custom streaming state via [[KeyedFold]]: per-user session windows
+  * with an inactivity gap — the stateful counterpart of the lag+cumsum
+  * batch model in [[graft.ops.StreamingModel.sessionGap]] and of
+  * `events_sessionize` (the same `us − lastUs ≤ gap` test on exact
+  * microseconds), and the semantics of `session_window(ts, gap)`, but
+  * with explicit state so the session can carry arbitrary payload
+  * (counts here; at 100 TB the state store shards by user across
+  * executors, and event-time timeouts bound state size).
   */
 object Sessionize {
 
-  final case class SessEvent(user_id: Long, ts: Timestamp)
+  final case class SessEvent(user_id: Long, ts: Timestamp) extends KeyedFold.Timed
+  /** `n == 0` before the user's first event. */
   final case class SessState(startUs: Long, lastUs: Long, n: Int)
   final case class SessionOut(user_id: Long, start_us: Long, n_events: Int, duration_s: Long)
 
@@ -25,38 +26,14 @@ object Sessionize {
     def close(uid: Long, s: SessState): SessionOut =
       SessionOut(uid, s.startUs, s.n, (s.lastUs - s.startUs) / 1000000L)
 
-    events
-      .withWatermark("ts", s"$gapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[SessEvent], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last-event + gap: the session can never be
-            // extended again (late rows would be dropped upstream) → emit
-            val out = close(uid, state.get)
-            state.remove()
-            Iterator.single(out)
-          } else {
-            val evs = rows.map(e => e.ts.getTime * 1000L).toSeq.sorted
-            val closed = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-            var cur = state.getOption
-            evs.foreach { us =>
-              cur = cur match {
-                case Some(s) if us - s.lastUs <= gapUs =>
-                  Some(s.copy(lastUs = math.max(s.lastUs, us), n = s.n + 1))
-                case Some(s) =>
-                  closed += close(uid, s)
-                  Some(SessState(us, us, 1))
-                case None => Some(SessState(us, us, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastUs / 1000L + gapMinutes * 60L * 1000L)
-            }
-            closed.iterator
-          }
-      }
+    KeyedFold(events, gapMinutes)(_.user_id, _ => 0L, SessState(0L, 0L, 0))(
+      step = (uid, s, _, us) =>
+        if (s.n == 0) (SessState(us, us, 1), Nil)
+        else if (us - s.lastUs <= gapUs)
+          (s.copy(lastUs = math.max(s.lastUs, us), n = s.n + 1), Nil)
+        else (SessState(us, us, 1), Seq(close(uid, s))),
+      // watermark passed last-event + gap: the session can never be
+      // extended again (late rows would be dropped upstream) → emit
+      expire = (uid, s, _) => (None, Seq(close(uid, s))))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{PipelineOps, Relational, StreamingModel, Text}
+import graft.ops.{PipelineOps, Relational, Text}
 
 case class CustRow10(c_custkey: Long, c_mktsegment: String,
     c_acctbal: java.math.BigDecimal)
@@ -250,29 +250,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
     // non-duplicate band collisions (if any) sit far outside threshold
     out.tail.foreach(r => assert(r.getAs[Long]("hamming") > 12,
       s"stub hashes of distinct payloads cannot be near: $r"))
-  }
-
-  // ---- stream_cdc_apply: last change wins, deletes drop ---------------
-
-  test("cdc apply: trailing delete removes the key; re-insert after delete survives") {
-    val base = ts("2024-06-01 00:00:00").getTime
-    def ev(id: Long, sec: Int, u: Long, typ: String, v: Double) =
-      EventRow(id, new Timestamp(base + sec * 1000L), u, typ, v, "{}")
-    val rows = Seq(
-      ev(1, 1, 10L, "signup", 1.0), ev(2, 2, 10L, "click", 2.0),
-      ev(3, 3, 10L, "error", 0.0),                     // u10: deleted
-      ev(4, 1, 20L, "signup", 5.0), ev(5, 2, 20L, "click", 7.5), // u20: upserted
-      ev(6, 1, 30L, "error", 0.0), ev(7, 2, 30L, "signup", 9.0)) // u30: re-inserted
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.StreamingModel.queries("stream_cdc_apply")(spark, dir)
-      .collect().map(r => r.getAs[Long]("user_id") -> r).toMap
-    assert(!out.contains(10L), "trailing DELETE must remove the key")
-    assert(out(20L).getAs[String]("last_op") == "U" &&
-      out(20L).getAs[Double]("last_value") == 7.5 &&
-      out(20L).getAs[Long]("n_changes") == 2L)
-    assert(out(30L).getAs[String]("last_op") == "I" &&
-      out(30L).getAs[Double]("last_value") == 9.0,
-      "INSERT after DELETE must survive")
   }
 
   // ---- text_keyword_rake: stopword boundaries + degree scoring --------
@@ -895,38 +872,6 @@ class Round10OpsSpec extends AnyFunSuite with SparkFixture {
     assert(out("view").getAs[Long]("n_exposed") == 60L)
     assert(out("click").getAs[Long]("n_exposed") == 60L)
     assert(out("signup").getAs[Long]("n_exposed") == 0L)
-  }
-
-  // ---- stream_decay_topk: batch value == the streaming state machine --
-
-  test("decay topk: matches the sequential decayed-counter state machine; half-life is 7 days") {
-    val base = ts("2024-03-01 00:00:00").getTime
-    val day = 86400000L
-    // user 1: value 8 today; user 2: value 8 seven days ago (half);
-    // user 3: drip of 1/day for 10 days
-    val rows = Seq(
-      EventRow(1, new Timestamp(base + 20 * day), 1L, "click", 8.0, "{}"),
-      EventRow(2, new Timestamp(base + 13 * day), 2L, "click", 8.0, "{}")) ++
-      (0 until 10).map(i =>
-        EventRow(10 + i, new Timestamp(base + (11 + i) * day), 3L, "click", 1.0, "{}"))
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = StreamingModel.decayTopk(spark, dir)
-      .collect().map(r => r.getAs[Long]("user_id") -> r).toMap
-    assert(math.abs(out(1L).getAs[Double]("decayed_score") - 8.0) < 1e-3,
-      "an event AT t_max carries full weight")
-    assert(math.abs(out(2L).getAs[Double]("decayed_score") - 4.0) < 1e-3,
-      "an event one half-life old carries half weight")
-    // sequential state machine: score' = score * 2^(-gap/7d) + v
-    val evs3 = rows.filter(_.user_id == 3L).sortBy(_.ts.getTime)
-    val tMax = rows.map(_.ts.getTime).max
-    def decay(ms: Long) = math.pow(2.0, -ms.toDouble / (7.0 * day))
-    var (score, last) = (0.0, evs3.head.ts.getTime)
-    evs3.foreach { e =>
-      score = score * decay(e.ts.getTime - last) + e.value; last = e.ts.getTime
-    }
-    score *= decay(tMax - last)
-    assert(math.abs(out(3L).getAs[Double]("decayed_score") - score) < 1e-3,
-      s"batch decayed sum must equal the streaming counter: $score")
   }
 
   // ---- agg_markov_attribution: removal effects on a planted chain -----

@@ -401,28 +401,6 @@ class Round11OpsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("backlog model: hand-computed Lindley trace with a gap hour") {
-    // arrivals per hour [5, 0(gap), 1, 10], capacity = ceil(16/4) = 4:
-    // W = [1, 0, 0, 6]; the gap hour must appear in the grid and drain.
-    val t0 = ts("2024-06-03 00:00:00").getTime
-    var id = 0L
-    val rows = Seq((0, 5), (2, 1), (3, 10)).flatMap { case (h, n) =>
-      (0 until n).map { _ =>
-        id += 1
-        EventRow(id, new Timestamp(t0 + h * 3600000L), id % 5, "view", 1.0, "{}")
-      }
-    }
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.StreamingModel.backlogModel(spark, dir).collect()
-    assert(out.length == 4, s"grid must include the gap hour: ${out.length}")
-    assert(out.map(_.getAs[Long]("n_in")).toSeq == Seq(5L, 0L, 1L, 10L))
-    assert(out.forall(_.getAs[Long]("capacity") == 4L))
-    assert(out.map(_.getAs[Long]("backlog")).toSeq == Seq(1L, 0L, 0L, 6L),
-      s"Lindley trace mismatch: ${out.mkString(";")}")
-    assert(out.map(_.getAs[Boolean]("is_congested")).toSeq ==
-      Seq(true, false, false, true))
-  }
-
   test("sprt: planted uplift accepts H1, planted null drifts to H0") {
     val d0 = java.time.LocalDate.of(2024, 6, 3)
     var id = 0L

@@ -1,8 +1,7 @@
 package graft
 
-import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{PipelineOps, Relational, StreamingModel}
+import graft.ops.{PipelineOps, Relational}
 
 /** Planted-structure tests for the round-12 operators — each fixture
   * builds a configuration whose answer is known on paper, so a logic
@@ -120,40 +119,6 @@ class Round12OpsSpec extends AnyFunSuite with SparkFixture {
       .map(_.toDouble).getOrElse(0.0))
     assert(fpps(0) >= fpps(1) && fpps(1) >= fpps(2),
       s"fpp must not increase with filter size: ${fpps.toSeq}")
-  }
-
-  test("watermark_advance: late row in batch 1 drops against batch-0 watermark") {
-    val t0 = ts("2024-03-01 00:00:00")
-    def at(h: Double) = new Timestamp(t0.getTime + (h * 3600 * 1000).toLong)
-    val ev = Seq(
-      EventRow(0L, at(0.0), 1L, "click", 1.0, "{}"),
-      EventRow(4999L, at(2.0), 1L, "click", 1.0, "{}"),
-      EventRow(5000L, at(0.0), 2L, "click", 1.0, "{}"),  // 1h late vs wm
-      EventRow(5001L, at(3.0), 2L, "click", 1.0, "{}"))
-    val dir = fixtureDir("events" -> spark.createDataset(ev).toDF)
-    val rows = StreamingModel.watermarkAdvance(spark, dir).collect()
-    assert(rows.length == 2)
-    assert(rows(0).getAs[String]("wm_s") == null) // no watermark yet
-    assert(rows(0).getAs[Long]("n_dropped") == 0)
-    assert(rows(1).getAs[String]("wm_s") == "2024-03-01 01:00:00.000000")
-    assert(rows(1).getAs[Long]("n_dropped") == 1)
-  }
-
-  test("state_size: session state opens at first event, expires at gap timeout") {
-    val ev = Seq(
-      EventRow(1L, ts("2024-03-01 10:00:00"), 1L, "click", 1.0, "{}"),
-      EventRow(2L, ts("2024-03-01 10:10:00"), 1L, "click", 1.0, "{}"),
-      EventRow(3L, ts("2024-03-01 10:50:00"), 2L, "click", 1.0, "{}"))
-    val dir = fixtureDir("events" -> spark.createDataset(ev).toDF)
-    val rows = StreamingModel.stateSize(spark, dir).collect()
-      .map(r => r.getAs[String]("hour") -> r).toMap
-    // user1: opens 10:00, expires 10:40 (same hour); user2: opens 10:50,
-    // expires 11:20 -> one state row still held at the 10:59 boundary
-    assert(rows("2024-03-01 10:00:00").getAs[Long]("n_opened") == 2)
-    assert(rows("2024-03-01 10:00:00").getAs[Long]("n_closed") == 1)
-    assert(rows("2024-03-01 10:00:00").getAs[Long]("state_rows") == 1)
-    assert(rows("2024-03-01 11:00:00").getAs[Long]("n_closed") == 1)
-    assert(rows("2024-03-01 11:00:00").getAs[Long]("state_rows") == 0)
   }
 
   test("quantile_histogram: exact selection rule on planted multisets") {

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{PipelineOps, Relational, StreamingModel, Vector}
+import graft.ops.{PipelineOps, Relational, Vector}
 
 /** Planted-structure tests for the round-14 operators — each fixture
   * builds a configuration whose answer is known on paper, so a logic
@@ -57,49 +57,6 @@ class Round14OpsSpec extends AnyFunSuite with SparkFixture {
       last.getAs[Long]("live_entries") == 1 &&
       last.getAs[Long]("folded_entries") == 2 &&
       last.getAs[Long]("state_rows") == 2)
-  }
-
-  // ---- stream_exactly_once_sink: the crash epoch is offered twice, committed once
-
-  test("exactly_once_sink: re-delivered epoch is skipped, ledger equals plain truth") {
-    val base = ts("2024-03-01 00:00:00").getTime
-    val rows = Seq(0L, 1L, 5000L, 10000L, 10001L).zipWithIndex.map {
-      case (id, i) =>
-        EventRow(id, new Timestamp(base + i * 1000L), 1L, "c", 2.0, "{}")
-    }
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = StreamingModel.exactlyOnceSink(spark, dir).collect()
-    // batches 0(2 rows), 1(1 row), 2(2 rows); crash epoch x = (0+2)/2 = 1
-    assert(out.length == 4)
-    val att = out.map(r => (r.getAs[Long]("batch_id"), r.getAs[Int]("attempt"),
-      r.getAs[String]("action"), r.getAs[Long]("rows_committed")))
-    assert(att.toSeq == Seq((0L, 1, "commit", 2L), (1L, 1, "commit", 1L),
-      (1L, 2, "skip_duplicate", 0L), (2L, 1, "commit", 2L)))
-    val fin = out.last
-    assert(fin.getAs[Long]("committed_todate") == 5L)
-    assert(fin.getAs[Long]("dup_suppressed_todate") == 1L)
-    // value checksum rides the committed rows only
-    assert(out.map(_.getAs[Long]("cents_committed")).sum == 5 * 200L)
-  }
-
-  // ---- stream_session_state: hand-traced open/close/state accounting --
-
-  test("session_state: a session closes when the watermark passes last+gap") {
-    val rows = Seq(
-      EventRow(0L, ts("2024-01-01 10:00:00"), 1L, "c", 1.0, "{}"),
-      EventRow(1L, ts("2024-01-01 10:10:00"), 1L, "c", 1.0, "{}"),
-      EventRow(5000L, ts("2024-01-01 12:00:00"), 1L, "c", 1.0, "{}"))
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = StreamingModel.sessionStateModel(spark, dir).collect()
-      .map(r => r.getAs[Long]("batch_id") -> r).toMap
-    // batch0: wm 09:40 -> session 1 (last 10:10, timeout 10:40) open
-    assert(out(0L).getAs[Long]("n_opened") == 1 &&
-      out(0L).getAs[Long]("n_closed") == 0 &&
-      out(0L).getAs[Long]("state_rows") == 1)
-    // batch1: wm 11:30 > 10:40 -> session 1 closes; session 2 opens
-    assert(out(1L).getAs[Long]("n_opened") == 1 &&
-      out(1L).getAs[Long]("n_closed") == 1 &&
-      out(1L).getAs[Long]("state_rows") == 1)
   }
 
   // ---- agg_tdigest_quantiles: uniform 1..1000 cents --------------------

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Relational, StreamingModel, Text, Vector}
+import graft.ops.{Relational, Text, Vector}
 
 /** Planted-structure tests for the round-15 operators — each fixture
   * builds a configuration whose answer is known on paper, so a logic
@@ -156,31 +156,6 @@ class Round15OpsSpec extends AnyFunSuite with SparkFixture {
     assert(out.getAs[Long]("n_lo") == 1L && out.getAs[Long]("n_hi") == 1L)
     assert(out.getAs[Double]("p05") == 1.0 && out.getAs[Double]("p95") == 19.0)
     assert(out.getAs[Double]("win_mean_qty") == 10.0)
-  }
-
-  // ---- stream_outoforder_ratio: hand-traced lateness buckets ----------
-
-  test("outoforder ratio: lateness buckets measure against the prior-epoch watermark") {
-    val rows = Seq(
-      EventRow(0L, ts("2024-01-01 10:00:00"), 1L, "c", 1.0, "{}"),
-      EventRow(1L, ts("2024-01-01 11:00:00"), 1L, "c", 1.0, "{}"),
-      // batch 1: wm_prev = 11:00 − 30 min = 10:30
-      EventRow(5000L, ts("2024-01-01 09:00:00"), 1L, "c", 1.0, "{}"), // 90 min late
-      EventRow(5001L, ts("2024-01-01 10:29:00"), 1L, "c", 1.0, "{}"), // 60 s late
-      // batch 2: wm_prev still 10:30 (batch 1 max < 11:00)
-      EventRow(10000L, ts("2024-01-01 12:00:00"), 1L, "c", 1.0, "{}"))
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = StreamingModel.outOfOrderRatio(spark, dir).collect()
-    val byB = out.map(r => r.getAs[Long]("batch_id") -> r).toMap
-    assert(byB(0L).getAs[Long]("n_late") == 0L, "no watermark before epoch 0")
-    val b1 = byB(1L)
-    assert(b1.getAs[Long]("n_rows") == 2L && b1.getAs[Long]("n_late") == 2L)
-    assert(b1.getAs[Long]("n_late_5m") == 1L &&
-      b1.getAs[Long]("n_late_30m") == 0L &&
-      b1.getAs[Long]("n_late_gt30m") == 1L)
-    assert(b1.getAs[Long]("max_late_us") == 5400L * 1000000L)
-    assert(b1.getAs[Double]("late_ratio") == 1.0)
-    assert(byB(2L).getAs[Long]("n_late") == 0L)
   }
 
   // ---- embedding_norm_outlier: hand-computed 2σ flag ------------------

@@ -60,32 +60,6 @@ class Round16OpsSpec extends AnyFunSuite with SparkFixture {
       s"no-dimension entity must hit the sentinel: ${out(104L)}")
   }
 
-  // ---- stream_state_ttl: hand-built epoch timeline --------------------
-
-  test("state ttl: insert/refresh/evict/re-insert accounting over a sparse epoch timeline") {
-    // epochs = event_id div 5000, ttl = 2 (evict at last_touch + 3).
-    // key (u1, click): touch at epochs 0, 1, 5  -> insert@0, refresh@1,
-    //   evict@4 (gap 4 > 2), re-insert@5, final evict@8 (8 <= b_max 9).
-    // key (u2, view): touch at epoch 9 -> insert@9, survives (12 > 9).
-    def ev(id: Long, u: Long, t: String) =
-      EventRow(id, ts("2024-01-01 00:00:00"), u, t, 1.0, "{}")
-    val rows = Seq(ev(0L, 1L, "click"), ev(5000L, 1L, "click"),
-      ev(25000L, 1L, "click"), ev(45000L, 2L, "view"))
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.StreamingModel.stateTtl(spark, dir).collect()
-      .map(r => r.getAs[Long]("batch_id") ->
-        (r.getAs[Long]("n_inserts"), r.getAs[Long]("n_refresh"),
-          r.getAs[Long]("n_evicted"), r.getAs[Long]("state_rows"))).toMap
-    assert(out.keySet == Set(0L, 1L, 4L, 5L, 8L, 9L),
-      s"epoch frame must include eviction-only ticks: ${out.keySet}")
-    assert(out(0L) == ((1L, 0L, 0L, 1L)))
-    assert(out(1L) == ((0L, 1L, 0L, 1L)))
-    assert(out(4L) == ((0L, 0L, 1L, 0L)), s"TTL eviction tick: ${out(4L)}")
-    assert(out(5L) == ((1L, 0L, 0L, 1L)), "a touch after expiry re-inserts")
-    assert(out(8L) == ((0L, 0L, 1L, 0L)), "the final touch expires too")
-    assert(out(9L) == ((1L, 0L, 0L, 1L)), "a key inside its TTL survives")
-  }
-
   // ---- multimodal_av_sync_drift: uniform-payload slope ----------------
 
   test("av sync drift: a uniform payload isolates the clock skew as the exact per-frame slope") {

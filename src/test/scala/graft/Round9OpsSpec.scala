@@ -714,27 +714,6 @@ class Round9OpsSpec extends AnyFunSuite with SparkFixture
     assert(out(4L).getAs[Long]("kept_chars") == 7L, "non-boilerplate keeps full length")
   }
 
-  // ---- stream_join_within ----
-
-  test("join within: inclusive 30-min band, pair (not nearest) semantics, user-scoped") {
-    val base = ts("2024-03-01 00:00:00").getTime
-    def ev(id: Long, offMin: Long, user: Long, typ: String) =
-      EventRow(id, new Timestamp(base + offMin * 60000L), user, typ, 1.0, "{}")
-    val rows = Seq(
-      ev(1L, 0, 1L, "click"),
-      ev(2L, 10, 1L, "purchase"),  // in band
-      ev(3L, 30, 1L, "purchase"),  // boundary: inclusive
-      ev(4L, 31, 1L, "purchase"),  // past band
-      ev(5L, -1, 1L, "purchase"),  // before the click
-      ev(6L, 5, 2L, "purchase"))   // other user
-    val dir = fixtureDir("events" -> spark.createDataset(rows).toDF)
-    val out = graft.ops.StreamingModel.joinWithin(spark, dir).collect()
-    assert(out.map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("purchase_id")))
-      .toSeq == Seq((1L, 2L), (1L, 3L)),
-      "one click emits EVERY in-band purchase; band is [0, 30 min] inclusive")
-    assert(out.head.getAs[Long]("gap_us") == 600000000L)
-  }
-
   // ---- events_holt_forecast ----
 
   test("holt: level/trend recursion matches the hand fold; forecast is linear in h") {

@@ -158,7 +158,7 @@ class StreamingDemoSpec extends AnyFunSuite with SparkFixture {
       'a' -> "addcart", 'e' -> "error")
     val evs = seqs.toSeq.flatMap { case (uid, path) =>
       path.zipWithIndex.map { case (ch, i) =>
-        SeqEvent(uid, ts(f"2024-01-01 10:${i}%02d:00"), names(ch))
+        SeqEvent(uid, uid * 100 + i, ts(f"2024-01-01 10:${i}%02d:00"), names(ch))
       }
     }
     val ms = MemoryStream[SeqEvent]
@@ -171,8 +171,8 @@ class StreamingDemoSpec extends AnyFunSuite with SparkFixture {
       val (b1, b2) = evs.partition(_.ts.getTime <= ts("2024-01-01 10:03:00").getTime)
       ms.addData(b1: _*); q.processAllAvailable()
       ms.addData(b2: _*); q.processAllAvailable()
-      ms.addData(SeqEvent(99L, ts("2024-01-01 14:00:00"), "view")); q.processAllAvailable()
-      ms.addData(SeqEvent(99L, ts("2024-01-01 15:00:00"), "view")); q.processAllAvailable()
+      ms.addData(SeqEvent(99L, 9900L, ts("2024-01-01 14:00:00"), "view")); q.processAllAvailable()
+      ms.addData(SeqEvent(99L, 9901L, ts("2024-01-01 15:00:00"), "view")); q.processAllAvailable()
       val streamed = spark.table("seq_test").collect()
         .map(r => r.getAs[Long]("user_id") ->
           ((r.getAs[Long]("n_events"), r.getAs[Long]("n_conversions"),
@@ -482,5 +482,94 @@ class StreamingDemoSpec extends AnyFunSuite with SparkFixture {
           assert(b == 0L && !c, s"post-grid hour $h not drained")
       }
     } finally q.stop()
+  }
+
+  test("sequence matcher folds in events_sequence_match's (t_us, event_id) order") {
+    import graft.streaming.SequenceMatch
+    import graft.streaming.SequenceMatch.SeqEvent
+    implicit val sqlCtx = spark.sqlContext
+    // u4: the purchase comes 100 µs before the second click, inside one
+    // millisecond, and carries the higher event_id — batch path "cpc";
+    // a millisecond fold that breaks ties on event_type reads "ccp".
+    // u5: purchase (id 50) and click (id 51) share one timestamp — the
+    // event_id tiebreak reads "pc" (no conversion), event_type "cp".
+    val evs = Seq(
+      SeqEvent(4L, 40L, ts("2024-01-01 10:00:00"), "click"),
+      SeqEvent(4L, 42L, ts("2024-01-01 10:01:00.0001"), "purchase"),
+      SeqEvent(4L, 41L, ts("2024-01-01 10:01:00.0002"), "click"),
+      SeqEvent(5L, 50L, ts("2024-01-01 10:00:00"), "purchase"),
+      SeqEvent(5L, 51L, ts("2024-01-01 10:00:00"), "click"))
+    val ms = MemoryStream[SeqEvent]
+    val q = SequenceMatch.sequenceMatch(ms.toDS())
+      .writeStream.format("memory").queryName("seq_order_test").outputMode("append").start()
+    try {
+      ms.addData(evs: _*); q.processAllAvailable()
+      ms.addData(SeqEvent(99L, 9900L, ts("2024-01-01 14:00:00"), "view")); q.processAllAvailable()
+      ms.addData(SeqEvent(99L, 9901L, ts("2024-01-01 15:00:00"), "view")); q.processAllAvailable()
+      def summary(rows: Array[org.apache.spark.sql.Row]) = rows
+        .map(r => r.getAs[Long]("user_id") ->
+          ((r.getAs[Long]("n_events"), r.getAs[Long]("n_conversions"),
+            r.getAs[Boolean]("saw_error"), r.getAs[String]("path_head"))))
+        .toMap
+      val streamed = summary(spark.table("seq_order_test").collect())
+      val dir = fixtureDir("events" -> evs.map(e =>
+        EventRow(e.event_id, e.ts, e.user_id, e.event_type, 1.0, "{}")).toDF)
+      val batch = summary(graft.ops.Relational.eventsSequenceMatch(spark, dir).collect())
+      assert(batch(4L)._4 == "cpc" && batch(5L)._4 == "pc", s"batch: $batch")
+      for (uid <- Seq(4L, 5L))
+        assert(streamed.get(uid) == batch.get(uid),
+          s"u$uid stream=${streamed.get(uid)} batch=${batch.get(uid)}")
+    } finally q.stop()
+  }
+
+  test("sessionizer runs at microseconds, as events_sessionize does") {
+    import graft.streaming.Sessionize
+    import graft.streaming.Sessionize.SessEvent
+    implicit val sqlCtx = spark.sqlContext
+    // u1 starts at a sub-millisecond instant; u2's second event comes
+    // 30 min + 500 µs after its first — past the 30-minute gap, though
+    // inside it at millisecond resolution
+    val evs = Seq(
+      SessEvent(1L, ts("2024-01-01 10:00:00.000123")),
+      SessEvent(2L, ts("2024-01-01 10:00:00")),
+      SessEvent(2L, ts("2024-01-01 10:30:00.0005")))
+    val ms = MemoryStream[SessEvent]
+    val q = Sessionize.sessionize(ms.toDS(), gapMinutes = 30)
+      .writeStream.format("memory").queryName("sess_us_test").outputMode("append").start()
+    try {
+      ms.addData(evs: _*); q.processAllAvailable()
+      ms.addData(SessEvent(99L, ts("2024-01-01 12:00:00"))); q.processAllAvailable()
+      ms.addData(SessEvent(99L, ts("2024-01-01 13:00:00"))); q.processAllAvailable()
+      val out = spark.table("sess_us_test").collect()
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_us")))
+      val u1 = out.filter(_._1 == 1L)
+      assert(u1.length == 1 && u1.head._2 % 1000 == 123,
+        s"u1's session must start at the event's µs: ${out.mkString(",")}")
+      assert(out.count(_._1 == 2L) == 2,
+        s"a 30 min + 500 µs gap must split u2's session: ${out.mkString(",")}")
+      // the batch twin cuts the same sessions
+      val dir = fixtureDir("events" -> evs.zipWithIndex.map { case (e, i) =>
+        EventRow(i.toLong, e.ts, e.user_id, "view", 1.0, "{}") }.toDF)
+      val batch = graft.ops.Relational.eventsSessionize(spark, dir).collect()
+        .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("n_sessions")).toMap
+      assert(batch == Map(1L -> 1L, 2L -> 2L), s"batch: $batch")
+    } finally q.stop()
+  }
+
+  test("KeyedFold is the only flatMapGroupsWithState scaffold, bar BacklogState") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"scanned too few sources: ${files.size}")
+    def hits(word: scala.util.matching.Regex) = files
+      .filter(f => word.findFirstIn(Files.readString(f)).isDefined)
+      .map(f => root.relativize(f).toString).sorted
+    // BacklogState re-arms at its oldest pending hour, not last event + gap
+    assert(hits("""\.(?:flatMap|map)GroupsWithState\b""".r) ==
+      Seq("streaming/BacklogState.scala", "streaming/KeyedFold.scala"))
+    assert(hits("getNanos".r) == Seq("streaming/KeyedFold.scala"),
+      "a Timestamp → µs conversion outside KeyedFold.micros")
   }
 }
